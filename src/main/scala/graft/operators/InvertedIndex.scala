@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.IndexWords
+
 /** The reference's whole dataflow (SURVEY §2.1 O1–O14) as one declarative
   * Spark plan. Semantics per reference:
   *
@@ -12,15 +14,20 @@ import org.apache.spark.sql.functions._
   *  - per-file distinct                 (`src/mapper.c:71-97`)
   *  - word → sorted distinct file IDs   (`src/reducer.c:42-105`)
   *
-  * Everything is Catalyst built-ins ⇒ WholeStageCodegen end-to-end, with
-  * map-side partial aggregation playing the role of the reference's
+  * The first three steps are one codegen'd byte-scan kernel,
+  * [[graft.functions.IndexWords]] (`index_words`), exploded into
+  * (word, file_id) rows inside the scan's WholeStageCodegen stage. It is
+  * property-tested equal to `split(\s+)` → [[normalizeToken]] →
+  * non-empty, the regex form that [[normalizeToken]]'s other callers
+  * keep. Map-side partial aggregation plays the role of the reference's
   * hand-rolled per-file dedup (the `collect_set` partial agg dedups
   * before shuffle, so shuffle volume is distinct (word, file_id) pairs,
   * exactly what the reference ships between its stages).
   *
   * Scale posture: one shuffle, hash-partitioned on `word` — the
   * reference's 26-way letter-modulo partitioning is an implementation
-  * accident with Zipfian skew and is NOT reproduced (SURVEY §7.6).
+  * accident with Zipfian skew and is NOT reproduced here (SURVEY §7.6);
+  * only the [[LetterTextSink]] groups by letter, after the aggregate.
   * Posting lists are bounded by corpus file count per word; for corpora
   * where a single word's posting list may outgrow an aggregation buffer
   * [[buildGated]] switches to [[buildSortMerge]] (`repartition(word)
@@ -36,12 +43,11 @@ object InvertedIndex {
   def normalizeToken(c: Column): Column =
     lower(regexp_replace(c, "[^A-Za-z]+", ""))
 
-  /** (file_id, value) lines → (word, file_id) distinct pairs. */
+  /** (file_id, value) lines → (word, file_id) pairs, one per word
+    * occurrence; [[build]]'s partial aggregate makes them distinct.
+    */
   def wordFilePairs(docs: DataFrame): DataFrame =
-    docs
-      .select(explode(split(col("value"), "\\s+")).as("tok"), col("file_id"))
-      .select(normalizeToken(col("tok")).as("word"), col("file_id"))
-      .filter(length(col("word")) > 0)
+    docs.select(explode(IndexWords(col("value"))).as("word"), col("file_id"))
 
   /** (file_id, value) lines → (word, file_ids ARRAY<INT> ascending). */
   def build(docs: DataFrame): DataFrame =
@@ -131,6 +137,5 @@ object InvertedIndex {
 
   /** Formatted output line `word:[1 2 3]` (`src/reducer.c:132-139`). */
   def formattedLine(word: Column, fileIds: Column): Column =
-    format_string("%s:[%s]", word,
-      array_join(transform(fileIds, _.cast("string")), " "))
+    format_string("%s:[%s]", word, array_join(fileIds.cast("array<string>"), " "))
 }

@@ -1,12 +1,12 @@
 package graft.operators
 
-import java.io.{BufferedWriter, OutputStreamWriter}
-import java.nio.charset.StandardCharsets
+import java.io.{BufferedOutputStream, IOException}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.Partitioner
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path, UnsupportedFileSystemException}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** The reference's letter-partitioned text sink (SURVEY §2.1 O15/O16):
@@ -18,26 +18,26 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first design: `DataFrameWriter.partitionBy` gives
   * `letter=a/part-*.txt` directory layout and no empty files, so this is
-  * a small custom sink. We key rows by letter index and use
-  * `repartitionAndSortWithinPartitions` — Spark's spill-safe external
-  * sort — with a 26-way exact partitioner (NOT `repartition(26, col)`:
-  * hash collisions would mix letters). Each task then streams its
-  * already-sorted partition straight to its letter file; nothing is
-  * buffered in memory and nothing is collected on the driver, so the
-  * sink scales with the shuffle, not the driver.
+  * a small custom sink that stays a DataFrame plan up to the write. Rows
+  * go to `p = min(26, spark.sql.shuffle.partitions)` partitions by
+  * `repartitionById(letter mod p)` — an exact placement, where
+  * `repartition(p, col)` would hash letters together unevenly — and
+  * `sortWithinPartitions(letter, n DESC, word)` orders each partition
+  * with Spark's spill-safe external sort. The shuffle carries
+  * UnsafeRows, not serialized JVM objects. Each task then streams its
+  * `InternalRow`s letter after letter (partition `i` owns letters
+  * `i, i+p, …`) straight into their files, writing an empty file for
+  * each of its letters with no rows; nothing is buffered in memory and
+  * nothing is collected on the driver, so the sink scales with the
+  * shuffle, not the driver, and runs at most `p` write tasks.
   *
   * Tasks write through the Hadoop `FileSystem` API, so `outDir` may be
   * a local path (tests, matching the reference CLI), `hdfs://...`, or
-  * any object-store scheme on a real cluster — same code, no driver
-  * involvement beyond the final empty-file touch.
+  * any object-store scheme on a real cluster — same code; the driver
+  * only writes the empty files of a plan that ran no task (AQE prunes
+  * an empty index to zero partitions) and reaps orphaned tmp files.
   */
 object LetterTextSink {
-
-  private final class LetterPartitioner extends Partitioner {
-    override def numPartitions: Int = 26
-    override def getPartition(key: Any): Int =
-      key.asInstanceOf[(Int, Int, String)]._1
-  }
 
   private def fs(dir: String, entries: Map[String, String]): FileSystem = {
     val conf = new Configuration()
@@ -61,68 +61,88 @@ object LetterTextSink {
       .iterator().asScala.map(e => e.getKey -> e.getValue).toMap
   }
 
+  /** Write `letter.txt` in `outDir` through an attempt-unique tmp file:
+    * a speculative/retried attempt must not share a scratch file with a
+    * zombie of the same task.
+    */
+  private def publish(filesystem: FileSystem, outDir: String, letter: Char, attempt: String)(
+      body: BufferedOutputStream => Unit): Unit = {
+    val tmp = new Path(outDir, s".$letter.txt.tmp-$attempt")
+    val out = new BufferedOutputStream(filesystem.create(tmp, true), 1 << 16)
+    try body(out) finally out.close()
+    // publish via FileContext.rename(OVERWRITE): atomic where the
+    // FS implements overwrite-rename natively (HDFS); LocalFs falls
+    // back to delete+rename internally, and schemes with no
+    // AbstractFileSystem binding (s3a/gs) aren't supported by
+    // FileContext at all — fall back to explicit delete+rename for
+    // those rather than failing the write
+    val dst = new Path(outDir, s"$letter.txt")
+    try
+      FileContext.getFileContext(dst.toUri, filesystem.getConf)
+        .rename(tmp, dst, Options.Rename.OVERWRITE)
+    catch {
+      case _: UnsupportedFileSystemException =>
+        filesystem.delete(dst, false)
+        if (!filesystem.rename(tmp, dst))
+          throw new IOException(s"rename failed: $tmp -> $dst")
+    }
+  }
+
   /** index: (word STRING, file_ids ARRAY<INT>) → 26 letter files. */
   def write(index: DataFrame, outDir: String): Unit = {
     val hconf = confEntries(index)
     locally { val f = fs(outDir, hconf); try f.mkdirs(new Path(outDir)) finally f.close() }
 
-    val lines = index.select(
-      col("word"),
-      size(col("file_ids")).as("n"),
-      InvertedIndex.formattedLine(col("word"), col("file_ids")).as("line"))
-
-    // Sort key (letterIdx ASC, -n ASC, word ASC) == the reference's
+    val p = math.min(26, index.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    // Sort key (letter ASC, n DESC, word ASC) == the reference's
     // (#files DESC, word ASC) within each letter file.
-    val keyed = lines.rdd.map { r =>
-      val word = r.getString(0)
-      ((word.charAt(0) - 'a', -r.getInt(1), word), r.getString(2))
-    }
+    val rows = index
+      .select(
+        (ascii(col("word")) - 'a'.toInt).as("letter"),
+        size(col("file_ids")).as("n"),
+        col("word"),
+        InvertedIndex.formattedLine(col("word"), col("file_ids")).as("line"))
+      .repartitionById(p, pmod(col("letter"), lit(p)))
+      .sortWithinPartitions(col("letter"), col("n").desc, col("word"))
+      .select(col("letter"), col("line"))
 
-    keyed
-      .repartitionAndSortWithinPartitions(new LetterPartitioner)
-      .foreachPartition { it: Iterator[((Int, Int, String), String)] =>
-        val tc = org.apache.spark.TaskContext.get()
-        val letter = ('a' + tc.partitionId()).toChar
-        val filesystem = fs(outDir, hconf)
-        try {
-        // attempt-unique tmp name: a speculative/retried attempt must
-        // not share a scratch file with a zombie of the same partition
-        val tmp = new Path(outDir, s".$letter.txt.tmp-${tc.taskAttemptId()}")
-        val w = new BufferedWriter(new OutputStreamWriter(
-          filesystem.create(tmp, true), StandardCharsets.UTF_8))
-        try it.foreach { case (_, line) => w.write(line); w.write('\n') }
-        finally w.close()
-        // publish via FileContext.rename(OVERWRITE): atomic where the
-        // FS implements overwrite-rename natively (HDFS); LocalFs falls
-        // back to delete+rename internally, and schemes with no
-        // AbstractFileSystem binding (s3a/gs) aren't supported by
-        // FileContext at all — fall back to explicit delete+rename for
-        // those rather than failing the write
-        val dst = new Path(outDir, s"$letter.txt")
-        try
-          org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, filesystem.getConf)
-            .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        catch {
-          case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-            filesystem.delete(dst, false)
-            if (!filesystem.rename(tmp, dst))
-              throw new java.io.IOException(s"rename failed: $tmp -> $dst")
+    // toRdd runs the plan's shuffle stages; AQE gives a plan it proved
+    // empty no partitions at all, so no task runs for it
+    val rdd = rows.queryExecution.toRdd
+    val ran = rdd.getNumPartitions
+    rdd.foreachPartition { it: Iterator[InternalRow] =>
+      val tc = TaskContext.get()
+      val filesystem = fs(outDir, hconf)
+      try {
+        // the iterator reuses its row: read each one before advancing
+        var row = if (it.hasNext) it.next() else null
+        (tc.partitionId() until 26 by p).foreach { l =>
+          publish(filesystem, outDir, ('a' + l).toChar, tc.taskAttemptId().toString) { out =>
+            while (row != null && row.getInt(0) == l) {
+              row.getUTF8String(1).writeTo(out)
+              out.write('\n')
+              row = if (it.hasNext) it.next() else null
+            }
+          }
         }
-        } finally filesystem.close()
-      }
+        if (row != null)
+          throw new IllegalArgumentException(
+            s"word not in [a-z]* or misplaced: ${row.getUTF8String(1)}")
+      } finally filesystem.close()
+    }
 
     val filesystem = fs(outDir, hconf)
     try {
+      // O16: spec requires all 26 files even when empty, and an old
+      // file in outDir must not survive. Each task wrote all of its
+      // letters; the letters of partitions that never ran are empty.
+      ('a' to 'z').filter(l => (l - 'a') % p >= ran)
+        .foreach(l => publish(filesystem, outDir, l, "driver")(_ => ()))
       // reap tmp files orphaned by failed/zombie attempts (each attempt
       // writes a unique name, so losers are never overwritten-away)
       ('a' to 'z').foreach { l =>
         filesystem.globStatus(new Path(outDir, s".$l.txt.tmp-*"))
           .foreach(st => filesystem.delete(st.getPath, false))
-      }
-      // O16: spec requires all 26 files even when empty.
-      ('a' to 'z').foreach { l =>
-        val f = new Path(outDir, s"$l.txt")
-        if (!filesystem.exists(f)) filesystem.create(f, false).close()
       }
     } finally filesystem.close()
   }

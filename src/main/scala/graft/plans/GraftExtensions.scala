@@ -1,12 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.functions.ArrayDotProduct
+import graft.functions.{ArrayDotProduct, IndexWords}
 
 /** Optimizer rule: rewrite the composable-but-interpreted dot-product
   * pattern
@@ -76,10 +77,22 @@ object RewriteHofDotProduct extends Rule[LogicalPlan] {
   * `SparkSession.builder().withExtensions(new GraftExtensions)` (done
   * by [[graft.GraftSession]]), or
   * `spark.sql.extensions=graft.plans.GraftExtensions` via config.
+  *
+  * Native expressions injected here are in every session's function
+  * registry from its start, so callers invoke them by name with no
+  * per-call `register(spark)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => RewriteHofDotProduct)
     e.injectOptimizerRule(_ => RewriteAggregateToSummary)
+    e.injectFunction((
+      FunctionIdentifier(IndexWords.Name),
+      new ExpressionInfo(classOf[IndexWords].getName, IndexWords.Name),
+      {
+        case Seq(text) => IndexWords(text)
+        case args => throw new IllegalArgumentException(
+          s"${IndexWords.Name} takes 1 argument, got ${args.size}")
+      }))
   }
 }

@@ -29,14 +29,25 @@ object DocumentCorpus {
 
   /** Read manifest: returns paths in manifest order, resolved relative
     * to the manifest's parent directory (matches the reference, which
-    * resolves relative to CWD = checker dir).
+    * resolves relative to CWD = checker dir). Fails with
+    * `IllegalArgumentException` naming the manifest when the header is
+    * not an integer N ≥ 0 or fewer than N paths follow it — a short
+    * manifest would otherwise index fewer files without a word.
     */
   def readManifest(manifestPath: String): Seq[String] = {
     val p = Paths.get(manifestPath).toAbsolutePath
     val lines = Files.readAllLines(p).asScala.toSeq.map(_.trim).filter(_.nonEmpty)
-    val n = lines.head.toInt
+    val header = lines.headOption.getOrElse(
+      throw new IllegalArgumentException(s"manifest $p is empty: expected a file count N"))
+    val n = header.toIntOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"manifest $p: header '$header' is not a file count N >= 0"))
+    val listed = lines.drop(1)
+    if (listed.size < n)
+      throw new IllegalArgumentException(
+        s"manifest $p: header says $n files but only ${listed.size} paths follow")
     val dir = p.getParent
-    lines.slice(1, 1 + n).map { rel =>
+    listed.take(n).map { rel =>
       val rp = Paths.get(rel)
       (if (rp.isAbsolute) rp else dir.resolve(rp)).normalize.toString
     }

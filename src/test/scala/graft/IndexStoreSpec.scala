@@ -12,7 +12,7 @@ class IndexStoreSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("materialized index lookup prunes to one letter partition") {
-    val docs = DocumentCorpus.documents(spark, "/root/reference/checker/test_small.txt")
+    val docs = DocumentCorpus.documents(spark, Fixtures.smallManifest)
     val path = java.nio.file.Files.createTempDirectory("graft-idx").toString
     IndexStore.materialize(docs, path)
 

@@ -7,12 +7,16 @@ import scala.jdk.CollectionConverters._
 import graft.operators.{InvertedIndex, InvertedIndexJob}
 import graft.sources.DocumentCorpus
 
-/** Golden E2E: byte-compare all 26 letter files against the reference's
-  * own golden outputs (SURVEY §5) — the primary correctness surface.
+/** Golden E2E: byte-compare all 26 letter files against golden outputs
+  * (SURVEY §5) — the primary correctness surface. The 3-file corpus and
+  * its hand-checked goldens live in the test resources (`index_small/`,
+  * the corpus verbatim from FIXTURES.md §A.2); the 355-file corpus is
+  * the reference checker's own.
   */
 class InvertedIndexSpec extends SparkSpec {
 
   private val checker = Paths.get("/root/reference/checker")
+  private val small = Fixtures.smallCorpus
 
   private def goldenCompare(goldenDir: Path, outDir: Path): Unit = {
     ('a' to 'z').foreach { l =>
@@ -25,22 +29,26 @@ class InvertedIndexSpec extends SparkSpec {
     }
   }
 
-  private def runManifest(name: String, golden: String): Unit = {
+  private def runManifest(dir: Path, name: String, golden: String): Unit = {
     val out = Files.createTempDirectory(s"graft-index-$name")
-    InvertedIndexJob.run(spark, checker.resolve(name).toString, out.toString)
-    goldenCompare(checker.resolve(golden), out)
+    InvertedIndexJob.run(spark, dir.resolve(name).toString, out.toString)
+    goldenCompare(dir.resolve(golden), out)
   }
 
   test("small corpus matches golden output incl. empty letter files") {
-    runManifest("test_small.txt", "test_out_small")
+    val out = Files.createTempDirectory("graft-index-small")
+    InvertedIndexJob.run(spark, Fixtures.smallManifest, out.toString)
+    // the hermetic goldens are this sink's exact bytes, not just diff -w
+    ('a' to 'z').foreach { l =>
+      assert(Files.readAllBytes(out.resolve(s"$l.txt")).sameElements(
+        Files.readAllBytes(small.resolve(s"test_out_small/$l.txt"))), s"letter $l bytes")
+    }
     // explicit O16 check: d has no words in the small corpus
-    val out = Files.createTempDirectory("graft-o16")
-    InvertedIndexJob.run(spark, checker.resolve("test_small.txt").toString, out.toString)
     assert(Files.size(out.resolve("d.txt")) == 0)
   }
 
   test("large 355-file corpus matches golden output") {
-    runManifest("test.txt", "test_out")
+    runManifest(checker, "test.txt", "test_out")
   }
 
   test("sort-merge fallback path matches golden output on BOTH corpora") {
@@ -49,8 +57,8 @@ class InvertedIndexSpec extends SparkSpec {
     // two aggregation strategies are row-for-row interchangeable
     spark.conf.set(InvertedIndex.SortMergeFileThresholdKey, "0")
     try {
-      runManifest("test_small.txt", "test_out_small")
-      runManifest("test.txt", "test_out")
+      runManifest(small, "test_small.txt", "test_out_small")
+      runManifest(checker, "test.txt", "test_out")
     } finally spark.conf.unset(InvertedIndex.SortMergeFileThresholdKey)
   }
 
@@ -83,7 +91,7 @@ class InvertedIndexSpec extends SparkSpec {
 
   test("buildGated picks the sort-merge plan above the file threshold " +
     "and the hash plan below it") {
-    val docs = DocumentCorpus.documents(spark, checker.resolve("test_small.txt").toString)
+    val docs = DocumentCorpus.documents(spark, Fixtures.smallManifest)
     def planOf(fileCount: Long): String =
       InvertedIndex.buildGated(docs, fileCount).queryExecution.executedPlan.toString
     assert(planOf(3).contains("collect_set"), "small corpus must use hash agg")
@@ -94,7 +102,7 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("output independent of shuffle partitioning") {
-    val docs = DocumentCorpus.documents(spark, checker.resolve("test_small.txt").toString)
+    val docs = DocumentCorpus.documents(spark, Fixtures.smallManifest)
     val base = InvertedIndex.ordered(InvertedIndex.build(docs)).collect().toSeq
     Seq("1", "7").foreach { p =>
       spark.conf.set("spark.sql.shuffle.partitions", p)
@@ -114,9 +122,27 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("manifest reader resolves relative paths and honors N") {
-    val paths = DocumentCorpus.readManifest(checker.resolve("test_small.txt").toString)
+    val paths = DocumentCorpus.readManifest(Fixtures.smallManifest)
     assert(paths.size == 3)
     assert(paths.forall(p => Files.exists(Paths.get(p))), s"missing: $paths")
     assert(paths.head.endsWith("test_in_small/file1.txt"))
+  }
+
+  private def manifestError(content: String): String = {
+    val m = Files.createTempFile("graft-manifest", ".txt")
+    try {
+      Files.write(m, content.getBytes("UTF-8"))
+      intercept[IllegalArgumentException](DocumentCorpus.readManifest(m.toString)).getMessage
+    } finally Files.delete(m)
+  }
+
+  test("manifest reader rejects a header that is not a file count") {
+    val msg = manifestError("three\na.txt\nb.txt\nc.txt\n")
+    assert(msg.contains("header 'three' is not a file count"), msg)
+  }
+
+  test("manifest reader rejects a manifest with fewer paths than its header") {
+    val msg = manifestError("3\na.txt\nb.txt\n")
+    assert(msg.contains("header says 3 files but only 2 paths follow"), msg)
   }
 }

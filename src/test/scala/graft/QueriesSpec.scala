@@ -69,8 +69,7 @@ class QueriesSpec extends SparkSpec {
   test("typed PostingListAggregator matches collect_set path") {
     import org.apache.spark.sql.functions.udaf
     val posting = udaf(graft.functions.PostingListAggregator)
-    val docs = graft.sources.DocumentCorpus.documents(
-      spark, "/root/reference/checker/test_small.txt")
+    val docs = graft.sources.DocumentCorpus.documents(spark, Fixtures.smallManifest)
     val viaAgg = InvertedIndex.wordFilePairs(docs)
       .groupBy("word").agg(posting(col("file_id")).as("file_ids"))
     val viaBuiltin = InvertedIndex.build(docs)
