@@ -734,7 +734,6 @@ object Probe {
       // 200k ScaleBench corpus, by Lloyd iteration count
       import org.apache.spark.sql.functions.col
       val dir = if (args.length > 2) args(2) else "/tmp/graft-scale/emb100x"
-      graft.functions.VectorFunctions.register(spark)
       val corpus = Tables.load(spark, dir, "embeddings")
         .select(col("vec_id"),
           graft.operators.Similarity.toDouble(col("embedding")).as("emb"))

@@ -385,7 +385,6 @@ object ScaleBench {
     // needs (VERDICT r10 #6): the flat pass grows linearly in C while
     // the two-level pass stays near-flat, and the agreement column
     // shows how often greedy descent lands in the flat argmax cell.
-    graft.functions.VectorFunctions.register(spark)
     val assignJson = {
       val e = Tables.load(spark, emb100xDir, "embeddings")
         .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("emb"))

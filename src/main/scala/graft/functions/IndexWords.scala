@@ -21,8 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * pass over the UTF-8 bytes instead of a regex split plus a regex
   * replace and a `lower` per token:
   *
-  *  - split on Java's `\s` set only: space, `\t`, `\n`, `\x0B`, `\f`,
-  *    `\r` (NOT `0x1C`–`0x1F`, which `Character.isWhitespace` accepts);
+  *  - split on Java's `\s` set only ([[TextKernels.isSpace]]): space,
+  *    `\t`, `\n`, `\x0B`, `\f`, `\r` (NOT `0x1C`–`0x1F`, which
+  *    `Character.isWhitespace` accepts);
   *  - keep ASCII letters, lowercased;
   *  - drop every other byte, which drops every byte of a non-ASCII
   *    character (all are ≥ 0x80 in UTF-8), and drop empty words.
@@ -36,9 +37,7 @@ import org.apache.spark.unsafe.types.UTF8String
 case class IndexWords(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"${IndexWords.Name} requires a string input, got ${child.dataType.simpleString}")
+    TextKernels.requireString(IndexWords.Name, child)
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = IndexWords.Name
@@ -73,7 +72,7 @@ object IndexWords {
       val b = Platform.getByte(base, off + i)
       if (b >= 'a' && b <= 'z') { buf(w) = b; w += 1 }
       else if (b >= 'A' && b <= 'Z') { buf(w) = (b + 32).toByte; w += 1 }
-      else if (b == ' ' || (b >= 9 && b <= 13)) {
+      else if (TextKernels.isSpace(b)) {
         if (w > start) { words.add(UTF8String.fromBytes(buf, start, w - start)); start = w }
       }
       i += 1

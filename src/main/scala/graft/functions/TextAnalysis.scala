@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 /** Text-analysis primitives for a training-data pipeline: token
   * counting, quality signals, language-ID voting, fingerprinting.
   *
-  * Everything here is built from `org.apache.spark.sql.functions`
-  * (codegen'd Catalyst expressions — no UDFs), so the whole column
-  * pipeline stays inside WholeStageCodegen and scales linearly with the
-  * scan; nothing is collected or row-looped.
+  * Everything here is built from `org.apache.spark.sql.functions` and
+  * the engine's own kernels (codegen'd Catalyst expressions — no
+  * UDFs), so the whole column pipeline stays inside WholeStageCodegen
+  * and scales linearly with the scan; nothing is collected or
+  * row-looped.
   */
 object TextAnalysis {
 
@@ -17,8 +18,10 @@ object TextAnalysis {
   def tokens(text: Column): Column =
     filter(split(text, "\\s+"), t => length(t) > 0)
 
-  /** Token count after whitespace split. */
-  def tokenCount(text: Column): Column = size(tokens(text))
+  /** Token count after whitespace split: `size(tokens(text))`, counted
+    * by the `token_count` byte-scan kernel ([[TokenCount]]) without
+    * building the token array. */
+  def tokenCount(text: Column): Column = TokenCount(text)
 
   /** BPE-ish subword count: alpha runs, digit runs, and single
     * non-alnum glyphs each count as one token (the common pre-tokenizer

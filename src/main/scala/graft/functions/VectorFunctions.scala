@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -340,25 +340,12 @@ object NearestCellHier {
   }
 }
 
-/** Column-level API. The expressions are registered in the session
-  * function registry (idempotent) and invoked by name via
+/** Column-level API. The expressions are registered once per session
+  * by [[graft.plans.GraftExtensions]] and invoked by name via
   * `call_function`, which keeps this code independent of the
   * Column-construction internals that changed in Spark 4.
   */
 object VectorFunctions {
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_dot", exprs => ArrayDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cell", exprs => NearestCell(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cell_hier", exprs => NearestCellHier(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "spectral_features", exprs => SpectralFeatures(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dhash56", exprs => DHash56(exprs(0)), "built-in")
-  }
 
   def spectralFeatures(pcm: Column): Column =
     call_function("spectral_features", pcm)

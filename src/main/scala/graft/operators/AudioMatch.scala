@@ -163,7 +163,6 @@ object AudioMatch {
     // single static call inside whole-stage codegen). The first cut
     // composed the DFT from SQL expressions and paid 3.4× across every
     // fingerprint-side audio query on the expression-tree overhead.
-    graft.functions.VectorFunctions.register(rows.sparkSession)
     val energies = graft.functions.VectorFunctions.spectralFeatures(pcm)
     rows.filter(length(pcm) >= 2 * FrameLen)
       .select(col(idName), energies.as("en"))

@@ -34,9 +34,9 @@ object Curation {
     // `split` 5× (token count + one per language score) and a
     // whitespace-collapsing regexp_replace for the fingerprint — all
     // over the same text, and materializing the lowered token array in
-    // its OWN projection (the shingleHashes lesson: no CSE across
-    // lambda boundaries) halves the per-scan cost (probe: 1.25 →
-    // ~0.6 s/scan at sf0.1). Signal equivalences, each exact:
+    // its OWN projection (Catalyst does no CSE across lambda
+    // boundaries, so a lambda over the split re-splits per access)
+    // halves the per-scan cost (probe: 1.25 → ~0.6 s/scan at sf0.1). Signal equivalences, each exact:
     //  - token count: lowercasing never creates/destroys whitespace;
     //  - lang scores: a raw token matches a marker iff its lowering
     //    does — markers are lowercase words;

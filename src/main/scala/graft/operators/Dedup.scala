@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.TextAnalysis
+import graft.functions.{ShingleHashes, SimHash64, TextAnalysis}
 
 /** Deduplication family for a training-data pipeline: exact,
   * fingerprint-canonical, MinHash+LSH, SimHash, n-gram Jaccard, and
@@ -14,9 +14,17 @@ import graft.functions.TextAnalysis
   *  - NOTHING here compares all pairs. Every near-dup variant goes
   *    shingle/band/bucket → candidate pairs → verify, so work is
   *    proportional to colliding pairs, not n².
-  *  - Signatures (minhash/simhash) are computed in ONE aggregation pass
-  *    with k `min`/`sum` expressions — no row explosion by k, and the
-  *    partial aggregate runs map-side before the shuffle on doc_id.
+  *  - Text is tokenized by byte-scan kernels ([[ShingleHashes]],
+  *    [[SimHash64]]): one pass over each document's UTF-8 bytes, no
+  *    token array and no per-token strings.
+  *  - MinHash signatures are ONE aggregation pass with k `min`
+  *    expressions — no row explosion by k, and the partial aggregate
+  *    runs map-side before the shuffle on doc_id. SimHash signatures
+  *    need no aggregation at all: one kernel call per document row.
+  *  - Pair producers have unsorted cores ([[minhashPairs]],
+  *    [[ngramPairs]]); only the public pair lists pay the
+  *    `orderBy(doc_a, doc_b)`. Connected components unions, dedupes
+  *    and collects its input, so the group queries feed it the cores.
   *  - Hot shingles are capped by document frequency before the LSH
   *    band join (standard df-cut) so a boilerplate shingle shared by
   *    millions of docs cannot produce a quadratic bucket.
@@ -72,24 +80,17 @@ object Dedup {
     * signature agg, band join, jaccard verify) then moves 8-byte longs
     * instead of multi-word strings. Collision odds at 2^64 are
     * negligible next to the minhash approximation itself.
+    *
+    * A shingle is `xxhash64(tok_i, …, tok_{i+k-1})` over the
+    * whitespace tokens of `lower(text)` ([[TextAnalysis.tokens]]),
+    * computed by the [[ShingleHashes]] kernel in one byte scan per
+    * document. A doc with fewer than k tokens has no shingles.
     */
-  def shingleHashes(d: DataFrame, k: Int = 3): DataFrame =
-    // tokens are materialized in their own projection BEFORE the
-    // shingle lambda: referencing the split expression inside the
-    // lambda re-tokenizes the whole document per element_at access
-    // (no common-subexpression elimination across lambda boundaries;
-    // measured 11.5s -> 0.9s at sf0.1)
-    d.select(col("doc_id"), TextAnalysis.tokens(lower(col("text"))).as("toks"))
-      // docs with fewer than k tokens have no shingles; without this
-      // guard the element_at below indexes past the array end, which
-      // throws under Spark 4's default ANSI mode
-      .filter(size(col("toks")) >= k)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), size(col("toks")) - k),
-          i => xxhash64((0 until k).map(j => element_at(col("toks"), i + j + 1)): _*))
-        ).as("sh"))
-      .drop("toks")
+  def shingleHashes(d: DataFrame, k: Int = 3): DataFrame = {
+    require(k >= 1, s"shingle width k must be >= 1, got k = $k")
+    d.select(col("doc_id"), explode(ShingleHashes(lower(col("text")), k)).as("sh"))
       .distinct()
+  }
 
   /** Cap shingle document frequency: drop shingles appearing in more
     * than `maxDf` docs (they generate huge LSH buckets and carry no
@@ -143,9 +144,15 @@ object Dedup {
   }
 
   /** Exact Jaccard verification of candidate pairs against the shingle
-    * sets (hashes, not strings, to keep shuffle rows narrow).
+    * sets (hashes, not strings, to keep shuffle rows narrow), ordered
+    * by (doc_a, doc_b).
     */
-  def verifyJaccard(candidates: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
+  def verifyJaccard(candidates: DataFrame, sh: DataFrame, threshold: Double): DataFrame =
+    verifiedPairs(candidates, sh, threshold).orderBy(col("doc_a"), col("doc_b"))
+
+  /** [[verifyJaccard]] without the final sort. */
+  private def verifiedPairs(candidates: DataFrame, sh: DataFrame,
+      threshold: Double): DataFrame = {
     val sets = sh.groupBy(col("doc_id"))
       .agg(collect_set(col("sh")).as("sh_set"),
         count(lit(1)).as("sh_n"))
@@ -163,7 +170,6 @@ object Dedup {
           (col("sa.sh_n") + col("sb.sh_n") - col("inter")).cast("double")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Q-DEDUP (near): MinHash+LSH near-duplicate pairs, Jaccard ≥ 0.5.
@@ -181,10 +187,15 @@ object Dedup {
     * join itself is the dominant term.
     */
   def minhashNearDups(s: SparkSession, dir: String,
+      threshold: Double = 0.5, maxDf: Int = 1000): DataFrame =
+    minhashPairs(s, dir, threshold, maxDf).orderBy(col("doc_a"), col("doc_b"))
+
+  /** [[minhashNearDups]] without the final sort. */
+  private[graft] def minhashPairs(s: SparkSession, dir: String,
       threshold: Double = 0.5, maxDf: Int = 1000): DataFrame = {
     val sh = dfCapped(shingleHashes(docs(s, dir)), maxDf)
     val cands = lshCandidates(minhashSignatures(sh))
-    verifyJaccard(cands, sh, threshold)
+    verifiedPairs(cands, sh, threshold)
   }
 
   /** Jaccard from pair-intersection COUNTS — the [[containmentDups]]
@@ -195,7 +206,7 @@ object Dedup {
     * `array_intersect` replaced by two narrow count aggregates).
     * Bit-identical to [[verifyJaccard]] over the same sh relation:
     * same quotient, same [[graft.functions.Rounding.portableRound4]],
-    * same threshold filter and output ordering.
+    * same threshold filter; unsorted, like [[verifiedPairs]].
     */
   private def jaccardFromCounts(inter: DataFrame, sizes: DataFrame,
       threshold: Double): DataFrame =
@@ -207,7 +218,6 @@ object Dedup {
           (col("na") + col("nb") - col("inter")).cast("double")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
 
   /** n-gram Jaccard dedup without minhash: candidates = pairs sharing
     * ≥1 (df-capped) shingle, then exact Jaccard — the small-corpus /
@@ -219,6 +229,11 @@ object Dedup {
     * collapses into one pair-keyed aggregate.
     */
   def ngramJaccardDups(s: SparkSession, dir: String,
+      threshold: Double = 0.3, maxDf: Int = 50): DataFrame =
+    ngramPairs(s, dir, threshold, maxDf).orderBy(col("doc_a"), col("doc_b"))
+
+  /** [[ngramJaccardDups]] without the final sort. */
+  private[graft] def ngramPairs(s: SparkSession, dir: String,
       threshold: Double = 0.3, maxDf: Int = 50): DataFrame = {
     // NO persist/checkpoint: the shingle subtree repeats in the plan
     // (sizes + both candidate sides), but its tail is the `distinct`
@@ -424,7 +439,10 @@ object Dedup {
     * `inter` and `sh_n` (the old `collect_set`/`array_intersect`
     * verify was duplicate-tolerant, this one is not). Every caller
     * splits by id/splitId, and the arrival-order contract (index ids
-    * precede all batch ids) already implies it. */
+    * precede all batch ids) already implies it.
+    *
+    * Unordered: the streaming path persists the pairs and reads them
+    * back into connected components, which needs no order. */
   private[graft] def batchDedupPairs(batchIds: DataFrame, batchSh: DataFrame,
       indexSh: DataFrame, threshold: Double, maxDf: Int): DataFrame = {
     // count-based verify (r19): the batch-headed candidate join's
@@ -469,22 +487,16 @@ object Dedup {
 
   // ------------------------------------------------------------- SimHash
 
-  /** 64-bit SimHash per doc: per-token xxhash64, each bit votes ±1,
-    * sign of the vote sum becomes the bit. One aggregation with 64 sum
-    * expressions — map-side combinable, no explosion.
+  /** 64-bit SimHash per doc: per-token xxhash64 over the whitespace
+    * tokens of `lower(text)`, each bit votes ±1, sign of the vote sum
+    * becomes the bit. A projection, not an aggregate: `doc_id` is the
+    * documents key, so the [[SimHash64]] kernel's per-row vote equals a
+    * per-`doc_id` vote sum, and no row is exploded or shuffled. A doc
+    * with no token has no signature and no row.
     */
-  def simhashSignatures(d: DataFrame): DataFrame = {
-    val toks = d.select(col("doc_id"),
-      explode(TextAnalysis.tokens(lower(col("text")))).as("tok"))
-      .select(col("doc_id"), xxhash64(col("tok")).as("h"))
-    val votes = (0 until 64).map(i =>
-      sum(when(shiftright(col("h"), i).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"v_$i"))
-    val voted = toks.groupBy(col("doc_id")).agg(votes.head, votes.tail: _*)
-    val sim = (0 until 64).map(i =>
-      when(col(s"v_$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L)))
-      .reduce((a: Column, b: Column) => a.bitwiseOR(b))
-    voted.select(col("doc_id"), sim.as("simhash"))
-  }
+  def simhashSignatures(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), SimHash64(lower(col("text"))).as("simhash"))
+      .filter(col("simhash").isNotNull)
 
   /** SimHash near-dups: pairwise 5-chunk blocking, exact for
     * Hamming ≤ 3 by pigeonhole — with the 64 bits split into 5 chunks
@@ -578,7 +590,6 @@ object Dedup {
     */
   private[graft] def embeddingNearDupsOn(corpus: DataFrame, threshold: Double,
       kmeansIters: Int = 3): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val p = cellPrune(corpus, threshold, kmeansIters)
     verifyCellPairs(p.assigned, p.keep, threshold)
   }
@@ -636,7 +647,6 @@ object Dedup {
 
   def embeddingNearDupsIndexed(s: SparkSession, dir: String,
       threshold: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/embeddings.parquet"))
     // the _GRAFT_DONE marker is written only after BOTH writes land:
     // assigned/_SUCCESS alone can't vouch for keep/, and a partial keep
@@ -1283,7 +1293,7 @@ object Dedup {
     */
   def minhashDupGroups(s: SparkSession, dir: String,
       threshold: Double = 0.5): DataFrame =
-    connectedComponents(minhashNearDups(s, dir, threshold))
+    connectedComponents(minhashPairs(s, dir, threshold))
       .groupBy(col("group_id"))
       .agg(count(lit(1)).as("n_members"), max(col("doc_id")).as("max_doc_id"))
       .orderBy(col("group_id"))
@@ -1302,7 +1312,7 @@ object Dedup {
     */
   def ngramDupGroups(s: SparkSession, dir: String,
       threshold: Double = 0.3): DataFrame =
-    connectedComponents(ngramJaccardDups(s, dir, threshold))
+    connectedComponents(ngramPairs(s, dir, threshold))
       .groupBy(col("group_id"))
       .agg(count(lit(1)).as("n_members"), max(col("doc_id")).as("max_doc_id"))
       .orderBy(col("group_id"))
@@ -1324,9 +1334,9 @@ object Dedup {
     */
   def dupGroupKeepBest(s: SparkSession, dir: String,
       threshold: Double = 0.3): DataFrame = {
-    val labels = connectedComponents(ngramJaccardDups(s, dir, threshold))
+    val labels = connectedComponents(ngramPairs(s, dir, threshold))
     val toks = docs(s, dir).select(col("doc_id"),
-      graft.functions.TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
+      TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
     labels.join(toks, Seq("doc_id"))
       .groupBy(col("group_id"))
       .agg(count(lit(1)).as("n_members"),

@@ -72,7 +72,6 @@ object IvfIndex {
     */
   def knn(s: SparkSession, path: String, queries: DataFrame,
       k: Int = 5, nprobe: Int = 16): DataFrame = {
-    VectorFunctions.register(s)
     // model state memoized per published artifact (fingerprint-keyed
     // path, immutable once done-marked) — repeat queries skip the
     // centroid-collect job. insert()/compact() mutate only assigned/
@@ -203,7 +202,6 @@ object IvfIndex {
     * indexes through the insert/compact lifecycle with it. */
   private[graft] def knnSq8RerankAt(s: SparkSession, path: String,
       q: DataFrame, k: Int, nprobe: Int, rerank: Int): DataFrame = {
-    VectorFunctions.register(s)
     val sq8 = ensureSq8(s, path)
     val cells = Similarity.cellsOfArtifact(s, path)
     // probe ranking on the DRIVER (the annRecall rankedProbes idiom):
@@ -304,7 +302,6 @@ object IvfIndex {
     * (vec_id, emb, label, nrm).
     */
   def insert(s: SparkSession, path: String, delta: DataFrame): Unit = {
-    VectorFunctions.register(s)
     val cells = Similarity.collectCells(s.read.parquet(s"$path/centroids"))
     val assigned = Similarity.assignCells(delta, cells)
     // BOTH appends run under the sidecar lock: a concurrent ensureSq8

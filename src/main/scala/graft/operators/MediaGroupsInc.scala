@@ -380,7 +380,6 @@ object MediaGroupsInc {
     // a crashed generation's replay would re-stage the victim's
     // postings after the takedown
     requireNoInflightGens(path, "deleting")
-    graft.functions.VectorFunctions.register(s)
     val vcol = col("media_id").isin(victims: _*)
     val allWins = s.read.parquet(s"$path/wins")
       .select(col("media_id"), col("win"))
@@ -777,7 +776,6 @@ object MediaGroupsInc {
         "before ingesting")
     require(!pendingDelete(path),
       s"pending delete at $path: run delete to completion before ingesting")
-    graft.functions.VectorFunctions.register(s)
     val gen = genOverride.getOrElse(
       batchDirs(path, "wins").lastOption.map(_ + 1).getOrElse(0))
     val b = batch.select(col("media_id").cast("long").as("media_id"), col("content"))

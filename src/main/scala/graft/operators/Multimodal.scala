@@ -462,7 +462,6 @@ object Multimodal {
   private[graft] def verifiedPairs(s: SparkSession, media: DataFrame,
       cand: DataFrame, nMedia: Long, threshold: Double,
       hvLocal: Boolean = false): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val hv = byteHistVec(s, media)
       .withColumn("n2", graft.functions.VectorFunctions.arrayDot(col("hvec"), col("hvec")))
     val cosu = graft.functions.VectorFunctions.arrayDot(col("va"), col("vb")) /
@@ -514,7 +513,6 @@ object Multimodal {
   }
 
   def mediaNearDups(s: SparkSession, dir: String, threshold: Double = 0.99): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val media = mediaTable(s, dir)
     val cands = Dedup.lshCandidates(Dedup.minhashSignatures(binaryAnchors(media)))
     val f = byteHistogram(s, media)

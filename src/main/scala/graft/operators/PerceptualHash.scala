@@ -41,7 +41,6 @@ object PerceptualHash {
   /** dHash projection of an arbitrary (media_id, content) image set —
     * the per-batch hashing leg of the streaming ingest path. */
   private[graft] def imageHashes(s: SparkSession, images: DataFrame): DataFrame = {
-    VectorFunctions.register(s)
     images.filter(length(col("content")) > 0)
       .select(col("media_id"), VectorFunctions.dhash56(col("content")).as("phash"))
   }
@@ -321,7 +320,6 @@ object PerceptualHash {
     * native dHash kernel: one narrow flatMap + kernel projection, no
     * shuffle. The per-batch hashing leg of the streaming ingest. */
   private[graft] def framesOf(s: SparkSession, videos: DataFrame): DataFrame = {
-    VectorFunctions.register(s)
     framesOfSampled(Multimodal.frameSample(s, videos, VideoFrames))
   }
 
@@ -368,7 +366,6 @@ object PerceptualHash {
 
   /** Hash a (clip_id, j, frame) batch into probe landmarks. */
   private[graft] def clipLandmarks(s: SparkSession, clips: DataFrame): DataFrame = {
-    VectorFunctions.register(s)
     clips.select(col("clip_id"), col("j"),
       VectorFunctions.dhash56(col("frame")).as("fh"))
   }

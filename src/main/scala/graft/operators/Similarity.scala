@@ -57,7 +57,6 @@ object Similarity {
 
   /** embeddings with per-row precomputed norm. */
   private[graft] def emb(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.register(s)
     Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), toDouble(col("embedding")).as("emb"), col("label"))
       .withColumn("nrm", VectorFunctions.l2Norm(col("emb")))

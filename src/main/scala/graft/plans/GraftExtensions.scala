@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.functions.{ArrayDotProduct, IndexWords}
+import graft.functions.{ArrayDotProduct, DHash56, IndexWords, NearestCell, NearestCellHier,
+  ShingleHashes, SimHash64, SpectralFeatures, TokenCount}
 
 /** Optimizer rule: rewrite the composable-but-interpreted dot-product
   * pattern
@@ -80,19 +81,32 @@ object RewriteHofDotProduct extends Rule[LogicalPlan] {
   *
   * Native expressions injected here are in every session's function
   * registry from its start, so callers invoke them by name with no
-  * per-call `register(spark)`.
+  * per-call registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => RewriteHofDotProduct)
     e.injectOptimizerRule(_ => RewriteAggregateToSummary)
-    e.injectFunction((
-      FunctionIdentifier(IndexWords.Name),
-      new ExpressionInfo(classOf[IndexWords].getName, IndexWords.Name),
-      {
-        case Seq(text) => IndexWords(text)
-        case args => throw new IllegalArgumentException(
-          s"${IndexWords.Name} takes 1 argument, got ${args.size}")
-      }))
+    function(e, IndexWords.Name, classOf[IndexWords], 1)(a => IndexWords(a(0)))
+    function(e, TokenCount.Name, classOf[TokenCount], 1)(a => TokenCount(a(0)))
+    function(e, ShingleHashes.Name, classOf[ShingleHashes], 2)(a => ShingleHashes(a(0), a(1)))
+    function(e, SimHash64.Name, classOf[SimHash64], 1)(a => SimHash64(a(0)))
+    function(e, "array_dot", classOf[ArrayDotProduct], 2)(a => ArrayDotProduct(a(0), a(1)))
+    function(e, "nearest_cell", classOf[NearestCell], 3)(a => NearestCell(a(0), a(1), a(2)))
+    function(e, "nearest_cell_hier", classOf[NearestCellHier], 7)(NearestCellHier(_))
+    function(e, "spectral_features", classOf[SpectralFeatures], 1)(a => SpectralFeatures(a(0)))
+    function(e, "dhash56", classOf[DHash56], 1)(a => DHash56(a(0)))
   }
+
+  private def function(e: SparkSessionExtensions, name: String, cls: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression): Unit =
+    e.injectFunction((
+      FunctionIdentifier(name),
+      new ExpressionInfo(cls.getName, name),
+      {
+        case args if args.size == arity => build(args)
+        case args => throw new IllegalArgumentException(
+          s"$name takes $arity argument(s), got ${args.size}")
+      }))
 }

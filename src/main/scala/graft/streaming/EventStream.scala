@@ -947,7 +947,6 @@ object EventStream {
         // staged index frames: one persisted sample serves both, and
         // pins them across each derivation's several actions (clip
         // count + join; postings and keydf stage writes)
-        graft.functions.VectorFunctions.register(s)
         val fs = graft.operators.Multimodal
           .frameSample(s, b, PerceptualHash.VideoFrames).persist()
         try {

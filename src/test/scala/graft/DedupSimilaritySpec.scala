@@ -179,7 +179,6 @@ class DedupSimilaritySpec extends SparkSpec {
       s"keep join not a BroadcastHashJoin on ca_id:\n$plan")
     val gotPairs = got.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute-force reference, test-code-only cartesian
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{arrayDot, l2Norm}
     val e = graft.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("emb"))
@@ -206,7 +205,6 @@ class DedupSimilaritySpec extends SparkSpec {
       val nrm = math.sqrt(c.map(x => x * x).sum)
       (i.toLong, c.map(x => x / nrm + 0.02 * rnd.nextGaussian()).toSeq)
     }
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{arrayDot, l2Norm}
     val corpus = vecs.toDF("vec_id", "emb")
       .withColumn("nrm", l2Norm(col("emb")))
@@ -236,7 +234,6 @@ class DedupSimilaritySpec extends SparkSpec {
     // empty centroid set and a corpus-wide null assignment. Hash-based
     // seeding must keep the operator exact on exactly this corpus.
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{arrayDot, l2Norm}
     val rnd = new scala.util.Random(11)
     val centers = Array.fill(20)(Array.fill(16)(rnd.nextGaussian()))
@@ -298,6 +295,28 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(!plan.contains("windowspecdefinition"), "dedup plan still uses a window")
   }
 
+  test("pair cores feed connected components unsorted; public pair lists stay sorted") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    Seq("minhashPairs" -> Dedup.minhashPairs(spark, sf),
+        "ngramPairs" -> Dedup.ngramPairs(spark, sf)).foreach { case (name, core) =>
+      core.collect() // final adaptive plan
+      val plan = core.queryExecution.executedPlan
+      assert(helper.collect(plan) { case s: SortExec if s.global => s }.isEmpty, s"$name sorts:\n$plan")
+      assert(helper.collect(plan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }.isEmpty, s"$name range-partitions:\n$plan")
+    }
+    Seq(Dedup.minhashNearDups(spark, sf), Dedup.ngramJaccardDups(spark, sf)).foreach { df =>
+      val keys = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(keys.nonEmpty)
+      assert(keys == keys.sorted, "pairs not ordered by (doc_a, doc_b)")
+    }
+  }
+
   test("knnBruteForce: k rows per query, cosine non-increasing by rank") {
     val rows = Similarity.knnBruteForce(spark, sf).collect()
     val byQuery = rows.groupBy(_.getLong(0))
@@ -310,7 +329,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("nearest_cell: codegen result matches a plain-Scala argmax, ties to lowest index") {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.nearestCell
     // deterministic pseudo-random corpus + centroids
     val rnd = new scala.util.Random(42)

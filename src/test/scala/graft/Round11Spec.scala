@@ -14,7 +14,6 @@ class Round11Spec extends SparkSpec {
     "high agreement with flat assignment on a clustered corpus") {
     import graft.operators.Similarity
     import org.apache.spark.sql.functions.{avg, col}
-    graft.functions.VectorFunctions.register(spark)
     // clustered corpus (the regime IVF exists for): 20k vectors, 127
     // planted clusters — same generator as ScaleBench's 10x point
     val dir = java.nio.file.Files.createTempDirectory("graft-hier").toString

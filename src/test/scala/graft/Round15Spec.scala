@@ -328,7 +328,6 @@ class Round15Spec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1).toLong) ->
         refDhash(r.getAs[Array[Byte]](2))).toMap
     import graft.functions.VectorFunctions
-    VectorFunctions.register(spark)
     val got = Multimodal.frameSample(spark, media, PerceptualHash.VideoFrames)
       .select(col("media_id"), col("frame_idx").cast("long"),
         VectorFunctions.dhash56(col("frame"))).collect()
