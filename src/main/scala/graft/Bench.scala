@@ -24,7 +24,8 @@ import org.apache.spark.sql.SparkSession
   *    samples; also written whole to BENCH_EVIDENCE.json in the cwd;
   *  - LAST line (the driver contract, compact — medians only, so it
   *    always survives a tail-capture window): total/queries plus
-  *    `spread_flagged`, `failed`, `contended_start`.
+  *    `spread_flagged`, `failed`, `skipped` (each with its reason),
+  *    `contended_start`.
   * Load evidence: `loadavg_before` is /proc/loadavg (1m/5m/15m)
   * sampled BEFORE the SparkSession exists (a nonzero 1-minute load
   * there means the window was dirty before we did any work),
@@ -255,7 +256,7 @@ object Bench {
   /** One full measurement pass over q0 + every query, with its own
     * load/steal window. */
   private final case class Attempt(
-      results: Seq[(String, Seq[Double])], failed: Seq[String],
+      results: Seq[(String, Seq[Double])], failed: Seq[String], skipped: Seq[String],
       loadBefore: Option[Seq[Double]], loadStarted: Option[Seq[Double]],
       loadAfter: Option[Seq[Double]], stealPct: Option[Double],
       runMetrics: Seq[(String, Seq[RunMetrics])])
@@ -342,6 +343,8 @@ object Bench {
     val runMetrics =
       scala.collection.mutable.ListBuffer.empty[(String, Seq[RunMetrics])]
     val rddCount: () => Int = () => spark.sparkContext.getPersistentRDDs.size
+    // a missing input is reported with its reason, never dropped silently
+    val skipped = scala.collection.mutable.ListBuffer.empty[String]
 
     // apples-to-apples vs BASELINE.md: the reference's own workload
     // (355-file corpus -> 26 letter files), steady-state (session
@@ -366,7 +369,10 @@ object Bench {
           System.err.println(s"[bench] q0_index_corpus failed: ${e.getMessage}")
           Seq.empty
         }
-      } else Seq.empty
+      } else {
+        skipped += s"q0_index_corpus: manifest $manifest absent"
+        Seq.empty
+      }
     }
 
     val battery = {
@@ -396,7 +402,7 @@ object Bench {
       (b1, s1, _) <- cpuJiffies()
       if b1 - b0 + s1 - s0 > 0
     } yield 100.0 * (s1 - s0) / ((b1 - b0) + (s1 - s0)).toDouble
-    Attempt(results, failed.toSeq, loadBefore, loadStarted, loadAfter,
+    Attempt(results, failed.toSeq, skipped.toSeq, loadBefore, loadStarted, loadAfter,
       stealPct, runMetrics.toSeq)
   }
 
@@ -449,8 +455,9 @@ object Bench {
     if (stealContaminated)
       System.err.println(f"[bench] all $attempts attempts steal-contaminated " +
         f"(last ${att.stealPct.get}%.1f%%): publishing with null total")
-    val Attempt(results, failedSeq, loadBefore, loadStarted, loadAfter,
+    val Attempt(results, failedSeq, skipped, loadBefore, loadStarted, loadAfter,
       stealPct, runMetrics) = att
+    skipped.foreach(r => System.err.println(s"[bench] skipped $r"))
     val failed = failedSeq
 
     val medians = results.map { case (k, ts) => k -> median(ts) }
@@ -461,6 +468,7 @@ object Bench {
     val spreadFlagged = results.collect { case (k, ts) if !spreadOk(ts) => k }
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val spreadJson = spreadFlagged.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val skippedJson = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
     val totalJson =
       if (failed.nonEmpty || stealContaminated) "null"
       else f"${medians.map(_._2).sum}%.3f"
@@ -477,7 +485,7 @@ object Bench {
       .map { case (k, ms) => "\"" + k + "\":" + ms.map(_.json)
         .mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    val evidence = s"""{"evidence":"graft-bench","runs":$runsJson,"failed":$failedJson,"spread_flagged":$spreadJson,"loadavg_before":${loadJson(loadBefore)},"loadavg_started":${loadJson(loadStarted)},"loadavg_after":${loadJson(loadAfter)},"cpu_steal_pct":$stealJson,"steal_contaminated":$stealContaminated,$loadGateJson,"attempts":$attempts,"attempts_requested":$minAttemptsRequested,"cores":$cores,"sf":"$sfDir","bench_through":${through.map("\"" + _ + "\"").getOrElse("null")},"run_metrics":$metricsJson}"""
+    val evidence = s"""{"evidence":"graft-bench","runs":$runsJson,"failed":$failedJson,"skipped":$skippedJson,"spread_flagged":$spreadJson,"loadavg_before":${loadJson(loadBefore)},"loadavg_started":${loadJson(loadStarted)},"loadavg_after":${loadJson(loadAfter)},"cpu_steal_pct":$stealJson,"steal_contaminated":$stealContaminated,$loadGateJson,"attempts":$attempts,"attempts_requested":$minAttemptsRequested,"cores":$cores,"sf":"$sfDir","bench_through":${through.map("\"" + _ + "\"").getOrElse("null")},"run_metrics":$metricsJson}"""
     // sidecar survives even if both stdout lines are clipped
     try {
       java.nio.file.Files.write(
@@ -490,7 +498,7 @@ object Bench {
     // the driver contract line: compact and LAST so a stdout-tail
     // capture of any reasonable size keeps it whole (r6 lost the
     // headline to a single oversized line — never again)
-    println(s"""{"metric":"total","value":$totalJson,"unit":"sec","timing":"median_of_runs_after_warmup","queries":$qs,"spread_flagged":$spreadJson,"failed":$failedJson,"contended_start":$contended,"cpu_steal_pct":$stealJson,"steal_contaminated":$stealContaminated,$loadGateJson,"attempts":$attempts,"cores":$cores,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$totalJson,"unit":"sec","timing":"median_of_runs_after_warmup","queries":$qs,"spread_flagged":$spreadJson,"failed":$failedJson,"skipped":$skippedJson,"contended_start":$contended,"cpu_steal_pct":$stealJson,"steal_contaminated":$stealContaminated,$loadGateJson,"attempts":$attempts,"cores":$cores,"sf":"$sfDir"}""")
     spark.stop()
     // a partially-failed bench must not look green to exit-code
     // automation (r8: 13 failed queries rode out under rc 0)

@@ -113,8 +113,9 @@ object ScaleBench {
     def ensureReplicas(dir: String, n: Int): Unit = {
       // ReplicaSynthVer folds the SYNTHESIS recipe into the cache key:
       // a change to [[replicaDocs]] must invalidate cached corpora the
-      // same way a base-corpus change does (the stale-artifact class
-      // PlanVer guards against in Similarity.ensurePlan)
+      // same way a base-corpus change does. A hand-bumped token, not
+      // ArtifactCache.codeFingerprint: GB-scale replicas must survive
+      // engine changes that leave the recipe alone
       val marker = new java.io.File(s"$dir/_REPLICAS-$baseFp-x$n-$ReplicaSynthVer")
       if (!marker.exists()) {
         replicaDocs(spark, base, n).write.mode("overwrite")

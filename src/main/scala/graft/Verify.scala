@@ -43,6 +43,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // which regime the run took: cold (artifacts built) or warm (served)
+    System.err.println(s"[verify] ArtifactCache builds ${operators.ArtifactCache.ensureBuilds.get()}" +
+      s" hits ${operators.ArtifactCache.ensureHits.get()}")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -42,10 +42,6 @@ object CompressionSignal {
       total
     } finally d.end()
   }
-
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_len", args => DeflateLength(args.head), "scala_udf")
 
   def deflateLength(c: Column): Column = call_function("deflate_len", c)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -98,13 +98,6 @@ object PostingCodec {
       prev = abs
     }
     new GenericArrayData(vals.toArray)
-  }
-
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "posting_encode", args => PostingEncode(args.head), "scala_udf")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "posting_decode", args => PostingDecode(args.head), "scala_udf")
   }
 
   def postingEncode(a: Column): Column = call_function("posting_encode", a)

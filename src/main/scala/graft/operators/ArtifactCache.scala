@@ -1,17 +1,27 @@
 package graft.operators
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.security.MessageDigest
+
+import scala.jdk.CollectionConverters._
 
 /** Shared discipline for build-once /tmp artifact caches (summary
-  * tables, near-dup indexes, IVF indexes): content fingerprints,
-  * whole-artifact completion markers, and crash/concurrency-safe
-  * publication.
+  * tables, near-dup indexes, IVF indexes, media indexes, plans): one
+  * key derivation, whole-artifact completion markers, and crash/
+  * concurrency-safe publication.
   *
-  * Three failure modes this closes:
-  *  - STALE: a regenerated source with preserved sizes/mtimes — or a
-  *    32-bit String.hashCode collision across many cached variants —
-  *    serving an index built from different data. The fingerprint is
-  *    a 128-bit MD5 of the (name, length, mtime) listing.
+  * Four failure modes this closes:
+  *  - STALE INPUT: a regenerated source with preserved sizes/mtimes —
+  *    or a 32-bit String.hashCode collision across many cached
+  *    variants — serving an artifact built from different data. The
+  *    [[key]] carries a 128-bit MD5 of the input's (name, length,
+  *    mtime) listing.
+  *  - STALE CODE: an artifact built by an older engine (another
+  *    feature algorithm, grid trainer, window geometry or constant)
+  *    served to the current one. The [[key]] carries
+  *    [[codeFingerprint]], an MD5 over every class file of the engine
+  *    plus the Spark version, so ANY engine change misses the cache;
+  *    no call site keeps a version token to bump.
   *  - PARTIAL: a crash between two artifact writes leaving a dir whose
   *    first write's `_SUCCESS` passes while a sibling is missing.
   *    [[ensure]] writes ONE `_GRAFT_DONE` marker after the whole build.
@@ -32,8 +42,49 @@ private[graft] object ArtifactCache {
     val parts = Option(src.listFiles()).map(_.toSeq).getOrElse(Seq(src))
     val listing = parts.sortBy(_.getName)
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString(";")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    hex(MessageDigest.getInstance("MD5").digest(listing.getBytes("UTF-8")))
+  }
+
+  private def hex(digest: Array[Byte]): String = digest.map("%02x".format(_)).mkString
+
+  /** MD5 over the engine's own code, computed once per JVM: the class
+    * files under the code source of this object (each one's path
+    * relative to that root, then its bytes, in path order) — or the
+    * jar's bytes when the engine runs from a jar — plus
+    * `org.apache.spark.SPARK_VERSION`. It changes whenever any engine
+    * source, constant or the Spark build changes. */
+  lazy val codeFingerprint: String = {
+    val md = MessageDigest.getInstance("MD5")
+    val src = Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    if (Files.isDirectory(src)) {
+      val walk = Files.walk(src)
+      val classes = try walk.iterator().asScala.filter(_.toString.endsWith(".class"))
+        .map(p => src.relativize(p).toString -> p).toVector.sortBy(_._1)
+      finally walk.close()
+      classes.foreach { case (rel, p) =>
+        md.update(rel.getBytes("UTF-8"))
+        md.update(Files.readAllBytes(p))
+      }
+    } else md.update(Files.readAllBytes(src))
+    md.update(org.apache.spark.SPARK_VERSION.getBytes("UTF-8"))
+    hex(md.digest())
+  }
+
+  /** THE cache key of a build-once artifact:
+    * `/tmp/graft-<family>/<dir sanitized>-<fingerprint(dir/input)>-<params>-<code>`.
+    * `params` are the RUNTIME arguments the artifact depends on (k,
+    * thresholds, split ids); compile-time constants need no place in
+    * it, [[codeFingerprint]] covers them. The entry name starts with
+    * the sanitized dir and `-`, so per-input cleanup can match it. */
+  def key(family: String, dir: String, input: String, params: Any*): String =
+    keyFor(codeFingerprint, family, dir, input, params: _*)
+
+  /** [[key]] under an explicit code fingerprint (spec injection). */
+  private[graft] def keyFor(code: String, family: String, dir: String,
+      input: String, params: Any*): String = {
+    val fp = fingerprint(new java.io.File(s"$dir/$input"))
+    (Seq(s"/tmp/graft-$family/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}", fp) ++
+      params.map(_.toString) :+ code).mkString("-")
   }
 
   def isDone(path: String): Boolean = new java.io.File(s"$path/_GRAFT_DONE").exists()

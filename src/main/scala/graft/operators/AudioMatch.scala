@@ -118,13 +118,6 @@ object AudioMatch {
     DftBins == graft.functions.AudioFeature.DftBins,
     "landmark geometry must match the native feature kernel's")
 
-  /** Feature-algorithm version tag for persisted-index cache keys: a
-    * landmark index is a function of the FEATURE as much as of the
-    * corpus, so the key must change when the feature does — r15's
-    * spectral switch silently probed r14 energy-keyed artifacts until
-    * this tag existed. */
-  private val FeatVer = "spec1"
-
   /** round(1024·cos(2πbk/16)) / round(1024·sin(2πbk/16)) for b ∈
     * [1, DftBins], k ∈ [0, FrameLen): ONE table — owned by the native
     * kernel ([[graft.functions.AudioFeature]], which the Spark-side
@@ -337,11 +330,8 @@ object AudioMatch {
     * share one oracle.
     */
   def matchClipsIndexed(s: SparkSession, dir: String): DataFrame = {
-    val fp = ArtifactCache.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
     val path = ArtifactCache.ensure(
-      s"/tmp/graft-audioidx/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-        s"-$fp-$FeatVer-w$FrameLen-df$MaxKeyDf-dt$MaxDt-b$KeyBuckets") { tmp =>
+      ArtifactCache.key("audioidx", dir, "documents.parquet")) { tmp =>
       val idx = landmarks(audio(s, dir), col("pcm"), "media_id", "f")
         .withColumnRenamed("media_id", "track_id")
       val keep = idx.groupBy(col("key")).agg(count(lit(1)).as("kdf"))
@@ -612,11 +602,8 @@ object AudioMatch {
     * semantics are spec-pinned separately.
     */
   def matchClipsIncremental(s: SparkSession, dir: String): DataFrame = {
-    val fp = ArtifactCache.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
     val path = ArtifactCache.ensure(
-      s"/tmp/graft-audioincr/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-        s"-$fp-$FeatVer-w$FrameLen-df$MaxKeyDf-dt$MaxDt-b$KeyBuckets") { tmp =>
+      ArtifactCache.key("audioincr", dir, "documents.parquet")) { tmp =>
       val tracks = audio(s, dir)
         .select(col("media_id").as("track_id"), col("pcm"))
       buildIncremental(s, tracks.filter(col("track_id") % 2 === 0), tmp)
@@ -646,12 +633,8 @@ object AudioMatch {
     * matches some surviving track or nothing). Build-once artifact;
     * repeat calls probe the persisted post-takedown index. */
   def matchClipsTakedown(s: SparkSession, dir: String): DataFrame = {
-    val fp = ArtifactCache.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
     val path = ArtifactCache.ensure(
-      s"/tmp/graft-audiodel/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-        s"-$fp-$FeatVer-w$FrameLen-df$MaxKeyDf-dt$MaxDt-b$KeyBuckets" +
-        s"-v$TakedownMod.$TakedownRem") { tmp =>
+      ArtifactCache.key("audiodel", dir, "documents.parquet")) { tmp =>
       val tracks = audio(s, dir)
         .select(col("media_id").as("track_id"), col("pcm"))
       buildIncremental(s, tracks.filter(col("track_id") % 2 === 0), tmp)

@@ -198,8 +198,16 @@ object Dedup {
     verifiedPairs(cands, sh, threshold)
   }
 
-  /** Jaccard from pair-intersection COUNTS — the [[containmentDups]]
-    * shape shared by every pipeline whose candidate generation IS the
+  /** Per-pair intersection counts `(doc_a, doc_b, inter)` joined to
+    * both sides' shingle-set sizes `na`, `nb` (from `sizes`: doc_id,
+    * sh_n) — the input of every count-based pair score. */
+  private def withSetSizes(inter: DataFrame, sizes: DataFrame): DataFrame =
+    inter
+      .join(sizes.select(col("doc_id").as("doc_a"), col("sh_n").as("na")), Seq("doc_a"))
+      .join(sizes.select(col("doc_id").as("doc_b"), col("sh_n").as("nb")), Seq("doc_b"))
+
+  /** Jaccard from pair-intersection COUNTS ([[withSetSizes]] rows) —
+    * shared by every pipeline whose candidate generation IS the
     * shingle equi-join: shingle rows are distinct per doc, so the
     * candidate join's per-pair group count equals |A ∩ B| exactly and
     * no shingle SET ever materializes (`collect_set` +
@@ -208,11 +216,8 @@ object Dedup {
     * same quotient, same [[graft.functions.Rounding.portableRound4]],
     * same threshold filter; unsorted, like [[verifiedPairs]].
     */
-  private def jaccardFromCounts(inter: DataFrame, sizes: DataFrame,
-      threshold: Double): DataFrame =
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sh_n").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sh_n").as("nb")), Seq("doc_b"))
+  private def jaccardFromCounts(counted: DataFrame, threshold: Double): DataFrame =
+    counted
       .withColumn("jaccard",
         graft.functions.Rounding.portableRound4(col("inter").cast("double") /
           (col("na") + col("nb") - col("inter")).cast("double")))
@@ -234,7 +239,14 @@ object Dedup {
 
   /** [[ngramJaccardDups]] without the final sort. */
   private[graft] def ngramPairs(s: SparkSession, dir: String,
-      threshold: Double = 0.3, maxDf: Int = 50): DataFrame = {
+      threshold: Double = 0.3, maxDf: Int = 50): DataFrame =
+    jaccardFromCounts(ngramOverlaps(s, dir, maxDf), threshold)
+
+  /** Pairs sharing ≥ 1 df-capped 2-gram shingle, with their
+    * intersection counts and set sizes ([[withSetSizes]] rows): the
+    * candidate core of [[ngramPairs]] and [[containmentDups]], which
+    * differ only in the score they compute from the counts. */
+  private def ngramOverlaps(s: SparkSession, dir: String, maxDf: Int): DataFrame = {
     // NO persist/checkpoint: the shingle subtree repeats in the plan
     // (sizes + both candidate sides), but its tail is the `distinct`
     // Exchange, and ReuseExchange collapses the identical subtrees to
@@ -247,7 +259,7 @@ object Dedup {
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("inter"))
-    jaccardFromCounts(inter, sizes, threshold)
+    withSetSizes(inter, sizes)
   }
 
   /** Containment (overlap-coefficient) dedup: pairs where the SMALLER
@@ -266,17 +278,8 @@ object Dedup {
     * two narrow count aggregates and a pair-keyed join.
     */
   def containmentDups(s: SparkSession, dir: String,
-      threshold: Double = 0.5, maxDf: Int = 50): DataFrame = {
-    val sh = dfCapped(shingleHashes(docs(s, dir), k = 2), maxDf)
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sh_n"))
-    val a = sh.as("a"); val b = sh.as("b")
-    val inter = a.join(b,
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sh_n").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sh_n").as("nb")), Seq("doc_b"))
+      threshold: Double = 0.5, maxDf: Int = 50): DataFrame =
+    ngramOverlaps(s, dir, maxDf)
       .withColumn("overlap", graft.functions.Rounding.portableRound4(
         col("inter").cast("double") / least(col("na"), col("nb")).cast("double")))
       .filter(col("overlap") >= threshold)
@@ -284,7 +287,6 @@ object Dedup {
         when(col("na") <= col("nb"), col("doc_a")).otherwise(col("doc_b")))
       .select(col("doc_a"), col("doc_b"), col("contained_doc"), col("overlap"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** Incremental (delta-vs-corpus) near-dedup: dedup an ARRIVING batch
     * against an already-deduped corpus without re-deduping the corpus —
@@ -314,16 +316,13 @@ object Dedup {
     */
   def incrementalNgramDedup(s: SparkSession, dir: String, splitId: Long = 400L,
       threshold: Double = 0.3, maxDf: Int = 50): DataFrame = {
-    val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/documents.parquet"))
     // the store lives in the DELETABLE bucketed layout (see
     // [[buildShingleStore]]) since r18 — one layout for the whole
     // lifecycle family instead of a flat production store next to a
     // deletable variant; answers are layout-invariant (the probe
-    // selects (doc_id, sh) explicitly) and the cache key carries the
-    // layout version so pre-migration flat artifacts can't be served
+    // selects (doc_id, sh) explicitly)
     val idxPath = ArtifactCache.ensure(
-      s"/tmp/graft-increm-dedup/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-        s"-$fp-s$splitId-b$ShingleStoreBuckets") { tmp =>
+      ArtifactCache.key("increm-dedup", dir, "documents.parquet", splitId)) { tmp =>
       buildShingleStore(s, docs(s, dir).filter(col("doc_id") < splitId), tmp)
     }
     val pBatch = shingleHashes(docs(s, dir).filter(col("doc_id") >= splitId), k = 2)
@@ -402,11 +401,8 @@ object Dedup {
   def incrementalNgramDedupTakedown(s: SparkSession, dir: String,
       splitId: Long = 400L, threshold: Double = 0.3,
       maxDf: Int = 50): DataFrame = {
-    val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/documents.parquet"))
     val idxPath = ArtifactCache.ensure(
-      s"/tmp/graft-increm-dedup-del/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-        s"-$fp-s$splitId-b$ShingleStoreBuckets" +
-        s"-v$ShingleTakedownMod.$ShingleTakedownRem") { tmp =>
+      ArtifactCache.key("increm-dedup-del", dir, "documents.parquet", splitId)) { tmp =>
       val existing = docs(s, dir).filter(col("doc_id") < splitId)
       buildShingleStore(s, existing, tmp)
       // a takedown list is bounded by contract — this is the caller
@@ -460,7 +456,7 @@ object Dedup {
         col("a.sh") === col("b.sh") && col("b.doc_id") < col("a.doc_id"))
       .groupBy(col("b.doc_id").as("doc_a"), col("a.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("inter"))
-    jaccardFromCounts(inter, sizes, threshold)
+    jaccardFromCounts(withSetSizes(inter, sizes), threshold)
   }
 
   /** The decision core shared by [[incrementalNgramDedup]] and the
@@ -632,28 +628,13 @@ object Dedup {
     * exact cosine — centroid quality affects candidate volume (cost),
     * never the result. Asserted in DedupSimilaritySpec.
     */
-  /** Grid-training version token for the persisted near-dup index key:
-    * the index is a function of the TRAINING code as much as of the
-    * corpus (the [[AudioMatch]] FeatVer / [[Multimodal]] GateStatsVer
-    * discipline), and the key didn't carry one — so the r19
-    * coverage-reseeding/driver-grid rewrite silently kept serving a
-    * pre-coverage 44-cell grid whose keep list was ALL 44² cell pairs
-    * (zero pruning; measured r20: q_dedup_embedding_indexed 2.0 s vs
-    * 0.85 s for the ad-hoc query that trains the CURRENT grid on the
-    * same corpus). Any grid is result-identical (triangle bound +
-    * exact verify); the token only stops a stale grid from taxing
-    * every query. */
-  private val NearDupGridVer = "g2"
-
   def embeddingNearDupsIndexed(s: SparkSession, dir: String,
       threshold: Double): DataFrame = {
-    val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/embeddings.parquet"))
     // the _GRAFT_DONE marker is written only after BOTH writes land:
     // assigned/_SUCCESS alone can't vouch for keep/, and a partial keep
     // read would silently drop surviving cell pairs (recall loss)
     val path = ArtifactCache.ensure(
-      s"/tmp/graft-neardup/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-        s"-$fp-t${math.round(threshold * 1000)}-$NearDupGridVer") { tmp =>
+      ArtifactCache.key("neardup", dir, "embeddings.parquet", threshold)) { tmp =>
       val p = cellPrune(Similarity.emb(s, dir), threshold)
       p.assigned.write.mode("overwrite").parquet(s"$tmp/assigned")
       p.keep.write.mode("overwrite").parquet(s"$tmp/keep")
@@ -974,22 +955,9 @@ object Dedup {
     pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
       .as[(Long, Long)]
       .mapPartitions { it =>
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x0: Long): Long = {
-          var x = x0
-          parent.getOrElseUpdate(x, x)
-          while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-          x
-        }
-        it.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        // snapshot keys before the final find sweep (path-halving
-        // mutates values; iterating the live map while writing it is
-        // undefined) — roots emit no edge (self-loops add nothing)
-        val ks = parent.keys.toArray
-        ks.iterator.map(n => (n, find(n))).filter(t => t._1 != t._2)
+        val uf = new UnionFind
+        it.foreach { case (a, b) => uf.union(a, b) }
+        uf.roots.filter(t => t._1 != t._2) // roots emit no edge (self-loops add nothing)
       }.toDF("doc_a", "doc_b")
   }
 
@@ -1256,32 +1224,39 @@ object Dedup {
         coalesce(col("label"), col("node")).as("group_id"))
   }
 
-  /** Driver-side union-find over a collected (symmetric) edge list:
-    * parent[max-root] = min-root with path compression, so every
-    * node's final root is its component's MINIMUM id — exactly the
-    * fixpoint min-label propagation converges to.
-    */
-  private def driverUnionFind(s: SparkSession, sym: DataFrame): DataFrame =
-    driverUnionFindEdges(s, sym.collect().map(r => (r.getLong(0), r.getLong(1))))
+  /** Union-find over Long ids: parent[max-root] = min-root with path
+    * halving, so every node's final root is its component's MINIMUM
+    * id — exactly the fixpoint min-label propagation converges to.
+    * Iterative find — no recursion depth to blow on a long
+    * pre-compression chain. */
+  private final class UnionFind {
+    private val parent = scala.collection.mutable.Map[Long, Long]()
 
-  private def driverUnionFindEdges(s: SparkSession,
-      edges: Array[(Long, Long)]): DataFrame = {
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    // iterative find with path halving — no recursion depth to blow on
-    // a long pre-compression chain
     def find(x0: Long): Long = {
       var x = x0
       parent.getOrElseUpdate(x, x)
       while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
-    edges.foreach { case (a, b) =>
+
+    def union(a: Long, b: Long): Unit = {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
+
+    /** (node, root) for every node seen. Keys are snapshotted before
+      * the find sweep: path halving mutates values, and iterating the
+      * live map while writing it is undefined. */
+    def roots: Iterator[(Long, Long)] = parent.keys.toArray.iterator.map(n => (n, find(n)))
+  }
+
+  /** Driver-side union-find over a collected (symmetric) edge list. */
+  private def driverUnionFindEdges(s: SparkSession,
+      edges: Array[(Long, Long)]): DataFrame = {
+    val uf = new UnionFind
+    edges.foreach { case (a, b) => uf.union(a, b) }
     import s.implicits._
-    parent.keys.toSeq.sorted.map(n => (n, find(n)))
-      .toDF("doc_id", "group_id")
+    uf.roots.toSeq.sortBy(_._1).toDF("doc_id", "group_id")
   }
 
   /** Near-dup GROUPS from pairwise minhash output: connected
@@ -1293,7 +1268,12 @@ object Dedup {
     */
   def minhashDupGroups(s: SparkSession, dir: String,
       threshold: Double = 0.5): DataFrame =
-    connectedComponents(minhashPairs(s, dir, threshold))
+    dupGroups(minhashPairs(s, dir, threshold))
+
+  /** One row per connected component of `pairs`: (group_id,
+    * n_members, max_doc_id), ordered by group_id. */
+  private def dupGroups(pairs: DataFrame): DataFrame =
+    connectedComponents(pairs)
       .groupBy(col("group_id"))
       .agg(count(lit(1)).as("n_members"), max(col("doc_id")).as("max_doc_id"))
       .orderBy(col("group_id"))
@@ -1312,10 +1292,7 @@ object Dedup {
     */
   def ngramDupGroups(s: SparkSession, dir: String,
       threshold: Double = 0.3): DataFrame =
-    connectedComponents(ngramPairs(s, dir, threshold))
-      .groupBy(col("group_id"))
-      .agg(count(lit(1)).as("n_members"), max(col("doc_id")).as("max_doc_id"))
-      .orderBy(col("group_id"))
+    dupGroups(ngramPairs(s, dir, threshold))
 
   /** Quality-ranked representative selection over near-dup groups —
     * the keep/drop policy layer a curation pass actually ships:

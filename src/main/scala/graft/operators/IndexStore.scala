@@ -71,7 +71,6 @@ object IndexStore {
     * frequency queries never decode.
     */
   def materializeCompressed(docs: DataFrame, path: String): Unit = {
-    graft.functions.PostingCodec.register(docs.sparkSession)
     InvertedIndex.build(docs)
       .withColumn("letter", substring(col("word"), 1, 1))
       .select(col("word"),
@@ -88,7 +87,6 @@ object IndexStore {
     * partition, decode ONLY the matching row's postings.
     */
   def lookupCompressed(spark: SparkSession, path: String, word: String): DataFrame = {
-    graft.functions.PostingCodec.register(spark)
     spark.read.parquet(path)
       .filter(col("letter") === word.substring(0, 1) && col("word") === word)
       .select(col("word"),

@@ -477,9 +477,8 @@ object IvfIndex {
     */
   def ensureIndex(s: SparkSession, dir: String, kmeansIters: Int = 1,
       maxCells: Int = 4096): String = {
-    val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/embeddings.parquet"))
     ArtifactCache.ensure(
-      s"/tmp/graft-ivf/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}-$fp-i$kmeansIters") {
+      ArtifactCache.key("ivf", dir, "embeddings.parquet", kmeansIters, maxCells)) {
       tmp => build(s, dir, tmp, kmeansIters, maxCells)
     }
   }

@@ -57,8 +57,6 @@ import org.apache.spark.sql.functions._
   */
 object MediaGroupsInc {
 
-  private val Ver = "v1"
-
   /** Which closure path the last [[delete]] took — "scoped" (victim-
     * scoped re-closure; unaffected components kept verbatim) or "cold"
     * (full-relation fallback). Observable so the scale property —
@@ -390,17 +388,11 @@ object MediaGroupsInc {
       .select(col("media_id"), col("win"), col("batch"), col("wb"))
       .filter(vcol).persist()
     val vwins = vwinsP.select(col("media_id"), col("win"))
-    def tdbg[T](tag: String)(body: => T): T = {
-      val t0 = System.nanoTime(); val r = body
-      if (sys.env.contains("GRAFT_TD_DEBUG"))
-        System.err.println(f"TDDBG $tag ${(System.nanoTime()-t0)/1e9}%.2f s")
-      r
-    }
     val staged = try {
       // negative df partials for exactly the victim postings
       ArtifactCache.deleteRecursively(new java.io.File(s"$path/windf/.del-tmp"))
-      tdbg("windf_partials")(vwins.groupBy(col("win")).agg((-count(lit(1))).as("cnt"))
-        .write.mode("overwrite").parquet(s"$path/windf/.del-tmp"))
+      vwins.groupBy(col("win")).agg((-count(lit(1))).as("cnt"))
+        .write.mode("overwrite").parquet(s"$path/windf/.del-tmp")
       // un-crossed windows: over-cap before, within [2, maxDf] after —
       // dfs evaluated only for the victims' own windows (semi-joined
       // partials, never the full corpus statistic)
@@ -442,7 +434,7 @@ object MediaGroupsInc {
       // full pair-store join DAG twice (the wins staging below and
       // phase B use the same files-probe pattern)
       ArtifactCache.deleteRecursively(new java.io.File(s"$path/removed/.del-tmp"))
-      tdbg("removed_stage")(newRemoved.write.mode("overwrite").parquet(s"$path/removed/.del-tmp"))
+      newRemoved.write.mode("overwrite").parquet(s"$path/removed/.del-tmp")
       val keepRemoved = ArtifactCache.hasVisibleParquet(
         new java.io.File(s"$path/removed/.del-tmp"))
       // fresh pairs: suppressed the whole time their window sat over
@@ -460,7 +452,7 @@ object MediaGroupsInc {
         memberPairs.join(pairsNarrow, Seq("doc_a", "doc_b"), "left_anti")
       val hv = s.read.parquet(s"$path/hv")
         .select(col("media_id"), col("hvec"), col("n2"))
-      val nMedia = tdbg("hv_count")(hv.count())
+      val nMedia = hv.count()
       def side(df: DataFrame) =
         if (nMedia <= Multimodal.BroadcastMediaBudget) broadcast(df) else df
       val cosu = graft.functions.VectorFunctions.arrayDot(col("va"), col("vb")) /
@@ -473,7 +465,7 @@ object MediaGroupsInc {
         .filter(cosu >= threshold)
         .select(col("doc_a"), col("doc_b"))
       ArtifactCache.deleteRecursively(new java.io.File(s"$path/pairs/.del-tmp"))
-      tdbg("fresh_stage")(fresh.write.mode("overwrite").parquet(s"$path/pairs/.del-tmp"))
+      fresh.write.mode("overwrite").parquet(s"$path/pairs/.del-tmp")
       // seed endpoints for phase B's VICTIM-SCOPED re-closure: the
       // endpoints of every ADDED pair (resurrected or fresh). Added
       // pairs are the only way a component NOT containing a victim can
@@ -490,10 +482,10 @@ object MediaGroupsInc {
         else pairsAll.limit(0)
       val added = resurrect.select(col("doc_a"), col("doc_b")).union(freshBack)
       ArtifactCache.deleteRecursively(new java.io.File(s"$path/.del-seeds"))
-      tdbg("seeds_stage")(added.select(col("doc_a").as("doc_id"))
+      added.select(col("doc_a").as("doc_id"))
         .union(added.select(col("doc_b").as("doc_id")))
         .distinct()
-        .write.mode("overwrite").parquet(s"$path/.del-seeds"))
+        .write.mode("overwrite").parquet(s"$path/.del-seeds")
       memberPairs.unpersist()
       resurrect.unpersist()
       // stage the wins rewrite too: survivors of every victim-touched
@@ -511,15 +503,15 @@ object MediaGroupsInc {
       val postings = s.read.parquet(s"$path/wins")
       def partKey = concat_ws("/",
         col("batch").cast("string"), col("wb").cast("string"))
-      val touchedPks = tdbg("touched_collect")(vwinsP
+      val touchedPks = vwinsP
         .select(partKey.as("pk")).distinct()
-        .collect().map(_.getString(0)).sorted)
+        .collect().map(_.getString(0)).sorted
       val stagedWinsDir = new java.io.File(s"$path/wins/.del-tmp")
       ArtifactCache.deleteRecursively(stagedWinsDir)
       if (touchedPks.nonEmpty)
-        tdbg("wins_stage")(postings.filter(partKey.isin(touchedPks.toIndexedSeq: _*)).filter(!vcol)
+        postings.filter(partKey.isin(touchedPks.toIndexedSeq: _*)).filter(!vcol)
           .write.mode("overwrite").partitionBy("batch", "wb")
-          .parquet(stagedWinsDir.getPath))
+          .parquet(stagedWinsDir.getPath)
       // which touched leaves produced survivor files (the rest emptied
       // out entirely) — recorded in the marker so a phase-B re-run can
       // tell "leaf already adopted by a crashed run" from "leaf
@@ -553,12 +545,6 @@ object MediaGroupsInc {
     * a half-applied tree). */
   private[graft] def deletePhaseB(s: SparkSession, path: String,
       driverEdgeCap: Long): Unit = {
-    def tdbg[T](tag: String)(body: => T): T = {
-      val t0 = System.nanoTime(); val r = body
-      if (sys.env.contains("GRAFT_TD_DEBUG"))
-        System.err.println(f"TDDBG B:$tag ${(System.nanoTime()-t0)/1e9}%.2f s")
-      r
-    }
     val marker = new java.io.File(s"$path/.delete-commit")
     val lines = new String(
       java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").split("\n")
@@ -625,7 +611,6 @@ object MediaGroupsInc {
       }
       ArtifactCache.deleteRecursively(stagedWins)
     }
-    tdbg("leafmoves_done")(())
     // 2. adopt staged artifacts (part names carry job UUIDs — moves
     // are collision-free across repeated deletes)
     def adopt(stageDir: String, liveDir: String): Unit = {
@@ -710,14 +695,14 @@ object MediaGroupsInc {
       // and a sort-merge fallback here would shuffle-exchange the FULL
       // live pair store — O(pair store) per delete, exactly the term
       // the scoped closure exists to avoid
-      val nAffected = tdbg("affected_count")(affectedNodes.count())
+      val nAffected = affectedNodes.count()
       val affectedA = affectedNodes.withColumnRenamed("doc_id", "doc_a")
       val sub = live.join(
         if (nAffected <= Multimodal.BroadcastMediaBudget) broadcast(affectedA)
         else affectedA,
         Seq("doc_a"), "left_semi")
-      val forest = tdbg("forest")(Dedup.contractedForest(sub))
-      val subLabels = tdbg("subcc")(Dedup.connectedComponents(forest, driverEdgeCap = driverEdgeCap))
+      val forest = Dedup.contractedForest(sub)
+      val subLabels = Dedup.connectedComponents(forest, driverEdgeCap = driverEdgeCap)
       // stage the stitched labels, then swap atomically: the previous
       // generation stays readable until the new one fully exists, so a
       // crash anywhere re-runs this step (post-swap prev = the already-
@@ -726,10 +711,10 @@ object MediaGroupsInc {
       // takes the cold fallback below
       val tmpLabels = new java.io.File(s"$path/labels/.del-labels-tmp")
       ArtifactCache.deleteRecursively(tmpLabels)
-      tdbg("stitch_write")(prev.join(affectedGroups, Seq("group_id"), "left_anti")
+      prev.join(affectedGroups, Seq("group_id"), "left_anti")
         .select(col("doc_id"), col("group_id"))
         .union(subLabels.select(col("doc_id"), col("group_id")))
-        .write.mode("overwrite").parquet(tmpLabels.getPath))
+        .write.mode("overwrite").parquet(tmpLabels.getPath)
       forest.unpersist()
       affectedNodes.unpersist()
       ArtifactCache.deleteRecursively(genDir)
@@ -957,10 +942,8 @@ object MediaGroupsInc {
     * persisted labels — the amortization IS the operator's point. */
   def mediaDupGroupsIncremental(s: SparkSession, dir: String,
       splitId: Long = 400L): DataFrame = {
-    val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/documents.parquet"))
     val path = ArtifactCache.ensure(
-      s"/tmp/graft-mediagroups-inc/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-        s"-$fp-s$splitId-$Ver") { tmp =>
+      ArtifactCache.key("mediagroups-inc", dir, "documents.parquet", splitId)) { tmp =>
       val media = Multimodal.mediaTable(s, dir)
         .select(col("media_id"), col("content"))
       ingest(s, tmp, media.filter(col("media_id") < splitId))
@@ -980,10 +963,8 @@ object MediaGroupsInc {
     * repeat queries read the persisted post-delete labels. */
   def mediaDupGroupsTakedown(s: SparkSession, dir: String,
       splitId: Long = 400L): DataFrame = {
-    val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/documents.parquet"))
     val path = ArtifactCache.ensure(
-      s"/tmp/graft-mediagroups-del/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-        s"-$fp-s$splitId-$Ver") { tmp =>
+      ArtifactCache.key("mediagroups-del", dir, "documents.parquet", splitId)) { tmp =>
       val media = Multimodal.mediaTable(s, dir)
         .select(col("media_id"), col("content"))
       ingest(s, tmp, media.filter(col("media_id") < splitId))

@@ -84,19 +84,9 @@ object Multimodal {
   private val gateStats =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
 
-  /** Version token for the persisted gate stats: the measurement bakes
-    * in the window geometry (16-byte windows at stride 4) and the
-    * df ≥ 2 "kept" threshold, so the cache key must carry them — a
-    * later change to any of these constants must MISS the cache, not
-    * silently serve a stale measurement and flip the gate decision
-    * (the ImageVer/FrameVer discipline). */
-  private val GateStatsVer = "w16s4k2v1"
-
   private def gateMeasurement(s: SparkSession, dir: String,
       wins: DataFrame): (Long, Long) = {
-    val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/documents.parquet"))
-    val key = s"/tmp/graft-mediagate/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-      s"-$fp-$GateStatsVer"
+    val key = ArtifactCache.key("mediagate", dir, "documents.parquet")
     // plain get / putIfAbsent, NOT computeIfAbsent: the miss path runs
     // a full Spark aggregation (~seconds), which must not execute while
     // holding a ConcurrentHashMap bin lock. A racing duplicate compute

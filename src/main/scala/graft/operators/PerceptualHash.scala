@@ -103,8 +103,6 @@ object PerceptualHash {
     * where the ad-hoc blocking joins on (cid, cv). ≤ 65536 values. */
   private def ck: Column = (col("cid") * (1 << ChunkBits) + col("cv")).as("key")
 
-  private val ImageVer = "dh56v1"
-
   /** Chunk-posting relation of an (media_id, phash) image set: one row
     * per (image, chunk), keyed and bucket-partitioned. */
   private def imagePostings(images: DataFrame): DataFrame =
@@ -271,11 +269,8 @@ object PerceptualHash {
     * query-time cap over summed partials = the one-shot chunk-df
     * semantics exactly. */
   def imageNearDupsIndexed(s: SparkSession, dir: String): DataFrame = {
-    val fp = ArtifactCache.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
     val path = ArtifactCache.ensure(
-      s"/tmp/graft-imageidx/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-        s"-$fp-$ImageVer-c$Chunks-df$MaxChunkDf") { tmp =>
+      ArtifactCache.key("imageidx", dir, "documents.parquet")) { tmp =>
       val h = imagePhash(s, dir)
       buildImageIndex(s, h.filter(col("media_id") % 2 === 0), tmp)
       insertImages(s, tmp, h.filter(col("media_id") % 2 === 1))
@@ -461,10 +456,6 @@ object PerceptualHash {
     * [[AudioMatch.KeyBuckets]] rationale). */
   val FrameKeyBuckets = 64
 
-  /** Hash-algorithm version tag for index cache keys (the audio
-    * FeatVer discipline: an index is a function of the feature). */
-  private val FrameVer = "dh56v1"
-
   private def postings(frames: DataFrame): DataFrame =
     frames.select(col("video_id"), col("f"), col("fh").as("key"))
       .withColumn("kb", pmod(col("key"), lit(FrameKeyBuckets)))
@@ -571,11 +562,8 @@ object PerceptualHash {
     * inside one [[ArtifactCache.ensure]]) for idempotent repeats; the
     * rebuild-equivalence and DPP plan contracts are spec-pinned. */
   def videoMatchesIndexed(s: SparkSession, dir: String): DataFrame = {
-    val fp = ArtifactCache.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
     val path = ArtifactCache.ensure(
-      s"/tmp/graft-videoidx/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-        s"-$fp-$FrameVer-n$VideoFrames-df$MaxFrameDf-b$FrameKeyBuckets") { tmp =>
+      ArtifactCache.key("videoidx", dir, "documents.parquet")) { tmp =>
       val frames = videoFrames(s, dir)
       buildVideoIndex(s, frames.filter(col("video_id") % 2 === 0), tmp)
       insertVideoFrames(s, tmp, frames.filter(col("video_id") % 2 === 1))

@@ -890,9 +890,8 @@ object Similarity {
 
   private[graft] def bruteGroundTruth(s: SparkSession, dir: String,
       k: Int): Seq[(Long, Long)] = {
-    val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/embeddings.parquet"))
     val path = ArtifactCache.ensure(
-      s"/tmp/graft-brute/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}-$fp-k$k") { tmp =>
+      ArtifactCache.key("brute", dir, "embeddings.parquet", k)) { tmp =>
       knnBruteForce(s, dir, k)
         .select(col("query_id"), col("neighbor_id"))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/pairs")
@@ -1032,32 +1031,22 @@ object Similarity {
     * [[knnRouted]] calls on one corpus must not increment it. */
   private[graft] val planTunings = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Plan-format/algorithm version, folded into every persisted-plan
-    * cache key (and thereby the in-JVM memo key): a measured plan is a
-    * function of the ROUTER AND INDEX IMPLEMENTATIONS as much as of
-    * the corpus — the repo's FrameVer/ImageVer discipline. Bump on any
-    * change to [[recommendPlan]], the IVF search, or the plan.csv
-    * format, or a stale plan measured under the old implementation
-    * silently keeps serving. */
-  private val PlanVer = "plan1"
-
   /** The routing decision as a build-once artifact. [[recommendPlan]]
     * re-collects brute ground truth, the nprobe grid AND a full SQ8
     * query run — a per-(corpus, k, target) property, not per-query
     * work — so the chosen plan persists under the [[ArtifactCache]]
-    * discipline keyed by the embeddings fingerprint and every
-    * parameter the measurement depends on (incl. [[PlanVer]]), with an
-    * in-JVM memo on top. A new corpus generation (fingerprint change)
-    * re-tunes; repeat queries read five numbers. */
+    * discipline keyed by the embeddings fingerprint, every parameter
+    * the measurement depends on and the engine's code, with an in-JVM
+    * memo (keyed by the same path) on top. A new corpus generation or
+    * engine build re-tunes; repeat queries read five numbers. */
   def ensurePlan(s: SparkSession, dir: String, k: Int = 5,
       targetRecall: Double = 0.9, defaultWidth: Int = 16,
       rerank: Int = 50): SearchPlan = {
-    val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/embeddings.parquet"))
-    val key = s"${dir.replaceAll("[^A-Za-z0-9.]+", "_")}-$fp-k$k" +
-      s"-t$targetRecall-w$defaultWidth-r$rerank-$PlanVer"
+    val key = ArtifactCache.key("ivfplan", dir, "embeddings.parquet",
+      k, targetRecall, defaultWidth, rerank)
     val memo = planCache.get(key)
     if (memo != null) return memo
-    val path = ArtifactCache.ensure(s"/tmp/graft-ivfplan/$key") { tmp =>
+    val path = ArtifactCache.ensure(key) { tmp =>
       planTunings.incrementAndGet()
       val p = recommendPlan(s, dir, k, targetRecall, defaultWidth, rerank)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))

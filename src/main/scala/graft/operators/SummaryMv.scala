@@ -175,13 +175,10 @@ object SummaryMv {
     * merge-order ulps.
     */
   def ensureLineitemSummary(s: SparkSession, dir: String): String = {
-    // cache key includes a 128-bit fingerprint of the fact file's part
-    // listing, so regenerated testdata (or a 32-bit hash collision
-    // across cached variants) can never be served a stale summary from
-    // a previous generation's /tmp cache
-    val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/lineitem.parquet"))
-    val path = ArtifactCache.ensure(
-      s"/tmp/graft-mv/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}-$fp/lineitem_rf_ls") {
+    // keyed by the fact file's fingerprint and the engine's code, so
+    // regenerated testdata can never be served a stale summary from a
+    // previous generation's /tmp cache
+    val path = ArtifactCache.ensure(ArtifactCache.key("mv", dir, "lineitem.parquet")) {
       tmp => build(Tables.load(s, dir, "lineitem"),
         Seq("l_returnflag", "l_linestatus"), Seq("l_quantity"), tmp)
     }

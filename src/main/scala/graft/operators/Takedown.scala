@@ -265,16 +265,16 @@ object Takedown {
     * component — so the DuckDB oracle can restate every count with
     * literal `read_parquet` globs over the SAME staged files (an
     * independent reader checking the audit's physical claims);
-    * staleness is handled by an inner fingerprint marker instead of
-    * the usual fingerprint-keyed cache dir. */
+    * staleness is handled by an inner `_AUDIT-<input fp>-<code fp>`
+    * marker instead of the usual [[ArtifactCache.key]] dir. */
   def erasureAuditRoot(dir: String): String =
-    s"/tmp/graft-erasure-audit/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}-v1"
+    s"/tmp/graft-erasure-audit/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}"
 
   def erasureAudit(s: SparkSession, dir: String): DataFrame = {
     val root = erasureAuditRoot(dir)
     val fp = ArtifactCache.fingerprint(
       new java.io.File(s"$dir/documents.parquet"))
-    val marker = new java.io.File(s"$root/_AUDIT-$fp")
+    val marker = new java.io.File(s"$root/_AUDIT-$fp-${ArtifactCache.codeFingerprint}")
     if (!marker.exists()) {
       ArtifactCache.deleteRecursively(new java.io.File(root))
       new java.io.File(root).mkdirs()

@@ -64,11 +64,8 @@ object TextQueries {
     * pushed into the document source. Build-once artifact; repeat
     * calls read the persisted post-delete index. */
   def docIndexTakedown(s: SparkSession, dir: String): DataFrame = {
-    val fp = ArtifactCache.fingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
     val path = ArtifactCache.ensure(
-      s"/tmp/graft-docidx-del/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}" +
-        s"-$fp-v$TakedownMod.$TakedownRem") { tmp =>
+      ArtifactCache.key("docidx-del", dir, "documents.parquet")) { tmp =>
       val lines = docs(s, dir)
         .select(col("doc_id").cast("int").as("file_id"), col("text").as("value"))
       IndexStore.materialize(lines, s"$tmp/index")
@@ -567,7 +564,6 @@ object TextQueries {
     * a 26-row letter rollup.
     */
   def postingCompression(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.PostingCodec.register(s)
     import graft.functions.PostingCodec.{postingDecode, postingEncode}
     val postings = wordDocPairs(docs(s, dir))
       .groupBy(col("word"))
@@ -600,7 +596,6 @@ object TextQueries {
     * signals.
     */
   def compressRatio(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CompressionSignal.register(s)
     docs(s, dir)
       .select(col("doc_id"),
         octet_length(col("text")).cast("long").as("n_bytes"),

@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.functions.{ArrayDotProduct, DHash56, IndexWords, NearestCell, NearestCellHier,
-  ShingleHashes, SimHash64, SpectralFeatures, TokenCount}
+import graft.functions.{ArrayDotProduct, DHash56, DeflateLength, IndexWords, NearestCell,
+  NearestCellHier, PostingDecode, PostingEncode, ShingleHashes, SimHash64, SpectralFeatures,
+  TokenCount}
 
 /** Optimizer rule: rewrite the composable-but-interpreted dot-product
   * pattern
@@ -97,6 +98,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     function(e, "nearest_cell_hier", classOf[NearestCellHier], 7)(NearestCellHier(_))
     function(e, "spectral_features", classOf[SpectralFeatures], 1)(a => SpectralFeatures(a(0)))
     function(e, "dhash56", classOf[DHash56], 1)(a => DHash56(a(0)))
+    function(e, "deflate_len", classOf[DeflateLength], 1)(a => DeflateLength(a(0)))
+    function(e, "posting_encode", classOf[PostingEncode], 1)(a => PostingEncode(a(0)))
+    function(e, "posting_decode", classOf[PostingDecode], 1)(a => PostingDecode(a(0)))
   }
 
   private def function(e: SparkSessionExtensions, name: String, cls: Class[_], arity: Int)(

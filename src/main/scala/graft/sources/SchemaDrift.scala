@@ -64,9 +64,7 @@ object SchemaDrift {
     * discipline). Returns the artifact path holding `v1/` and `v2/`.
     */
   def driftedCorpus(s: SparkSession, dir: String): String = {
-    val fp = ArtifactCache.fingerprint(new java.io.File(s"$dir/orders.parquet"))
-    ArtifactCache.ensure(
-      s"/tmp/graft-drift/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}-$fp-v2") { tmp =>
+    ArtifactCache.ensure(ArtifactCache.key("drift", dir, "orders.parquet")) { tmp =>
       buildDriftedCorpus(s, dir, tmp)
     }
   }

@@ -16,7 +16,6 @@ class CompressionSignalSpec extends SparkSpec {
 
   test("repetitive text compresses far below shuffled-random; ratio in range") {
     import spark.implicits._
-    graft.functions.CompressionSignal.register(spark)
     val rnd = new scala.util.Random(7)
     val words = Vector("alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
       "golf", "hotel", "india", "juliet", "kilo", "lima")
@@ -34,7 +33,6 @@ class CompressionSignalSpec extends SparkSpec {
 
   test("non-ASCII text stays in range: denominator is UTF-8 bytes, not chars") {
     import spark.implicits._
-    graft.functions.CompressionSignal.register(spark)
     // CJK ~3 bytes/char: a char-count denominator would push high-entropy
     // CJK ratios to ~3x and out of the (0, 1.1] band the signal documents.
     val rnd = new scala.util.Random(11)

@@ -81,7 +81,6 @@ class IndexStoreSpec extends SparkSpec {
     val comp = java.nio.file.Files.createTempDirectory("graft-idx-comp").toString
     IndexStore.materialize(docs, plain)
     IndexStore.materializeCompressed(docs, comp)
-    graft.functions.PostingCodec.register(spark)
     // full-index equivalence, not just a point lookup: decode every row
     val p = IndexStore.load(spark, plain).select(col("word"), col("file_ids"))
     val c = spark.read.parquet(comp).select(col("word"),
