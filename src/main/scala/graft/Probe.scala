@@ -4,7 +4,6 @@ package graft
 object Probe {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(appName = "graft-probe")
-    val manifest = "/root/reference/checker/test.txt"
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[probe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
@@ -770,38 +769,7 @@ object Probe {
       }
       spark.stop(); return
     }
-    if (args.headOption.contains("scaling")) {
-      // core-scaling curve: run with SPARK_GRAFT_CPUS=1|4|32; full-corpus
-      // warm-up then 3 timed runs, median reported. The last output dir
-      // is left in place for an external golden diff per width.
-      val cores = GraftSession.defaultCores
-      graft.operators.InvertedIndexJob.run(spark, manifest, s"/tmp/scaling-warm-$cores")
-      val times = (1 to 3).map { i =>
-        val t0 = System.nanoTime()
-        graft.operators.InvertedIndexJob.run(spark, manifest, s"/tmp/scaling-$cores-$i")
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[scaling] cores=$cores median=${times.sorted.apply(1)}%.2f s all=${times.map(t => f"$t%.2f").mkString(",")}")
-      spark.stop(); return
-    }
-    // warm-up on small corpus (same as bench)
-    graft.operators.InvertedIndexJob.run(spark,
-      "/root/reference/checker/test_small.txt", "/tmp/probe-warm")
-    (1 to 3).foreach { i =>
-      time(s"full run $i") {
-        graft.operators.InvertedIndexJob.run(spark, manifest, s"/tmp/probe-$i")
-      }
-    }
-    // stage decomposition
-    val docs = graft.sources.DocumentCorpus.documents(spark, manifest)
-    time("docs count")(docs.count())
-    val pairs = graft.operators.InvertedIndex.wordFilePairs(docs)
-    time("pairs count")(pairs.count())
-    val idx = graft.operators.InvertedIndex.build(docs)
-    time("index noop")(idx.write.format("noop").mode("overwrite").save())
-    time("sink only") {
-      graft.operators.LetterTextSink.write(idx, "/tmp/probe-sink")
-    }
     spark.stop()
+    sys.error(s"unknown Probe mode: ${args.headOption.getOrElse("(none)")}")
   }
 }

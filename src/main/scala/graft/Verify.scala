@@ -43,9 +43,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // which regime the run took: cold (artifacts built) or warm (served)
+    // which regime the run took: cold (artifacts built) or warm (served),
     System.err.println(s"[verify] ArtifactCache builds ${operators.ArtifactCache.ensureBuilds.get()}" +
       s" hits ${operators.ArtifactCache.ensureHits.get()}")
+    // and which side of each driver cutover it took
+    System.err.println(s"[verify] DriverCutover ${operators.DriverCutover.summary}")
     spark.stop()
   }
 }

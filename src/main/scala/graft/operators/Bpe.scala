@@ -138,20 +138,15 @@ object Bpe {
     (learned.toSeq, words)
   }
 
-  /** Dictionary-size gate for the DRIVER train loop — the
-    * [[Dedup.connectedComponents]] `driverEdgeCap` cutover applied to
-    * BPE: below the cap the (word, cnt) dictionary collects once and
-    * the k merge rounds run as plain Scala (bit-identical counts,
-    * argmax tie-break and greedy rewrite — asserted against the
-    * distributed loop in BpeSpec), replacing 2 scheduled jobs PER
-    * ROUND (argmax collect + persist materialization; ~0.3 s fixed
-    * cost each in local mode) with zero. Above the cap the
-    * distributed loop is unchanged — a web-scale vocabulary keeps the
-    * executor-side iteration, exactly like CC past its edge cap. 2²⁰
-    * words × ~20 B ≈ 20 MB driver state, the same order as the
-    * broadcast the encode tail already builds from the SAME relation.
-    */
-  private val DriverVocabCap = 1 << 20
+  /** [[DriverCutover]] cap of the DRIVER train loop, in dictionary
+    * words: below it the (word, cnt) dictionary collects once and the k
+    * merge rounds run as plain Scala (bit-identical counts, argmax
+    * tie-break and greedy rewrite — asserted against the distributed
+    * loop in Round19OptSpec), replacing 2 scheduled jobs PER ROUND
+    * (argmax collect + persist materialization) with zero. 2²⁰ words ×
+    * ~20 B ≈ 20 MB driver state, the same order as the broadcast the
+    * encode tail already builds from the SAME relation. */
+  private val DriverVocabCap = 1L << 20
 
   /** UTF-8 binary order — what Spark's UTF8String orderBy and DuckDB's
     * varchar ORDER BY both compare. Java String.compareTo (UTF-16 code
@@ -247,22 +242,18 @@ object Bpe {
   }
 
   /** Learned merges for a (word, cnt) dictionary: driver loop below
-    * [[DriverVocabCap]] words, the distributed [[trainLoop]] above it.
-    * The cap probe is a `limit(cap+1).collect()` — one job either way,
-    * never an unbounded collect. */
+    * [[DriverVocabCap]] words, the distributed [[trainLoop]] above it. */
   private def learnedMerges(counts: DataFrame,
-      merges: Int): Seq[(Int, String, String, String, Long)] = {
-    val rows = counts.select(col("word"), col("cnt"))
-      .limit(DriverVocabCap + 1).collect()
-    if (rows.length <= DriverVocabCap)
-      trainMergesDriver(
+      merges: Int): Seq[(Int, String, String, String, Long)] =
+    DriverCutover.collect("Bpe.learnedMerges", counts.select(col("word"), col("cnt")),
+        DriverVocabCap) match {
+      case Some(rows) => trainMergesDriver(
         rows.map(r => (charSymsDriver(r.getString(0)), r.getLong(1))), merges)
-    else {
-      val (learned, words) = trainLoop(withSyms(counts), merges)
-      words.unpersist()
-      learned
+      case None =>
+        val (learned, words) = trainLoop(withSyms(counts), merges)
+        words.unpersist()
+        learned
     }
-  }
 
   /** The learned merge table: (step, lhs, rhs, merged, pair_count),
     * one row per round, ordered by step. Stops early if the symbol

@@ -643,24 +643,23 @@ object Dedup {
       s.read.parquet(s"$path/assigned"), s.read.parquet(s"$path/keep"), threshold)
   }
 
-  /** Row count at/below which [[cellPrune]] trains its grid on the
-    * DRIVER — the connected-components/BPE/pagerank size-gated cutover
-    * applied to the near-dup index build: the centroid training is a
-    * chain of ~8 SEQUENTIAL driver actions (seed collect, Lloyd
-    * collect per iteration, per-round coverage collects, the radius
-    * aggregate), each a fixed-cost scheduled job over a corpus the
-    * driver could hold outright (2⁰⁴ rows × 64 dims ≈ 34 MB). Below
-    * the cap everything up to the verify join runs as plain Scala and
-    * the ASSIGNMENT ITSELF is emitted as a local relation, so the
-    * radii provably cover exactly the assignment the verify uses (no
-    * cross-engine FP coupling anywhere). EXACTNESS never depends on
-    * this path: the triangle bound holds for any centroid set, and the
-    * verify is exact cosine — the driver grid only changes candidate
-    * volume. The gate probe is a one-column count, never a collect.
-    * Conf-overridable; 0 disables (specs can pin the distributed
-    * plan). */
-  private[graft] val CellPruneDriverRowCapKey = "graft.cellprune.driverRowCap"
-  private val CellPruneDriverRowCapDefault = 1L << 16
+  /** [[DriverCutover]] cap of [[cellPrune]], in embedding rows: below
+    * it the grid trains on the DRIVER. The centroid training is a chain
+    * of ~8 sequential driver actions (seed collect, Lloyd collect per
+    * iteration, per-round coverage collects, the radius aggregate) over
+    * a corpus the driver could hold outright (2¹⁶ rows × 64 dims ≈
+    * 34 MB). Below the cap everything up to the verify join runs as
+    * plain Scala and the ASSIGNMENT ITSELF is emitted as a local
+    * relation, so the radii provably cover exactly the assignment the
+    * verify uses (no cross-engine FP coupling anywhere). EXACTNESS
+    * never depends on this path: the triangle bound holds for any
+    * centroid set, and the verify is exact cosine — the driver grid
+    * only changes candidate volume. */
+  private val CellPruneDriverRows = 1L << 16
+
+  /** The conf key that lowers the [[cellPrune]] cap: an alias of
+    * [[DriverCutover.MaxRowsKey]], kept for callers that read it. */
+  private[graft] val CellPruneDriverRowCapKey = DriverCutover.MaxRowsKey
 
   /** Driver replica of seeds → Lloyd → coverage reseeding → radii →
     * triangle-pruned cell pairs ([[Similarity.cellSeeds]] /
@@ -800,20 +799,15 @@ object Dedup {
     // dropping them up front keeps NaN out of the radius aggregates,
     // where one poisoned max would silently prune live cell pairs
     val e = corpus.filter(col("nrm") > 0)
-    // driver cutover (see [[CellPruneDriverRowCapKey]]); the gate
-    // counts the UNFILTERED corpus — Catalyst prunes every computed
-    // column out of a bare count, so this is an empty-ReadSchema scan
-    // (footer row counts), where counting `e` evaluated the embedding
-    // projection and norms corpus-wide before deciding — the exact
-    // wasted-probe cost the pageRank cutover measured and rejected
-    // (r20, ADVICE). corpus rows ≥ e rows, so under-cap stays correct;
+    // the cutover bound counts the UNFILTERED corpus — Catalyst prunes
+    // every computed column out of a bare count, so this is an
+    // empty-ReadSchema scan (footer row counts), where counting `e`
+    // evaluated the embedding projection and norms corpus-wide before
+    // deciding (r20). corpus rows ≥ e rows, so under-cap stays correct;
     // an over-cap corpus whose zero-norm rows would have squeezed `e`
-    // under the cap now takes the distributed path — cost-only, the
-    // paths are result-identical by construction (spec-asserted).
+    // under the cap takes the distributed path — cost-only.
     val s = corpus.sparkSession
-    val rowCap = s.conf.getOption(CellPruneDriverRowCapKey).map(_.toLong)
-      .getOrElse(CellPruneDriverRowCapDefault)
-    if (rowCap > 0 && corpus.count() <= rowCap) {
+    if (DriverCutover.fits("Dedup.cellPrune", s, CellPruneDriverRows)(corpus.count())) {
       val rows = e.select(col("vec_id").cast("long"), col("emb"), col("nrm"))
         .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
       return driverCellPrune(s, rows, threshold, rounds = kmeansIters)
@@ -908,9 +902,8 @@ object Dedup {
     *    against the previous round. The driver sees one Long per
     *    round, never data.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-      driverEdgeCap: Long = 1L << 20): DataFrame =
-    ccImpl(pairs, None, maxIter, driverEdgeCap)
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    ccImpl(pairs, None, maxIter)
 
   /** WARM-STARTED connected components: labels seed from a previous
     * run's (doc_id, group_id) output instead of each node's own id —
@@ -932,8 +925,8 @@ object Dedup {
     * there — one collect beats any round count).
     */
   def connectedComponentsWarm(pairs: DataFrame, seed: DataFrame,
-      maxIter: Int = 20, driverEdgeCap: Long = 1L << 20): DataFrame =
-    ccImpl(pairs, Some(seed), maxIter, driverEdgeCap)
+      maxIter: Int = 20): DataFrame =
+    ccImpl(pairs, Some(seed), maxIter)
 
   /** Per-partition spanning forest over a (doc_a, doc_b) pair stream:
     * union-find within each partition, emitting one (node, local_root)
@@ -1053,8 +1046,12 @@ object Dedup {
         symEdges >= ReliableCutEdgesDefault
     }
 
+  /** [[DriverCutover]] cap of connected components, in directed
+    * (symmetrized) edges: ≤ ~32 MB of driver pairs. */
+  private val CcDriverEdges = 1L << 20
+
   private def ccImpl(pairs: DataFrame, seed: Option[DataFrame],
-      maxIter: Int, driverEdgeCap: Long): DataFrame = {
+      maxIter: Int): DataFrame = {
     val sess = pairs.sparkSession
     sess.sparkContext.setLocalProperty(CcRoundsProperty, null)
     // normalize ids to long up front: the driver path reads rows with
@@ -1063,30 +1060,16 @@ object Dedup {
     val e = pairs.select(
       col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst"))
     val symPlan = e.union(e.select(col("dst"), col("src"))).distinct()
-    // Size-gated cutover, same philosophy as a broadcast-join
-    // threshold: the verified dup-pair graph is orders smaller than
-    // the corpus, and below the cap a driver union-find replaces
-    // O(diameter) distributed rounds (each a join + agg + checkpoint +
-    // scan, ~0.3 s of fixed scheduling cost apiece) with one collect
-    // of ≤ cap edges (≤ ~32 MB). Labels are identical by construction
-    // — both compute the minimum node id per component — and the
-    // propagation path below remains the beyond-cap plan; equality of
-    // the two paths is spec-asserted.
-    //
-    // The gate IS the collect (r20, guide §1.2): a bounded
-    // limit(cap+1) collect replaces the old persist + count + collect
-    // chain — one action instead of a materializing count plus a cache
-    // read, and no cache write for the (common) under-cap graph. An
-    // over-cap graph pays one bounded partial probe before the
-    // distributed path persists and re-executes — the inverse of the
-    // pageRank limit-probe rejection, where the graph EXCEEDED its cap
-    // at every scale of interest; dup-pair graphs sit far under it.
-    val capInt = math.min(driverEdgeCap, (Int.MaxValue - 1).toLong).toInt
-    val symRows = symPlan.limit(capInt + 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (symRows.length <= capInt) {
-      sess.sparkContext.setLocalProperty(CcRoundsProperty, "0")
-      return driverUnionFindEdges(sess, symRows)
+    // driver cutover: below the cap a driver union-find replaces
+    // O(diameter) distributed rounds; both compute the minimum node id
+    // per component. The gate IS the collect (r20): dup-pair graphs sit
+    // far under the cap, so an over-cap graph's bounded probe is rare —
+    // the inverse of pageRank, whose graphs exceed their cap.
+    DriverCutover.collect("Dedup.connectedComponents", symPlan, CcDriverEdges) match {
+      case Some(rows) =>
+        sess.sparkContext.setLocalProperty(CcRoundsProperty, "0")
+        return driverUnionFindEdges(sess, rows.map(r => (r.getLong(0), r.getLong(1))))
+      case None =>
     }
     val sym = symPlan
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -60,14 +60,10 @@ object EntityResolution {
     * only multiplies fan-side traffic. */
   private val Salt = 8
 
-  /** Matched-candidate row cap for the driver name dictionary: above
-    * it [[fuzzyParts]] keeps the distributed string-keyed shape
-    * instead of collecting (the [[graft.operators.Bpe]] limit-probe
-    * idiom — every other r19 driver cutover is capped, and this
-    * collect is at least matched-vocabulary-sized). Conf-overridable;
-    * ~2M rows ≈ low hundreds of MB of driver strings. */
-  private[graft] val DictCandCapKey = "graft.entity.dictCandCap"
-  private val DictCandCapDefault = 1 << 21
+  /** [[DriverCutover]] cap of the [[fuzzyParts]] name dictionary, in
+    * matched candidate rows: ~2M rows ≈ low hundreds of MB of driver
+    * strings. */
+  private val DictCandRows = 1L << 21
 
   /** Matched pairs with their edit distance (`maxDist` default 2:
     * one typo + one substitution). Deterministic pair orientation
@@ -131,19 +127,17 @@ object EntityResolution {
     // Every name has a self pair in cand (dist 0, same block, len band
     // 0), so nmb's big∧cnt≥2 rows are exactly the big self pairs here.
     //
-    // SIZE GATE (r20): the collect is bounded by limit(cap+1) — the
-    // Bpe.learnedMerges probe idiom, no extra job — and past the cap
-    // the query falls back to the r18 distributed string-keyed shape
-    // (row-identical output; the dictionary is a cost move only), so a
-    // corpus whose matched vocabulary outgrows driver memory degrades
-    // to a distributed plan instead of an OOM. Conf-overridable.
-    val cap = s.conf.getOption(DictCandCapKey).map(_.toInt)
-      .getOrElse(DictCandCapDefault)
+    // The collect is the driver cutover: past the cap the query falls
+    // back to the r18 distributed string-keyed shape (row-identical
+    // output; the dictionary is a cost move only), so a corpus whose
+    // matched vocabulary outgrows driver memory degrades to a
+    // distributed plan instead of an OOM.
     val candSel = cand.select(col("x.name"), col("y.name"), col("dist"),
       col("x.big"), col("x.cnt"), col("x.k1"), col("x.k2"), col("y.k1"))
-    val candRows = candSel.limit(cap + 1).collect()
-    if (candRows.length > cap)
-      return fuzzyPartsDistributed(parts, nmb, cand)
+    val candRows = DriverCutover.collect("EntityResolution.fuzzyParts", candSel, DictCandRows) match {
+      case Some(rows) => rows
+      case None => return fuzzyPartsDistributed(parts, nmb, cand)
+    }
     val names = candRows.iterator
       .flatMap(r => Iterator(r.getString(0), r.getString(1)))
       .toArray.distinct.sorted
@@ -212,7 +206,7 @@ object EntityResolution {
   /** Over-cap fallback of [[fuzzyParts]]: the r18 distributed
     * string-keyed tail — row-identical output (the driver dictionary
     * is a cost move only), used when the matched candidate set exceeds
-    * [[DictCandCapKey]] and must not be collected. */
+    * [[DictCandRows]] and must not be collected. */
   private def fuzzyPartsDistributed(parts: DataFrame, nmb: DataFrame,
       cand: DataFrame): DataFrame = {
     val symSmall = cand.filter(!col("x.big"))

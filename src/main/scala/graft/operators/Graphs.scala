@@ -141,17 +141,14 @@ object Graphs {
     * (seeds are pin-protected).
     */
   def pageRank(s: SparkSession, dir: String, iters: Int = 5): DataFrame = {
-    // size-gated driver cutover (see [[DriverEdgeCapKey]]): the gate
-    // reads the lineitem ROW COUNT — parquet footer metadata, no scan,
-    // and an upper bound on distinct co-supply pairs — so the decision
-    // costs no job and an over-cap corpus never pays a wasted probe
-    // (a limit-collect probe was measured and rejected: at sf0.1 the
-    // 1.17M-edge graph sat just past the cap and the probe's full
-    // distinct + 1M-row collect made the query 1.8× SLOWER)
-    val cap = s.conf.getOption(DriverEdgeCapKey).map(_.toLong)
-      .getOrElse(DriverEdgeCapDefault)
-    val lineRows = Tables.load(s, dir, "lineitem").count()
-    if (cap > 0 && 2 * lineRows <= cap) {
+    // driver cutover bounded by the lineitem ROW COUNT — parquet footer
+    // metadata, no scan, and an upper bound on distinct co-supply pairs
+    // — so the decision costs no job and an over-cap corpus never pays
+    // a wasted probe (a limit-collect probe was measured and rejected:
+    // at sf0.1 the 1.17M-edge graph sat just past the cap and the
+    // probe's full distinct + 1M-row collect made the query 1.8× SLOWER)
+    if (DriverCutover.fits("Graphs.pageRank", s, DriverEdges)(
+        2 * Tables.load(s, dir, "lineitem").count())) {
       s.sparkContext.setLocalProperty("graft.pagerank.converged_at", null)
       releaseResults()
       // distinct over the raw KEY PAIR, tagged strings built on the
@@ -191,21 +188,15 @@ object Graphs {
       iters: Int = 50): DataFrame =
     run(s, supplyEdges(s, dir), iters, Some(start))
 
-  /** Edge count at/below which a COLD run executes the whole
-    * fixed-point loop on the driver — the [[Dedup.connectedComponents]]
-    * `driverEdgeCap` cutover applied to PageRank: the update is exact
-    * integer arithmetic (`r div deg`, `(85·s) div 100`, teleport), so
-    * the driver loop is bit-identical to the distributed one per
-    * iteration (spec-asserted), and below the cap one bounded collect
-    * (≤ cap/2 distinct pairs ≈ 70 MB at the default) replaces ~10
-    * scheduled jobs (edge/degree persists, per-chunk broadcast builds,
-    * checkpoint + fingerprint reads — ~0.3 s fixed cost apiece in
-    * local mode). Warm runs keep the distributed path (their seed is a
-    * checkpoint-backed frame the pin/release machinery owns).
-    * Conf-overridable; specs set it to 0 to force the distributed
-    * plan. */
-  private[graft] val DriverEdgeCapKey = "graft.pagerank.driverEdgeCap"
-  private val DriverEdgeCapDefault = 1L << 22
+  /** [[DriverCutover]] cap of a COLD [[pageRank]], in directed edges:
+    * below it the whole fixed-point loop runs on the driver. The update
+    * is exact integer arithmetic (`r div deg`, `(85·s) div 100`,
+    * teleport), so the driver loop is bit-identical to the distributed
+    * one per iteration, and one collect (≤ cap/2 distinct pairs ≈
+    * 70 MB) replaces ~10 scheduled jobs. Warm runs keep the distributed
+    * path (their seed is a checkpoint-backed frame the pin/release
+    * machinery owns). */
+  private val DriverEdges = 1L << 22
 
   private def driverPageRank(s: SparkSession, edges: Array[(String, String)],
       iters: Int): DataFrame = {

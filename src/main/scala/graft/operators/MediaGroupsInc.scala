@@ -351,15 +351,14 @@ object MediaGroupsInc {
     * [[currentLabels]] refuse. `victims` is a driver-side list by
     * contract (a takedown batch is bounded; it broadcasts as isin). */
   def delete(s: SparkSession, path: String, victims: Seq[Long],
-      threshold: Double = 0.99, maxDf: Int = 64,
-      driverEdgeCap: Long = 1L << 20): DataFrame = {
+      threshold: Double = 0.99, maxDf: Int = 64): DataFrame = {
     // a marker inherited from a CRASHED earlier delete carries THAT
     // call's victim list — finish it first, then apply this call's
     // victims fresh (silently resuming the old list in place of the
     // new one would drop a takedown on the floor)
-    if (pendingDelete(path)) deletePhaseB(s, path, driverEdgeCap)
+    if (pendingDelete(path)) deletePhaseB(s, path)
     if (deletePhaseA(s, path, victims, threshold, maxDf))
-      deletePhaseB(s, path, driverEdgeCap)
+      deletePhaseB(s, path)
     currentLabels(s, path)
   }
 
@@ -543,8 +542,7 @@ object MediaGroupsInc {
     * artifacts adopt by move (empty stage = already adopted), and the
     * `removed` disposition comes from the marker (never inferred from
     * a half-applied tree). */
-  private[graft] def deletePhaseB(s: SparkSession, path: String,
-      driverEdgeCap: Long): Unit = {
+  private[graft] def deletePhaseB(s: SparkSession, path: String): Unit = {
     val marker = new java.io.File(s"$path/.delete-commit")
     val lines = new String(
       java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").split("\n")
@@ -702,7 +700,7 @@ object MediaGroupsInc {
         else affectedA,
         Seq("doc_a"), "left_semi")
       val forest = Dedup.contractedForest(sub)
-      val subLabels = Dedup.connectedComponents(forest, driverEdgeCap = driverEdgeCap)
+      val subLabels = Dedup.connectedComponents(forest)
       // stage the stitched labels, then swap atomically: the previous
       // generation stays readable until the new one fully exists, so a
       // crash anywhere re-runs this step (post-swap prev = the already-
@@ -725,7 +723,7 @@ object MediaGroupsInc {
       // or a state that never closed): full cold closure
       s.sparkContext.setLocalProperty(DelClosureProperty, "cold")
       val forest = Dedup.contractedForest(live)
-      val labels = Dedup.connectedComponents(forest, driverEdgeCap = driverEdgeCap)
+      val labels = Dedup.connectedComponents(forest)
       labels.write.mode("overwrite").parquet(genDir.getPath)
       forest.unpersist()
     }
@@ -739,8 +737,8 @@ object MediaGroupsInc {
   }
 
   /** Fold one media batch (media_id, content) into the group state and
-    * return the new full labels (media_id, group_id). `driverEdgeCap`
-    * is exposed so specs can force distributed propagation and read
+    * return the new full labels (media_id, group_id). Specs force
+    * distributed propagation with [[DriverCutover.MaxRowsKey]] and read
     * the measured round saving off [[Dedup.CcRoundsProperty]].
     *
     * `genOverride` pins the generation number instead of deriving it
@@ -754,7 +752,6 @@ object MediaGroupsInc {
     * the generation being (re)written for the same reason. */
   def ingest(s: SparkSession, path: String, batch: DataFrame,
       threshold: Double = 0.99, maxDf: Int = 64,
-      driverEdgeCap: Long = 1L << 20,
       genOverride: Option[Int] = None): DataFrame = {
     require(!pendingCompact(path),
       s"pending state compaction at $path: run compactState to completion " +
@@ -900,11 +897,8 @@ object MediaGroupsInc {
     val forest = Dedup.contractedForest(live)
     val prev = latestGen(path).map(g => s.read.parquet(s"$path/labels/gen=$g"))
     val labels =
-      if (removedAny || prev.isEmpty)
-        Dedup.connectedComponents(forest, driverEdgeCap = driverEdgeCap)
-      else
-        Dedup.connectedComponentsWarm(forest, prev.get,
-          driverEdgeCap = driverEdgeCap)
+      if (removedAny || prev.isEmpty) Dedup.connectedComponents(forest)
+      else Dedup.connectedComponentsWarm(forest, prev.get)
     labels.write.mode("overwrite").parquet(s"$path/labels/gen=$gen")
     forest.unpersist()
     currentLabels(s, path)

@@ -36,16 +36,17 @@ object Multimodal {
     * not a perf knob. */
   val BroadcastMediaBudget = 1000000L
 
-  /** Media count below which [[verifiedPairs]]' `hvLocal` regime
-    * collects the histogram table instead of double-broadcasting it:
-    * the collect materializes BOXED vectors on the driver (~64 boxed
-    * doubles/row on top of the built broadcast relations), so while
-    * the row payload fits far beyond this, GC pressure does not —
+  /** [[DriverCutover]] cap of [[verifiedPairs]]' `hvLocal` regime, in
+    * media rows: below it the histogram table collects instead of
+    * double-broadcasting. The collect materializes BOXED vectors on the
+    * driver (~64 boxed doubles/row on top of the built broadcast
+    * relations), so while the row payload fits far beyond this, GC
+    * pressure does not —
     * measured at the 100× ScaleBench point (500k media):
     * media_dup_groups +50% with the collect vs +15% ambient drift on
     * the untouched exact query in the same window. 64k rows keeps the
     * boxed transient in the tens of MB. */
-  val HvLocalRowCap: Long = 1L << 16
+  private val HvLocalRowCap = 1L << 16
 
   /** On-disk corpus size below which [[mediaNearDupsExact]] skips its
     * count gate outright: a window relation derived from this little
@@ -475,7 +476,7 @@ object Multimodal {
     //    up-front collect is strictly added wall time there
     //    (1.83 → 2.08 s measured, change rejected for that caller).
     val (hvA, hvB) =
-      if (nMedia <= HvLocalRowCap && hvLocal) {
+      if (hvLocal && DriverCutover.fits("Multimodal.verifiedPairs", s, HvLocalRowCap)(nMedia)) {
         import s.implicits._
         val rows = hv.select(col("media_id"), col("hvec"), col("n2"))
           .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))

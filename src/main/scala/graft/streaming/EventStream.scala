@@ -680,8 +680,6 @@ object EventStream {
     * postings); the closure re-reads the accumulated pair store —
     * member-proportional, contracted map-side by the warm CC's forest
     * path — but propagates only as far as the delta's merges reach.
-    * `driverEdgeCap` is exposed so specs can force distributed
-    * propagation and read the round count.
     *
     * `consolidateEvery = Some(n)` folds the accumulated one-dir-per-
     * trigger debt via [[consolidateDedupState]] after every n-th
@@ -692,7 +690,6 @@ object EventStream {
   def streamingNearDedupGroups(docs: DataFrame, outPath: String,
       threshold: Double = 0.3, maxDf: Int = 50,
       checkpointLocation: Option[String] = None,
-      driverEdgeCap: Long = 1L << 20,
       consolidateEvery: Option[Int] = None): StreamingQuery = {
     val idxDir = s"$outPath/index"
     val pairDir = s"$outPath/pairs"
@@ -740,10 +737,8 @@ object EventStream {
             .find(g => new java.io.File(s"$grpDir/gen=$g/_SUCCESS").exists())
             .map(g => s.read.parquet(s"$grpDir/gen=$g"))
           val labels = seed match {
-            case Some(sd) => graft.operators.Dedup.connectedComponentsWarm(
-              pairsAll, sd, driverEdgeCap = driverEdgeCap)
-            case None => graft.operators.Dedup.connectedComponents(
-              pairsAll, driverEdgeCap = driverEdgeCap)
+            case Some(sd) => graft.operators.Dedup.connectedComponentsWarm(pairsAll, sd)
+            case None => graft.operators.Dedup.connectedComponents(pairsAll)
           }
           labels.write.mode("overwrite").parquet(bGrp)
         }
@@ -1023,7 +1018,6 @@ object EventStream {
   def streamingMediaGroups(media: DataFrame, outPath: String,
       threshold: Double = 0.99, maxDf: Int = 64,
       checkpointLocation: Option[String] = None,
-      driverEdgeCap: Long = 1L << 20,
       compactEvery: Option[Int] = None): StreamingQuery = {
     val writer = media.writeStream
       .outputMode(OutputMode.Append())
@@ -1037,7 +1031,7 @@ object EventStream {
         if (!marker.exists()) {
           graft.operators.MediaGroupsInc.ingest(s, outPath,
             batch.select(col("media_id"), col("content")),
-            threshold, maxDf, driverEdgeCap, genOverride = Some(batchId.toInt))
+            threshold, maxDf, genOverride = Some(batchId.toInt))
           marker.getParentFile.mkdirs()
           java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
           ()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, DriverCutover, Similarity}
 
 class DedupSimilaritySpec extends SparkSpec {
 
@@ -77,16 +77,18 @@ class DedupSimilaritySpec extends SparkSpec {
       .toDF("doc_a", "doc_b")
     val viaDriver = Dedup.connectedComponents(chain)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaPropagation = Dedup.connectedComponents(chain, driverEdgeCap = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaPropagation = withConf(DriverCutover.MaxRowsKey -> "0") {
+      Dedup.connectedComponents(chain).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(viaDriver == viaPropagation, "the two CC paths disagree")
 
     val pairs = Dedup.minhashNearDups(spark, sf, threshold = 0.5)
       .select(col("doc_a"), col("doc_b"))
     val a = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Dedup.connectedComponents(pairs, driverEdgeCap = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val b = withConf(DriverCutover.MaxRowsKey -> "0") {
+      Dedup.connectedComponents(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(a == b, "CC paths disagree on real minhash pairs")
   }
 
@@ -95,11 +97,13 @@ class DedupSimilaritySpec extends SparkSpec {
     // a 200-node chain has diameter 199: min-label propagation moves
     // the min one hop per round, so maxIter=3 can NOT converge and the
     // O(log n) large-star/small-star fallback must take over (the old
-    // behavior was a require() crash). driverEdgeCap=0 keeps the graph
-    // off the driver union-find shortcut.
+    // behavior was a require() crash). A cap of 0 keeps the graph off
+    // the driver union-find shortcut.
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = Dedup.connectedComponents(chain, maxIter = 3, driverEdgeCap = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = withConf(DriverCutover.MaxRowsKey -> "0") {
+      Dedup.connectedComponents(chain, maxIter = 3)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(got.size == 200 && got.values.forall(_ == 0L),
       s"chain not fused to component 0: ${got.toSeq.sortBy(_._1).take(10)}")
 

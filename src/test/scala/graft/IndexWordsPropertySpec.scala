@@ -29,25 +29,19 @@ class IndexWordsPropertySpec extends SparkSpec {
     Some("café Straße Жук 😀x y😀z"), Some(" nbsp kept together"))
 
   /** (index_words, regex rule) per row of `texts`, in the given mode. */
-  private def bothRules(texts: Seq[Option[String]], conf: Map[String, String]): Seq[(Any, Any)] = {
+  private def bothRules(texts: Seq[Option[String]],
+      conf: Map[String, String]): Seq[(Any, Any)] = withConf(conf.toSeq: _*) {
     import spark.implicits._
-    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val src = spark.sparkContext.parallelize(texts.map(Tuple1(_)), 2).toDF("t")
-      // two plans over the same rows, so the kernel's own projection is
-      // whole-stage generated (the regex rule's lambdas never are)
-      val kernel = src.select(IndexWords(col("t")))
-      val regex = src.select(filter(transform(split(col("t"), "\\s+"),
-        InvertedIndex.normalizeToken(_)), w => length(w) > 0))
-      val plan = kernel.queryExecution.executedPlan
-      assert(plan.find(_.isInstanceOf[WholeStageCodegenExec]).isDefined ==
-        (conf("spark.sql.codegen.wholeStage") == "true"), plan.toString)
-      kernel.collect().toSeq.map(_.get(0)).zip(regex.collect().toSeq.map(_.get(0)))
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    val src = spark.sparkContext.parallelize(texts.map(Tuple1(_)), 2).toDF("t")
+    // two plans over the same rows, so the kernel's own projection is
+    // whole-stage generated (the regex rule's lambdas never are)
+    val kernel = src.select(IndexWords(col("t")))
+    val regex = src.select(filter(transform(split(col("t"), "\\s+"),
+      InvertedIndex.normalizeToken(_)), w => length(w) > 0))
+    val plan = kernel.queryExecution.executedPlan
+    assert(plan.find(_.isInstanceOf[WholeStageCodegenExec]).isDefined ==
+      (conf("spark.sql.codegen.wholeStage") == "true"), plan.toString)
+    kernel.collect().toSeq.map(_.get(0)).zip(regex.collect().toSeq.map(_.get(0)))
   }
 
   private val modes = Seq(

@@ -2,64 +2,57 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import graft.operators.{InvertedIndex, InvertedIndexJob}
 import graft.sources.DocumentCorpus
 
-/** Golden E2E: byte-compare all 26 letter files against golden outputs
-  * (SURVEY §5) — the primary correctness surface. The 3-file corpus and
-  * its hand-checked goldens live in the test resources (`index_small/`,
-  * the corpus verbatim from FIXTURES.md §A.2); the 355-file corpus is
-  * the reference checker's own.
+/** Golden E2E: byte-compare all 26 letter files against expected
+  * outputs (SURVEY §5) — the primary correctness surface. The 3-file
+  * corpus and its hand-checked goldens live in the test resources
+  * (`index_small/`, the corpus verbatim from FIXTURES.md §A.2); the
+  * ~300-file corpus is written from a seed at suite start and checked
+  * against a naive oracle of the C semantics ([[IndexCorpus]]).
   */
-class InvertedIndexSpec extends SparkSpec {
+class InvertedIndexSpec extends SparkSpec with SeededIndexCorpus {
 
-  private val checker = Paths.get("/root/reference/checker")
   private val small = Fixtures.smallCorpus
 
-  private def goldenCompare(goldenDir: Path, outDir: Path): Unit = {
-    ('a' to 'z').foreach { l =>
-      val got = new String(Files.readAllBytes(outDir.resolve(s"$l.txt")), "UTF-8")
-      val want = new String(Files.readAllBytes(goldenDir.resolve(s"$l.txt")), "UTF-8")
-      // reference checker uses diff -w; our output should match exactly
-      // modulo trailing whitespace per line
-      def norm(s: String) = s.linesIterator.map(_.replaceAll("\\s+$", "")).mkString("\n")
-      assert(norm(got) == norm(want), s"letter $l mismatch")
-    }
-  }
+  private lazy val seededWant = IndexCorpus.letterFiles(seededManifest)
 
-  private def runManifest(dir: Path, name: String, golden: String): Unit = {
+  private def smallWant(l: Char): Array[Byte] =
+    Files.readAllBytes(small.resolve(s"test_out_small/$l.txt"))
+
+  /** Run the job on `manifest` and compare all 26 letter files byte for
+    * byte; returns the output directory. */
+  private def runAndCompare(name: String, manifest: String, want: Char => Array[Byte]): Path = {
     val out = Files.createTempDirectory(s"graft-index-$name")
-    InvertedIndexJob.run(spark, dir.resolve(name).toString, out.toString)
-    goldenCompare(dir.resolve(golden), out)
+    InvertedIndexJob.run(spark, manifest, out.toString)
+    ('a' to 'z').foreach { l =>
+      assert(Files.readAllBytes(out.resolve(s"$l.txt")).sameElements(want(l)), s"$name letter $l bytes")
+    }
+    out
   }
 
   test("small corpus matches golden output incl. empty letter files") {
-    val out = Files.createTempDirectory("graft-index-small")
-    InvertedIndexJob.run(spark, Fixtures.smallManifest, out.toString)
-    // the hermetic goldens are this sink's exact bytes, not just diff -w
-    ('a' to 'z').foreach { l =>
-      assert(Files.readAllBytes(out.resolve(s"$l.txt")).sameElements(
-        Files.readAllBytes(small.resolve(s"test_out_small/$l.txt"))), s"letter $l bytes")
-    }
+    val out = runAndCompare("small", Fixtures.smallManifest, smallWant)
     // explicit O16 check: d has no words in the small corpus
     assert(Files.size(out.resolve("d.txt")) == 0)
   }
 
-  test("large 355-file corpus matches golden output") {
-    runManifest(checker, "test.txt", "test_out")
+  test("seeded 300-file corpus matches the naive oracle byte for byte") {
+    val out = runAndCompare("seeded", seededManifest, seededWant)
+    assert(Files.size(out.resolve(s"${IndexCorpus.AbsentLetter}.txt")) == 0)
+    assert(('a' to 'z').count(l => Files.size(out.resolve(s"$l.txt")) > 0) == 25)
+    assert(seededWant.values.map(b => new String(b, "UTF-8").count(_ == '\n')).sum > 10000)
   }
 
-  test("sort-merge fallback path matches golden output on BOTH corpora") {
+  test("sort-merge fallback path matches the expected output on BOTH corpora") {
     // force the gate below any corpus size: every build goes through
-    // buildSortMerge, and the byte-identical golden diff proves the
-    // two aggregation strategies are row-for-row interchangeable
-    spark.conf.set(InvertedIndex.SortMergeFileThresholdKey, "0")
-    try {
-      runManifest(small, "test_small.txt", "test_out_small")
-      runManifest(checker, "test.txt", "test_out")
-    } finally spark.conf.unset(InvertedIndex.SortMergeFileThresholdKey)
+    // buildSortMerge, and the byte-identical compare proves the two
+    // aggregation strategies are row-for-row interchangeable
+    withConf(InvertedIndex.SortMergeFileThresholdKey -> "0") {
+      runAndCompare("small-sm", Fixtures.smallManifest, smallWant)
+      runAndCompare("seeded-sm", seededManifest, seededWant)
+    }
   }
 
   test("sort-merge fallback on a degenerate corpus: one word in EVERY doc") {

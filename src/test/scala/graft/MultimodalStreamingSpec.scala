@@ -276,11 +276,8 @@ class MultimodalStreamingSpec extends SparkSpec {
     import spark.implicits._
     // the new-API path requires the RocksDB state store; scope the
     // provider switch to this query and restore the default after
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val streamed = EventStream.runToMemory(spark,
         EventStream.userRunningCountsTws(spark, EventStream.readEvents(spark, sf))
           .toDF("user_id", "n"),
@@ -289,9 +286,6 @@ class MultimodalStreamingSpec extends SparkSpec {
       val batch = graft.Tables.load(spark, sf, "events")
         .groupBy("user_id").agg(count(lit(1)).as("n"))
       assert(last.except(batch).count() == 0 && batch.except(last).count() == 0)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

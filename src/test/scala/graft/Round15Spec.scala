@@ -18,15 +18,8 @@ class Round15Spec extends SparkSpec {
     * checkpoint-block assertions below are about the distributed
     * loop's machinery, which the r19 driver cutover skips entirely on
     * the tiny spec graphs. */
-  private def forceDistributed[T](body: => T): T = {
-    val key = graft.operators.Graphs.DriverEdgeCapKey
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, "0")
-    try body finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def forceDistributed[T](body: => T): T =
+    withConf(graft.operators.DriverCutover.MaxRowsKey -> "0")(body)
 
   // --- checkpoint lifecycle: the r14 leak is closed -------------------
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ArtifactCache, Dedup, Graphs, IvfIndex, Multimodal,
+import graft.operators.{ArtifactCache, Dedup, DriverCutover, Graphs, IvfIndex, Multimodal,
   PerceptualHash, Similarity}
 
 /** Round-16 specs: linear-output media dup groups (map-side forest
@@ -74,8 +74,9 @@ class Round16Spec extends SparkSpec {
     // old graph: a 0–5 chain and a 6–10 chain (two components)
     val oldPairs = ((0L until 5L).map(i => (i, i + 1)) ++
       (6L until 10L).map(i => (i, i + 1))).toDF("doc_a", "doc_b")
-    // driverEdgeCap = 0 forces the distributed propagation both times
-    val seed = Dedup.connectedComponents(oldPairs, driverEdgeCap = 0)
+    // a cap of 0 forces the distributed propagation every time
+    withConf(DriverCutover.MaxRowsKey -> "0") {
+    val seed = Dedup.connectedComponents(oldPairs)
     val seedRows = seed.collect()
     assert(seedRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
       .values.toSet == Set(0L, 6L))
@@ -83,10 +84,10 @@ class Round16Spec extends SparkSpec {
     val newPairs = oldPairs.union(Seq((5L, 6L)).toDF("doc_a", "doc_b"))
     val warm = Dedup.connectedComponentsWarm(newPairs,
       seedRows.map(r => (r.getLong(0), r.getLong(1))).toSeq
-        .toDF("doc_id", "group_id"), driverEdgeCap = 0)
+        .toDF("doc_id", "group_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val warmRounds = rounds()
-    val cold = Dedup.connectedComponents(newPairs, driverEdgeCap = 0)
+    val cold = Dedup.connectedComponents(newPairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val coldRounds = rounds()
     assert(warm == cold, "warm labels must equal the cold fixpoint")
@@ -94,6 +95,7 @@ class Round16Spec extends SparkSpec {
     assert(warmRounds > 0 && coldRounds > 0)
     assert(warmRounds < coldRounds,
       s"warm start must save rounds: warm=$warmRounds cold=$coldRounds")
+    }
   }
 
   // --- video: persisted/incremental index ------------------------------
@@ -331,10 +333,7 @@ class Round16Spec extends SparkSpec {
       .flatMap(e => Seq(e, e.swap)).toDF("src", "dst")
     // pin the DISTRIBUTED plan: this test is about checkpoint-handoff
     // machinery, which the r19 driver cutover skips on a cold run
-    val capKey = Graphs.DriverEdgeCapKey
-    val capBefore = spark.conf.getOption(capKey)
-    spark.conf.set(capKey, "0")
-    try {
+    withConf(DriverCutover.MaxRowsKey -> "0") {
     val r1 = Graphs.run(spark, edges, 2, None); r1.count()
     val r2 = Graphs.run(spark, edges, 2, Some(r1)); r2.count()
     // seed derived from BOTH previous outputs: its analyzed plan has two
@@ -346,9 +345,6 @@ class Round16Spec extends SparkSpec {
     val r3 = Graphs.run(spark, edges, 2, Some(seed))
     assert(r3.count() > 0, "seeded run over a two-leaf seed must execute")
     Graphs.releaseResults()
-    } finally capBefore match {
-      case Some(v) => spark.conf.set(capKey, v)
-      case None => spark.conf.unset(capKey)
     }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ArtifactCache, Dedup, IvfIndex, MediaGroupsInc,
+import graft.operators.{ArtifactCache, Dedup, DriverCutover, IvfIndex, MediaGroupsInc,
   MediaIndexOps, Multimodal, PerceptualHash, Similarity}
 
 /** Round-17 specs: tombstone delete + compaction for the video frame
@@ -265,21 +265,20 @@ class Round17Spec extends SparkSpec {
     // no crossing at the default cap)
     val bridge = Seq(20L -> (blk('C') + blk('c')))
     val state = java.nio.file.Files.createTempDirectory("graft-minc-warm").toString
-    try {
+    // a cap of 0 forces the distributed propagation every time
+    try withConf(DriverCutover.MaxRowsKey -> "0") {
       val toMedia = (s: Seq[(Long, String)]) => s.toDF("media_id", "text")
         .select(col("media_id"), encode(col("text"), "UTF-8").as("content"))
-      MediaGroupsInc.ingest(spark, state, toMedia(chainA ++ chainB),
-        threshold = 0.0, driverEdgeCap = 0)
+      MediaGroupsInc.ingest(spark, state, toMedia(chainA ++ chainB), threshold = 0.0)
       assert(labelsOf(MediaGroupsInc.currentLabels(spark, state))
         .values.toSet == Set(0L, 10L), "two chain components before the bridge")
       val warm = labelsOf(MediaGroupsInc.ingest(spark, state, toMedia(bridge),
-        threshold = 0.0, driverEdgeCap = 0))
+        threshold = 0.0))
       val warmRounds = rounds()
       assert(warm.values.toSet == Set(0L), "bridged graph is one component")
       // cold baseline over the same live pair store
       val cold = labelsOf(Dedup.connectedComponents(
-        spark.read.parquet(s"$state/pairs").select(col("doc_a"), col("doc_b")),
-        driverEdgeCap = 0)
+        spark.read.parquet(s"$state/pairs").select(col("doc_a"), col("doc_b")))
         .select(col("doc_id"), col("group_id")))
       val coldRounds = rounds()
       assert(warm == cold, "warm labels must equal the cold fixpoint")
@@ -610,17 +609,17 @@ class Round17Spec extends SparkSpec {
     // the bridge's shingles: one interior shingle of each chain
     val bridge = Seq((20L, "ca3 ca4 ca3 db3 db4"))
     val out = java.nio.file.Files.createTempDirectory("graft-sdg").toString
-    try {
+    // a cap of 0 forces the distributed propagation every time; set
+    // before the query starts, so its micro-batch session inherits it
+    try withConf(DriverCutover.MaxRowsKey -> "0") {
       val in = MemoryStream[(Long, String)]
       val q = graft.streaming.EventStream.streamingNearDedupGroups(
-        in.toDF().toDF("doc_id", "text"), out,
-        threshold = 0.0, driverEdgeCap = 0)
+        in.toDF().toDF("doc_id", "text"), out, threshold = 0.0)
       def labelsAt(gen: Long): Map[Long, Long] =
         spark.read.parquet(s"$out/groups/gen=$gen")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       def coldLabels(): Map[Long, Long] = Dedup.connectedComponents(
-        spark.read.parquet(s"$out/pairs").select(col("doc_a"), col("doc_b")),
-        driverEdgeCap = 0)
+        spark.read.parquet(s"$out/pairs").select(col("doc_a"), col("doc_b")))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       try {
         in.addData(chainA ++ chainB)

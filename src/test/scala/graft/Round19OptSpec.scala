@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Bpe, Dedup, EntityResolution, TextQueries}
+import graft.operators.{Bpe, Dedup, DriverCutover, EntityResolution, TextQueries}
 
 /** Round-19 OPTIMIZATION equivalence specs: every rewrite this round is
   * a cost change with a bit-identical result contract, and each one is
@@ -164,15 +164,10 @@ class Round19OptSpec extends SparkSpec {
 
   test("embedding near-dup: driver cellPrune == distributed cellPrune output " +
     "(both exact), driver grid radii cover its own assignment") {
-    val key = Dedup.CellPruneDriverRowCapKey
     val drv = Dedup.embeddingNearDups(spark, sf, 0.4).collect().toSeq
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, "0")
-    val dist = try Dedup.embeddingNearDups(spark, sf, 0.4).collect().toSeq
-      finally before match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    val dist = withConf(DriverCutover.MaxRowsKey -> "0") {
+      Dedup.embeddingNearDups(spark, sf, 0.4).collect().toSeq
+    }
     assert(drv == dist, "driver and distributed prune must agree (both exact)")
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{ArtifactCache, AudioMatch, Dedup, IndexStore, IvfIndex,
+import graft.operators.{ArtifactCache, AudioMatch, Dedup, DriverCutover, IndexStore, IvfIndex,
   MediaGroupsInc, Multimodal, PerceptualHash, Similarity, Takedown}
 
 /** Round-19 specs: the victim-scoped takedown re-closure — deletes
@@ -122,26 +122,24 @@ class Round19Spec extends SparkSpec {
     val sh = Dedup.shingleHashes(
       graft.Tables.load(spark, sf01, "documents").select(col("doc_id"), col("text")))
     val pairs = Dedup.lshCandidates(Dedup.minhashSignatures(sh))
-    def labelsWith(reliableCutEdges: String): Map[Long, Long] = {
-      spark.conf.set(Dedup.ReliableCutEdgesKey, reliableCutEdges)
-      // driverEdgeCap = 0 forces the distributed propagation path —
-      // the only place iteration cuts exist
-      try Dedup.connectedComponents(pairs, driverEdgeCap = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset(Dedup.ReliableCutEdgesKey)
-    }
+    // a cap of 0 forces the distributed propagation path — the only
+    // place iteration cuts exist
+    def labelsWith(reliableCutEdges: String): Map[Long, Long] =
+      withConf(Dedup.ReliableCutEdgesKey -> reliableCutEdges, DriverCutover.MaxRowsKey -> "0") {
+        Dedup.connectedComponents(pairs)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
     val local = labelsWith(Long.MaxValue.toString)
     val reliable = labelsWith("1")
     assert(local.nonEmpty && local == reliable,
       s"paths diverge: ${(local.toSet diff reliable.toSet).take(3)}")
     // chain shape → the starContract fallback, through both cut kinds
     val chain = (1L until 60L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    def chainLabels(cut: String): Map[Long, Long] = {
-      spark.conf.set(Dedup.ReliableCutEdgesKey, cut)
-      try Dedup.connectedComponents(chain, maxIter = 2, driverEdgeCap = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset(Dedup.ReliableCutEdgesKey)
-    }
+    def chainLabels(cut: String): Map[Long, Long] =
+      withConf(Dedup.ReliableCutEdgesKey -> cut, DriverCutover.MaxRowsKey -> "0") {
+        Dedup.connectedComponents(chain, maxIter = 2)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
     val want = (1L to 60L).map(_ -> 1L).toMap
     assert(chainLabels(Long.MaxValue.toString) == want)
     assert(chainLabels("1") == want)

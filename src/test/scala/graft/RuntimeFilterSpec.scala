@@ -19,16 +19,6 @@ class RuntimeFilterSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.01"
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("selective dim filter injects a bloom runtime filter into the fact scan") {
     withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force the shuffle-join shape

@@ -8,4 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(cores = 8, appName = "graft-test")
+
+  /** Run `body` with the session conf `pairs` set, then restore each key
+    * to its previous value (or unset it). */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -59,19 +59,10 @@ class TextKernelsPropertySpec extends SparkSpec {
     toks.groupBy(col("id")).agg(votes.head, votes.tail: _*).select(col("id"), sim)
   }
 
-  private def withConf[T](conf: Map[String, String])(body: => T): T = {
-    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Per input row: (kernel values, old-form values), each
     * (shingles k=1..3, simhash, token count). */
   private def bothForms(texts: Seq[Option[String]],
-      conf: Map[String, String]): Seq[(Seq[Any], Seq[Any])] = withConf(conf) {
+      conf: Map[String, String]): Seq[(Seq[Any], Seq[Any])] = withConf(conf.toSeq: _*) {
     import spark.implicits._
     val src = spark.sparkContext
       .parallelize(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, 2).toDF("id", "t")
