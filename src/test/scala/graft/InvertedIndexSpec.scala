@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import graft.operators.{InvertedIndex, InvertedIndexJob}
+import graft.operators.{ArtifactCache, InvertedIndex, InvertedIndexJob}
 import graft.sources.DocumentCorpus
 
 /** Golden E2E: byte-compare all 26 letter files against expected
@@ -21,27 +21,33 @@ class InvertedIndexSpec extends SparkSpec with SeededIndexCorpus {
   private def smallWant(l: Char): Array[Byte] =
     Files.readAllBytes(small.resolve(s"test_out_small/$l.txt"))
 
-  /** Run the job on `manifest` and compare all 26 letter files byte for
-    * byte; returns the output directory. */
-  private def runAndCompare(name: String, manifest: String, want: Char => Array[Byte]): Path = {
+  /** Run the job on `manifest`, compare all 26 letter files byte for
+    * byte, run `check` on the output directory, then delete it. */
+  private def runAndCompare(name: String, manifest: String, want: Char => Array[Byte])(
+      check: Path => Unit = _ => ()): Unit = {
     val out = Files.createTempDirectory(s"graft-index-$name")
-    InvertedIndexJob.run(spark, manifest, out.toString)
-    ('a' to 'z').foreach { l =>
-      assert(Files.readAllBytes(out.resolve(s"$l.txt")).sameElements(want(l)), s"$name letter $l bytes")
-    }
-    out
+    try {
+      InvertedIndexJob.run(spark, manifest, out.toString)
+      ('a' to 'z').foreach { l =>
+        assert(Files.readAllBytes(out.resolve(s"$l.txt")).sameElements(want(l)),
+          s"$name letter $l bytes")
+      }
+      check(out)
+    } finally ArtifactCache.deleteRecursively(out.toFile)
   }
 
   test("small corpus matches golden output incl. empty letter files") {
-    val out = runAndCompare("small", Fixtures.smallManifest, smallWant)
     // explicit O16 check: d has no words in the small corpus
-    assert(Files.size(out.resolve("d.txt")) == 0)
+    runAndCompare("small", Fixtures.smallManifest, smallWant) { out =>
+      assert(Files.size(out.resolve("d.txt")) == 0)
+    }
   }
 
   test("seeded 300-file corpus matches the naive oracle byte for byte") {
-    val out = runAndCompare("seeded", seededManifest, seededWant)
-    assert(Files.size(out.resolve(s"${IndexCorpus.AbsentLetter}.txt")) == 0)
-    assert(('a' to 'z').count(l => Files.size(out.resolve(s"$l.txt")) > 0) == 25)
+    runAndCompare("seeded", seededManifest, seededWant) { out =>
+      assert(Files.size(out.resolve(s"${IndexCorpus.AbsentLetter}.txt")) == 0)
+      assert(('a' to 'z').count(l => Files.size(out.resolve(s"$l.txt")) > 0) == 25)
+    }
     assert(seededWant.values.map(b => new String(b, "UTF-8").count(_ == '\n')).sum > 10000)
   }
 
@@ -50,8 +56,8 @@ class InvertedIndexSpec extends SparkSpec with SeededIndexCorpus {
     // buildSortMerge, and the byte-identical compare proves the two
     // aggregation strategies are row-for-row interchangeable
     withConf(InvertedIndex.SortMergeFileThresholdKey -> "0") {
-      runAndCompare("small-sm", Fixtures.smallManifest, smallWant)
-      runAndCompare("seeded-sm", seededManifest, seededWant)
+      runAndCompare("small-sm", Fixtures.smallManifest, smallWant)()
+      runAndCompare("seeded-sm", seededManifest, seededWant)()
     }
   }
 
