@@ -102,7 +102,8 @@ object Bench {
     * 12-run standalone probes stayed flat, so the trigger is
     * battery-context state and the evidence must separate the
     * hypotheses per run: a major-GC pause landing inside the run
-    * (gcMs), JIT recompilation (jitMs), a /tmp artifact rebuild
+    * (gcMs), JIT recompilation (jitMs), generated classes compiled
+    * on a codegen-cache miss (codegenN), a /tmp artifact rebuild
     * (acBuilds — [[graft.operators.ArtifactCache.ensureBuilds]]
     * delta), leaked persisted RDDs accumulating across the battery
     * (rdds — absolute count after the run), and old-gen pressure
@@ -111,10 +112,10 @@ object Bench {
     * next driver battery carries the adjudication data even if local
     * reproduction attempts stay flat. */
   private[graft] final case class RunMetrics(gcMs: Long, gcN: Long, jitMs: Long,
-      rdds: Int, acBuilds: Long, heapMb: Long, cpuMs: Long, stealJ: Long,
-      busyJ: Long) {
+      codegenN: Long, rdds: Int, acBuilds: Long, heapMb: Long, cpuMs: Long,
+      stealJ: Long, busyJ: Long) {
     def json: String =
-      s"""{"gc_ms":$gcMs,"gc_n":$gcN,"jit_ms":$jitMs,"rdds":$rdds,""" +
+      s"""{"gc_ms":$gcMs,"gc_n":$gcN,"jit_ms":$jitMs,"codegen_n":$codegenN,"rdds":$rdds,""" +
         s""""ac_builds":$acBuilds,"heap_mb":$heapMb,"cpu_ms":$cpuMs,""" +
         s""""steal_j":$stealJ,"busy_j":$busyJ}"""
   }
@@ -143,6 +144,10 @@ object Bench {
       .filter(_.isCompilationTimeMonitoringSupported)
       .map(_.getTotalCompilationTime).getOrElse(0L)
 
+  /** Generated classes this JVM has compiled (codegen-cache misses). */
+  private[graft] def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Time `body` [[Runs]] times; re-run while the spread exceeds
     * [[SpreadLimit]] (up to [[MaxExtraRuns]] extras). Returns ALL raw
     * times in run order — the caller medians and flags — plus one
@@ -158,6 +163,7 @@ object Bench {
       rddCount: () => Int = () => -1): (Double, RunMetrics) = {
     val (gc0, gn0) = gcSnapshot()
     val jit0 = jitMillis()
+    val cg0 = codegenCompiles()
     val ac0 = graft.operators.ArtifactCache.ensureBuilds.get()
     val cpu0 = processCpuMs()
     val j0 = cpuJiffies()
@@ -170,7 +176,8 @@ object Bench {
       (b0, s0, _) <- j0; (b1, s1, _) <- cpuJiffies()
     } yield (s1 - s0, b1 - b0)).getOrElse((-1L, -1L))
     (sec, RunMetrics(gc1 - gc0, gn1 - gn0, jitMillis() - jit0,
-      rddCount(), graft.operators.ArtifactCache.ensureBuilds.get() - ac0,
+      codegenCompiles() - cg0, rddCount(),
+      graft.operators.ArtifactCache.ensureBuilds.get() - ac0,
       (rt.totalMemory() - rt.freeMemory()) >> 20,
       if (cpu0 < 0) -1L else processCpuMs() - cpu0, stealJ, busyJ))
   }

@@ -48,6 +48,8 @@ object Verify {
       s" hits ${operators.ArtifactCache.ensureHits.get()}")
     // and which side of each driver cutover it took
     System.err.println(s"[verify] DriverCutover ${operators.DriverCutover.summary}")
+    // and how many classes it generated (each a codegen-cache miss)
+    System.err.println(s"[verify] codegen compiles ${Bench.codegenCompiles()}")
     spark.stop()
   }
 }

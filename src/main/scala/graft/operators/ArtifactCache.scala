@@ -5,6 +5,8 @@ import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
+
 /** Shared discipline for build-once /tmp artifact caches (summary
   * tables, near-dup indexes, IVF indexes, media indexes, plans): one
   * key derivation, whole-artifact completion markers, and crash/
@@ -71,13 +73,24 @@ private[graft] object ArtifactCache {
   }
 
   /** THE cache key of a build-once artifact:
-    * `/tmp/graft-<family>/<dir sanitized>-<fingerprint(dir/input)>-<params>-<code>`.
-    * `params` are the RUNTIME arguments the artifact depends on (k,
-    * thresholds, split ids); compile-time constants need no place in
-    * it, [[codeFingerprint]] covers them. The entry name starts with
-    * the sanitized dir and `-`, so per-input cleanup can match it. */
+    * `/tmp/graft-<family>/<dir sanitized>-<fingerprint(dir/input)>-<params>-<code>`,
+    * plus [[cutoverTag]]. `params` are the RUNTIME arguments the
+    * artifact depends on (k, thresholds, split ids); compile-time
+    * constants need no place in it, [[codeFingerprint]] covers them.
+    * The entry name starts with the sanitized dir and `-`, so
+    * per-input cleanup can match it. */
   def key(family: String, dir: String, input: String, params: Any*): String =
-    keyFor(codeFingerprint, family, dir, input, params: _*)
+    keyFor(codeFingerprint, family, dir, input, params: _*) + cutoverTag
+
+  /** `-maxRows<v>` when [[DriverCutover.MaxRowsKey]] is set in the
+    * active session, else empty. An artifact built with lowered driver
+    * cutovers ran other branches than one built at the site caps, so
+    * the two regimes never share an entry: a forced-distributed run
+    * builds (and so checks) its own. Unset, keys are unchanged. */
+  def cutoverTag: String =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .flatMap(_.conf.getOption(DriverCutover.MaxRowsKey))
+      .fold("")(v => s"-maxRows$v")
 
   /** [[key]] under an explicit code fingerprint (spec injection). */
   private[graft] def keyFor(code: String, family: String, dir: String,

@@ -973,17 +973,15 @@ object Dedup {
     * final level; callers should unpersist it once the closure has
     * materialized. */
   private[graft] def contractedForest(pairs: DataFrame,
-      cap: Long = 1L << 20, maxPasses: Int = 4): DataFrame = {
+      cap: Long = CcDriverPairs, maxPasses: Int = 4): DataFrame = {
     var edges = localForest(pairs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var n = edges.count()
     var pass = 1
-    // compare the SYMMETRIZED size (2n — forest edges are distinct
-    // non-self pairs, so symmetrize+distinct downstream is exactly 2n)
-    // against the cap: [[connectedComponents]]'s driver cutover tests
-    // sym.count() ≤ cap, so contracting to just under `cap` RAW rows
-    // would still miss the one-collect path near the boundary
-    while (2 * n > cap && pass < maxPasses) {
+    // [[connectedComponents]]'s driver cutover collects the input pairs
+    // against the same cap, so a forest of at most `cap` edges takes
+    // the one-collect path
+    while (n > cap && pass < maxPasses) {
       val key = if (pass % 2 == 1) "doc_a" else "doc_b"
       val next = localForest(edges.repartition(col(key)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1046,9 +1044,10 @@ object Dedup {
         symEdges >= ReliableCutEdgesDefault
     }
 
-  /** [[DriverCutover]] cap of connected components, in directed
-    * (symmetrized) edges: ≤ ~32 MB of driver pairs. */
-  private val CcDriverEdges = 1L << 20
+  /** [[DriverCutover]] cap of connected components, in input pairs:
+    * ≤ ~16 MB of driver pairs, the 2²⁰ directed edges the symmetrized
+    * relation of the distributed branch would hold. */
+  private val CcDriverPairs = 1L << 19
 
   private def ccImpl(pairs: DataFrame, seed: Option[DataFrame],
       maxIter: Int): DataFrame = {
@@ -1059,19 +1058,21 @@ object Dedup {
     // of whether the caller's ids were int or long
     val e = pairs.select(
       col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst"))
-    val symPlan = e.union(e.select(col("dst"), col("src"))).distinct()
     // driver cutover: below the cap a driver union-find replaces
     // O(diameter) distributed rounds; both compute the minimum node id
     // per component. The gate IS the collect (r20): dup-pair graphs sit
     // far under the cap, so an over-cap graph's bounded probe is rare —
-    // the inverse of pageRank, whose graphs exceed their cap.
-    DriverCutover.collect("Dedup.connectedComponents", symPlan, CcDriverEdges) match {
+    // the inverse of pageRank, whose graphs exceed their cap. It
+    // collects the raw pairs: union-find needs neither the reverse
+    // edges nor distinct ones, so only the distributed branch pays for
+    // the symmetrizing union and its distinct shuffle.
+    DriverCutover.collect("Dedup.connectedComponents", e, CcDriverPairs) match {
       case Some(rows) =>
         sess.sparkContext.setLocalProperty(CcRoundsProperty, "0")
         return driverUnionFindEdges(sess, rows.map(r => (r.getLong(0), r.getLong(1))))
       case None =>
     }
-    val sym = symPlan
+    val sym = e.union(e.select(col("dst"), col("src"))).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nSym = sym.count()
     val rel = reliableCuts(sess, nSym)
@@ -1233,7 +1234,8 @@ object Dedup {
     def roots: Iterator[(Long, Long)] = parent.keys.toArray.iterator.map(n => (n, find(n)))
   }
 
-  /** Driver-side union-find over a collected (symmetric) edge list. */
+  /** Driver-side union-find over a collected pair list (either
+    * orientation, duplicates allowed). */
   private def driverUnionFindEdges(s: SparkSession,
       edges: Array[(Long, Long)]): DataFrame = {
     val uf = new UnionFind

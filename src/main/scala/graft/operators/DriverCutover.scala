@@ -21,7 +21,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *
   * | site                          | cap  | unit                              |
   * |-------------------------------|------|-----------------------------------|
-  * | `Dedup.connectedComponents`   | 2²⁰  | directed (symmetrized) edges      |
+  * | `Dedup.connectedComponents`   | 2¹⁹  | input pairs                       |
   * | `Dedup.cellPrune`             | 2¹⁶  | embedding rows (footer count)     |
   * | `Graphs.pageRank`             | 2²²  | directed edges, bound 2·lineitem  |
   * | `EntityResolution.fuzzyParts` | 2²¹  | matched candidate name pairs      |

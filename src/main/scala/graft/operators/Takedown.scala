@@ -266,7 +266,8 @@ object Takedown {
     * literal `read_parquet` globs over the SAME staged files (an
     * independent reader checking the audit's physical claims);
     * staleness is handled by an inner `_AUDIT-<input fp>-<code fp>`
-    * marker instead of the usual [[ArtifactCache.key]] dir. */
+    * marker (plus [[ArtifactCache.cutoverTag]]) instead of the usual
+    * [[ArtifactCache.key]] dir. */
   def erasureAuditRoot(dir: String): String =
     s"/tmp/graft-erasure-audit/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}"
 
@@ -274,7 +275,8 @@ object Takedown {
     val root = erasureAuditRoot(dir)
     val fp = ArtifactCache.fingerprint(
       new java.io.File(s"$dir/documents.parquet"))
-    val marker = new java.io.File(s"$root/_AUDIT-$fp-${ArtifactCache.codeFingerprint}")
+    val marker = new java.io.File(
+      s"$root/_AUDIT-$fp-${ArtifactCache.codeFingerprint}${ArtifactCache.cutoverTag}")
     if (!marker.exists()) {
       ArtifactCache.deleteRecursively(new java.io.File(root))
       new java.io.File(root).mkdirs()

@@ -3,16 +3,14 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import org.scalatest.funsuite.AnyFunSuite
-
-import graft.operators.ArtifactCache
+import graft.operators.{ArtifactCache, DriverCutover}
 
 /** The one cache-key derivation: `ArtifactCache.key` must change with
   * the input, every runtime parameter and the engine's code, keep the
   * per-input entry prefix cleanup relies on, and an artifact published
   * under another code fingerprint must be rebuilt, never served.
   */
-class ArtifactCacheSpec extends AnyFunSuite {
+class ArtifactCacheSpec extends SparkSpec {
 
   private val family = "spec-artifactcache"
 
@@ -56,6 +54,22 @@ class ArtifactCacheSpec extends AnyFunSuite {
       // a regenerated input (new length) changes the fingerprint
       Files.write(new File(dir, "in.parquet").toPath, "v2-longer".getBytes("UTF-8"))
       assert(ArtifactCache.keyFor("c0", family, dir, "in.parquet", 5, 0.9) != base)
+    }
+  }
+
+  test("a set driver cutover cap changes the key; unset, the key is unchanged") {
+    withInput { dir =>
+      assert(spark.conf.getOption(DriverCutover.MaxRowsKey).isEmpty)
+      val unset = ArtifactCache.key(family, dir, "in.parquet", 5)
+      assert(unset == ArtifactCache.keyFor(ArtifactCache.codeFingerprint,
+        family, dir, "in.parquet", 5))
+      val forced = withConf(DriverCutover.MaxRowsKey -> "0")(
+        ArtifactCache.key(family, dir, "in.parquet", 5))
+      val lowered = withConf(DriverCutover.MaxRowsKey -> "1000")(
+        ArtifactCache.key(family, dir, "in.parquet", 5))
+      assert(Set(unset, forced, lowered).size == 3)
+      assert(forced.startsWith(unset), "the per-input entry prefix must not change")
+      assert(ArtifactCache.key(family, dir, "in.parquet", 5) == unset)
     }
   }
 
