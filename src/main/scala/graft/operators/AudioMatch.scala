@@ -428,9 +428,9 @@ object AudioMatch {
     * the crash-resume spec can stop exactly between the phases. */
   private[graft] def compactKeyDfPhaseA(s: SparkSession, path: String): Boolean = {
     val root = new java.io.File(s"$path/keydf")
-    val marker = new java.io.File(root, ".compact-commit")
     val tmp = new java.io.File(root, ".compact-tmp")
-    if (marker.exists()) return true
+    val marker = CommitMarker(root.getPath, "compact")
+    if (marker.pending) return true
     val files = keyDfParts(root)
     if (files.size <= 1) return false
     ArtifactCache.deleteRecursively(tmp)
@@ -440,17 +440,11 @@ object AudioMatch {
     // the marker records the EXACT inputs merged into the temp dir:
     // phase B may strip only these — a partial appended by an insert
     // racing the compaction is absent from the merge and must survive.
-    // Written to a temp name and PROMOTED atomically: a plain write
-    // crashing mid-way leaves a truncated marker listing a prefix of
-    // the merged inputs, and resume would delete only those while the
-    // merged temp already holds ALL inputs' counts — double-counted
-    // dfs push keys over MaxKeyDf and silently drop matches, in the
-    // exact crash path the marker exists to make safe
-    val markerTmp = new java.io.File(root, ".compact-commit.tmp")
-    java.nio.file.Files.write(markerTmp.toPath,
-      files.map(_.getName).mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(markerTmp.toPath, marker.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // A truncated list (a crash mid-write) would make resume delete
+    // only a prefix while the temp holds ALL inputs' counts —
+    // double-counted dfs push keys over MaxKeyDf and silently drop
+    // matches — hence the atomic commit
+    marker.commit(files.map(_.getName))
     true
   }
 
@@ -466,8 +460,7 @@ object AudioMatch {
     * cost. Probe-identical by algebra: sum over the merged partial ==
     * sum over the originals.
     *
-    * The [[graft.streaming.EventStream.compactStaging]] discipline,
-    * adapted to a flat parquet dir:
+    * The [[CommitMarker]] protocol over a flat parquet dir:
     *  - phase A ([[compactKeyDfPhaseA]]): merged counts → hidden temp,
     *    then a commit marker listing exactly the merged inputs;
     *  - phase B, re-runnable from the marker alone: delete exactly the
@@ -487,21 +480,11 @@ object AudioMatch {
   def compactKeyDf(s: SparkSession, path: String): Unit = {
     if (!compactKeyDfPhaseA(s, path)) return
     val root = new java.io.File(s"$path/keydf")
-    val marker = new java.io.File(root, ".compact-commit")
-    val tmp = new java.io.File(root, ".compact-tmp")
-    val merged = new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-      .split("\n").filter(_.nonEmpty).toSet
+    val marker = CommitMarker(root.getPath, "compact")
+    val merged = marker.read().all.toSet
     keyDfParts(root).filter(f => merged.contains(f.getName)).foreach(_.delete())
-    Option(tmp.listFiles()).toSeq.flatten
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .foreach { f =>
-        java.nio.file.Files.move(f.toPath,
-          new java.io.File(root, s"compacted-${f.getName}").toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    marker.delete()
-    ArtifactCache.deleteRecursively(tmp)
+    CommitMarker.adopt(new java.io.File(root, ".compact-tmp"), root, "compacted-")
+    marker.clear()
   }
 
   /** The probe core over in-memory relations: landmark postings, raw
@@ -557,19 +540,8 @@ object AudioMatch {
     // mid-swap guard: between compactKeyDf's commit marker and the
     // final adoption the merged df counts live only in the hidden temp
     // dir — probing would undercount every key's df and re-admit
-    // over-cap keys. Finish the compaction first (re-run it).
-    if (new java.io.File(s"$path/keydf/.compact-commit").exists())
-      throw new IllegalStateException(
-        s"pending keydf compaction at $path: re-run compactKeyDf to " +
-          "completion before probing")
-    if (MediaIndexOps.pendingApply(path))
-      throw new IllegalStateException(
-        s"pending tombstone compaction at $path: re-run MediaIndexOps.compact " +
-          "to completion before probing")
-    if (MediaIndexOps.pendingConsolidate(path, "landmarks"))
-      throw new IllegalStateException(
-        s"pending batch consolidation at $path: re-run " +
-          "MediaIndexOps.consolidateBatches to completion before probing")
+    // over-cap keys; tombstone compaction and consolidation likewise
+    CommitMarker.requireSettled(path, "landmarks")
     if (!ArtifactCache.hasVisibleParquet(new java.io.File(s"$path/landmarks")))
       clips.select(col("clip_id"), lit(0L).as("track_id"),
         lit(0L).as("offset_frames"), lit(0L).as("votes")).limit(0)

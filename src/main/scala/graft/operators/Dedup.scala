@@ -359,14 +359,7 @@ object Dedup {
     * lifecycle family. */
   private[graft] def liveShinglePostings(s: SparkSession,
       path: String): DataFrame = {
-    if (MediaIndexOps.pendingApply(path))
-      throw new IllegalStateException(
-        s"pending tombstone compaction at $path: re-run MediaIndexOps.compact " +
-          "to completion before probing")
-    if (MediaIndexOps.pendingConsolidate(path, "postings"))
-      throw new IllegalStateException(
-        s"pending batch consolidation at $path: re-run " +
-          "MediaIndexOps.consolidateBatches to completion before probing")
+    CommitMarker.requireSettled(path, "postings")
     // EMPTY-STORE GUARD (the family's): an all-victim takedown leaves
     // the postings dir with only markers — no parquet footer anywhere,
     // so a naive read dies on schema inference. An empty store has no
@@ -674,20 +667,15 @@ object Dedup {
     import s.implicits._
     val thetaT = math.acos(math.max(-1.0, math.min(1.0, threshold)))
     val maxAngle = thetaT / 2
-    def dot(a: Seq[Double], b: Seq[Double]): Double = {
-      var t = 0.0; var i = 0
-      while (i < a.length) { t += a(i) * b(i); i += 1 }
-      t
-    }
     def ang(a: Seq[Double], na: Double, b: Seq[Double], nb: Double): Double =
-      math.acos(math.max(-1.0, math.min(1.0, dot(a, b) / (na * nb))))
+      math.acos(math.max(-1.0, math.min(1.0, Similarity.dot(a, b) / (na * nb))))
     // (cent_id, emb, nrm), kept cent_id-ascending like collectCells
     type Cent = (Long, Seq[Double], Double)
     def assignTo(cents: IndexedSeq[Cent]): Array[Int] =
       rows.map { case (_, em, _) =>
         var best = Double.NegativeInfinity; var bi = 0; var i = 0
         while (i < cents.size) {
-          val sc = dot(em, cents(i)._2) / cents(i)._3
+          val sc = Similarity.dot(em, cents(i)._2) / cents(i)._3
           if (sc > best) { best = sc; bi = i }
           i += 1
         }
@@ -711,7 +699,7 @@ object Dedup {
       }
       cents.indices.filter(cnts(_) > 0).map { c =>
         val m = sums(c).map(_ / cnts(c)).toSeq
-        (cents(c)._1, m, math.sqrt(dot(m, m)))
+        (cents(c)._1, m, math.sqrt(Similarity.dot(m, m)))
       }.sortBy(_._1).toIndexedSeq
     }
     // seeds: pmod(xxhash64(vec_id), stride) == 0 — the exact engine

@@ -31,8 +31,7 @@ object IndexStore {
     * alone). The lifecycle family's guard discipline, local-FS
     * contract like the rest of it. */
   def pendingMaintenance(path: String): Boolean =
-    new java.io.File(path, ".merge-commit").exists() ||
-      new java.io.File(path, ".delete-commit").exists()
+    Seq("merge", "delete").exists(CommitMarker(path, _).pending)
 
   def load(spark: SparkSession, path: String): DataFrame = {
     if (pendingMaintenance(path))
@@ -164,7 +163,7 @@ object IndexStore {
     * Cost is O(victims + base-rows-under-touched-letters), never
     * O(base). Delete ∘ merge ≡ rebuild over the remaining corpus
     * (spec-pinned); an empty victim set is a byte-level no-op. Crash
-    * safety is the family's two-phase marker protocol (shared with
+    * safety is the [[CommitMarker]] protocol (shared with
     * [[merge]] via [[phaseA]]/[[phaseB]]): reads refuse while a marker
     * is pending ([[pendingMaintenance]]), and re-running the entry
     * point resumes the crashed op before applying the new one.
@@ -204,8 +203,7 @@ object IndexStore {
     * op's un-applied letters on the floor). */
   private[graft] def resumePending(spark: SparkSession, path: String): Unit =
     Seq("merge", "delete").foreach { kind =>
-      if (new java.io.File(path, s".$kind-commit").exists())
-        phaseB(spark, path, kind)
+      if (CommitMarker(path, kind).pending) phaseB(spark, path, kind)
     }
 
   /** Phase A of both maintenance ops: stage the touched letters'
@@ -223,12 +221,7 @@ object IndexStore {
     val stage = new java.io.File(path, s".$kind-tmp")
     ArtifactCache.deleteRecursively(stage)
     rewrite.write.mode("overwrite").parquet(stage.getPath)
-    val markerTmp = new java.io.File(path, s".$kind-commit.tmp")
-    java.nio.file.Files.write(markerTmp.toPath,
-      s"touched:${touched.mkString(",")}".getBytes("UTF-8"))
-    java.nio.file.Files.move(markerTmp.toPath,
-      new java.io.File(path, s".$kind-commit").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    CommitMarker(path, kind).commit(Seq(s"touched:${touched.mkString(",")}"))
     true
   }
 
@@ -236,25 +229,16 @@ object IndexStore {
     * the touched letters from the staged rewrite (disk-to-disk), drop
     * letter dirs the rewrite emptied entirely (a merge never empties
     * one, a delete can), then clear the stage (atomically retired —
-    * see [[MediaIndexOps.applyStagedRewrite]], THE one copy of this
-    * crash-critical protocol) and the marker LAST. A crash at any
-    * point re-runs to the identical end state. */
+    * see [[MediaIndexOps.applyStagedRewrite]]) and the marker LAST. A
+    * crash at any point re-runs to the identical end state. */
   private[graft] def phaseB(spark: SparkSession, path: String, kind: String): Unit = {
-    val marker = new java.io.File(path, s".$kind-commit")
-    val raw = new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-    // marker CONTRACT check (the family idiom — [[MediaIndexOps]] and
-    // [[IvfIndex]] phase Bs enforce the same): a corrupted or foreign
-    // marker must fail loudly, never misparse as garbage touched
-    // letters that skip the emptied-letter drop and leave deleted
-    // postings being served
-    require(raw.startsWith("touched:"),
-      s"unrecognized $kind marker at $marker (no touched: line): " +
-        "inspect the staged state before resuming")
-    val touched =
-      raw.stripPrefix("touched:").trim.split(",").filter(_.nonEmpty).toSeq
+    // a corrupted or foreign marker must fail loudly, never misparse
+    // as garbage touched letters that skip the emptied-letter drop and
+    // leave deleted postings being served
+    val marker = CommitMarker(path, kind)
+    val touched = marker.read("touched").list("touched")
     MediaIndexOps.applyStagedRewrite(spark,
       new java.io.File(path, s".$kind-tmp"), path, Seq("letter"), touched)
-    marker.delete()
+    marker.clear()
   }
 }

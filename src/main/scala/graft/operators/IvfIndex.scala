@@ -204,37 +204,14 @@ object IvfIndex {
       q: DataFrame, k: Int, nprobe: Int, rerank: Int): DataFrame = {
     val sq8 = ensureSq8(s, path)
     val cells = Similarity.cellsOfArtifact(s, path)
-    // probe ranking on the DRIVER (the annRecall rankedProbes idiom):
-    // the query panel is bounded by contract and the centroid model is
-    // already driver state, so the per-query top-nprobe cells are
-    // queries × C dots of plain Scala — this replaces TWO jobs (the
-    // probeCells window + the probed-id distinct collect) with one
-    // bounded q.collect(). Same dot accumulation order as array_dot
-    // (ascending index) and the same (cos desc, cent_id asc) tie-break
-    // as probeCells, so the probe set is identical by construction.
+    // probe ranking on the DRIVER ([[Similarity.rankProbes]]): one
+    // bounded q.collect() replaces TWO jobs (the probeCells window +
+    // the probed-id distinct collect) with the identical probe set
     val qRows = q.select(col("query_id"), col("q_emb"), col("q_nrm"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_._1).toIndexedSeq
-    def ddot(a: Seq[Double], b: Seq[Double]): Double = {
-      var t = 0.0; var i = 0
-      while (i < a.length) { t += a(i) * b(i); i += 1 }
-      t
-    }
     val probeRows = qRows.flatMap { case (qid, qe, qn) =>
-      cells.ids.indices
-        .map(i => (cells.ids(i), ddot(qe, cells.embs(i)) / (qn * cells.nrms(i))))
-        // Spark's desc sort semantics, not Scala's: java.lang.Double
-        // TOTAL order places NaN greatest (→ FIRST under desc, where
-        // sortBy(-cos) put it last), and +0.0 added to each score
-        // collapses -0.0/0.0 the way Spark's sort normalization does —
-        // so a zero-norm query or degenerate centroid (cos = NaN)
-        // selects the same probe set as the replaced probeCells window
-        // (r20, ADVICE)
-        .sortWith { case ((ca, sa), (cb, sb)) =>
-          val c = java.lang.Double.compare(sb + 0.0, sa + 0.0)
-          c < 0 || (c == 0 && ca < cb)
-        }
-        .take(nprobe).map { case (cid, _) => (qid, qe, qn, cid) }
+      Similarity.rankProbes(qe, qn, cells, nprobe).map(cid => (qid, qe, qn, cid))
     }
     val probedIds = probeRows.map(_._4).distinct.sorted
     import s.implicits._
@@ -365,7 +342,7 @@ object IvfIndex {
   /** True while a [[compact]] is mid-swap — probes refuse and the
     * caller must re-run compact to completion first. */
   private[graft] def pendingApply(path: String): Boolean =
-    new java.io.File(s"$path/deleted/.apply-commit").exists()
+    CommitMarker(s"$path/deleted", "apply").pending
 
   /** Physically drop tombstoned vectors: rewrite ONLY the cells that
     * contain one (bounded driver id set, same policy as
@@ -373,8 +350,8 @@ object IvfIndex {
     * untouched cells' bytes are never rewritten — compaction cost ∝
     * deletions + touched cells, not index size. A cell emptied
     * entirely is removed explicitly. Tombstones are cleared afterwards
-    * (they are now physically gone). Crash safety is the family's
-    * two-phase marker protocol ([[MediaIndexOps.compact]]'s shape):
+    * (they are now physically gone). Crash safety is the
+    * [[CommitMarker]] protocol ([[MediaIndexOps.compact]]'s shape):
     * phase A stages the touched cells' survivor slice to disk and
     * commits a marker naming the tombstone files being applied plus
     * the touched cells; phase B — re-runnable from the marker and the
@@ -392,8 +369,7 @@ object IvfIndex {
     * appends a tombstone file absent from the marker, which survives
     * for the next compaction). */
   private[graft] def compactPhaseA(s: SparkSession, path: String): Boolean = {
-    val marker = new java.io.File(s"$path/deleted/.apply-commit")
-    if (marker.exists()) return true
+    if (pendingApply(path)) return true
     val delDir = new java.io.File(s"$path/deleted")
     val snapshot = Option(delDir.listFiles()).toSeq.flatten
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -416,12 +392,8 @@ object IvfIndex {
         .filter(col("cent_id").isin(touched.map(_.toLong).toIndexedSeq: _*))
         .join(broadcast(deleted), Seq("vec_id"), "left_anti")
         .write.mode("overwrite").parquet(stage.getPath)
-    val markerTmp = new java.io.File(s"$path/deleted/.apply-commit.tmp")
-    java.nio.file.Files.write(markerTmp.toPath,
-      (snapshot.map(f => s"tomb:${f.getName}") :+
-        s"touched:${touched.mkString(",")}").mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(markerTmp.toPath, marker.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    CommitMarker(s"$path/deleted", "apply").commit(
+      snapshot.map(f => s"tomb:${f.getName}") :+ s"touched:${touched.mkString(",")}")
     true
   }
 
@@ -430,21 +402,12 @@ object IvfIndex {
     * retirement makes the resume inference safe), the marker's
     * tombstone files clear exactly, and the marker drops LAST. */
   private[graft] def compactPhaseB(s: SparkSession, path: String): Unit = {
-    val marker = new java.io.File(s"$path/deleted/.apply-commit")
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-      .split("\n").filter(_.nonEmpty)
-    require(lines.exists(_.startsWith("touched:")),
-      s"unrecognized compact marker at $marker (no touched: line): " +
-        "inspect the staged state before re-running the compaction")
-    val listed = lines.filter(_.startsWith("tomb:"))
-      .map(_.stripPrefix("tomb:")).toSet
-    val touched = lines.find(_.startsWith("touched:"))
-      .map(_.stripPrefix("touched:").trim).filter(_.nonEmpty)
-      .map(_.split(",").toSeq).getOrElse(Seq.empty)
+    val marker = CommitMarker(s"$path/deleted", "apply")
+    val lines = marker.read("touched")
+    val listed = lines.every("tomb")
     MediaIndexOps.applyStagedRewrite(s,
       new java.io.File(s"$path/assigned/.del-tmp"), s"$path/assigned",
-      Seq("cent_id"), touched)
+      Seq("cent_id"), lines.list("touched"))
     // clear exactly the applied tombstone files (a racing delete()'s
     // new file survives for the next compaction)
     val delDir = new java.io.File(s"$path/deleted")
@@ -458,7 +421,7 @@ object IvfIndex {
       ArtifactCache.deleteRecursively(new java.io.File(s"$path-sq8"))
       sq8Validated.remove(s"$path-sq8")
     }
-    marker.delete()
+    marker.clear()
     if (Option(delDir.listFiles()).exists(_.forall(f =>
         !f.getName.endsWith(".parquet"))))
       ArtifactCache.deleteRecursively(delDir)

@@ -108,13 +108,13 @@ object MediaGroupsInc {
     * stays safe throughout: the latest label generation is never
     * touched by the swap. */
   private[graft] def pendingCompact(path: String): Boolean =
-    new java.io.File(s"$path/.compact-commit").exists()
+    CommitMarker(path, "compact").pending
 
   /** True while a [[delete]] is mid-apply — [[ingest]] AND
     * [[currentLabels]] refuse (the delete rewrites the latest label
     * generation in place) until the delete is re-run to completion. */
   private[graft] def pendingDelete(path: String): Boolean =
-    new java.io.File(s"$path/.delete-commit").exists()
+    CommitMarker(path, "delete").pending
 
   /** Compact the accrued generation debt — one `batch=N` dir per
     * ingest under `wins`/`windf`/`hv`/`pairs`, a `removed` store, a
@@ -132,11 +132,10 @@ object MediaGroupsInc {
     * `ingested/batch-N` replay markers are never touched, so a clean
     * replay of a consumed generation still skips its re-ingest.
     *
-    * Crash safety is the family's two-phase marker protocol
-    * ([[MediaIndexOps.consolidateBatches]]): phase A builds every
-    * merged store under hidden `.compact-tmp` siblings, then commits
-    * via atomic marker rename; phase B — re-runnable from the marker
-    * alone — swaps each tmp into `batch=<newest>`, deletes the
+    * Crash safety is the [[CommitMarker]] protocol: phase A builds
+    * every merged store under hidden `.compact-tmp` siblings, then
+    * commits the consumed ids per store; phase B — re-runnable from
+    * the marker alone — swaps each tmp into `batch=<newest>`, deletes the
     * consumed dirs, folds meta, prunes labels, and drops the marker
     * last. While the marker exists [[ingest]] refuses. Run from the
     * single writer between ingests (on a streamed state: between
@@ -152,8 +151,7 @@ object MediaGroupsInc {
     * it). Split out so the crash-resume spec can stop between the
     * phases. */
   private[graft] def compactPhaseA(s: SparkSession, path: String): Boolean = {
-    val marker = new java.io.File(s"$path/.compact-commit")
-    if (marker.exists()) return true
+    if (pendingCompact(path)) return true
     require(!pendingDelete(path),
       s"pending delete at $path: run delete to completion before compacting")
     val gens = batchDirs(path, "wins")
@@ -229,16 +227,11 @@ object MediaGroupsInc {
     }
     // the marker records the consumed ids PER STORE — phase B sweeps
     // exactly these, so a store that was not merged keeps its dirs
-    val markerTmp = new java.io.File(s"$path/.compact-commit.tmp")
-    java.nio.file.Files.write(markerTmp.toPath,
-      (s"gen:${gens.max}\n" +
-        s"wins:${(if (mergeWins) gens else Seq.empty).mkString(",")}\n" +
-        s"windf:${(if (mergeWindf) windfIds else Seq.empty).mkString(",")}\n" +
-        s"hv:${(if (mergeHv) hvIds else Seq.empty).mkString(",")}\n" +
-        s"pairs:${(if (mergePairs) pairIds else Seq.empty).mkString(",")}")
-        .getBytes("UTF-8"))
-    java.nio.file.Files.move(markerTmp.toPath, marker.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    def consumed(tag: String, merged: Boolean, ids: Seq[Int]) =
+      s"$tag:${(if (merged) ids else Seq.empty).mkString(",")}"
+    CommitMarker(path, "compact").commit(Seq(s"gen:${gens.max}",
+      consumed("wins", mergeWins, gens), consumed("windf", mergeWindf, windfIds),
+      consumed("hv", mergeHv, hvIds), consumed("pairs", mergePairs, pairIds)))
     true
   }
 
@@ -246,24 +239,15 @@ object MediaGroupsInc {
     * idempotent (swap-if-tmp-present, delete-consumed, recompute the
     * meta fold over whatever files remain, prune below the latest). */
   private[graft] def compactPhaseB(s: SparkSession, path: String): Unit = {
-    val marker = new java.io.File(s"$path/.compact-commit")
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").split("\n")
-    val maxGen = lines.head.stripPrefix("gen:").trim.toInt
-    def idsOf(tag: String): Seq[Int] = lines.find(_.startsWith(s"$tag:"))
-      .map(_.stripPrefix(s"$tag:").trim).filter(_.nonEmpty)
-      .map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq.empty)
+    val marker = CommitMarker(path, "compact")
+    val lines = marker.read("gen")
+    val maxGen = lines.field("gen").get.toInt
     def swap(sub: String): Unit = {
-      val ids = idsOf(sub)
+      val ids = lines.ids(sub)
       if (ids.isEmpty) return // store was not merged — leave it alone
       val root = s"$path/$sub"
-      val tmp = new java.io.File(s"$root/.compact-tmp")
-      if (tmp.exists()) {
-        ArtifactCache.deleteRecursively(new java.io.File(s"$root/batch=$maxGen"))
-        java.nio.file.Files.move(tmp.toPath,
-          new java.io.File(s"$root/batch=$maxGen").toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
+      CommitMarker.swapIn(new java.io.File(s"$root/.compact-tmp"),
+        new java.io.File(s"$root/batch=$maxGen"))
       // sweep exactly the consumed ids the marker recorded (the merged
       // store landed under batch=<maxGen>)
       ids.filter(_ != maxGen).foreach(i =>
@@ -271,11 +255,11 @@ object MediaGroupsInc {
     }
     Seq("wins", "windf", "hv", "pairs").foreach(swap)
     // the hv fold this marker records satisfied any pending prune hint
-    if (idsOf("hv").nonEmpty)
+    if (lines.ids("hv").nonEmpty)
       new java.io.File(s"$path/.hv-prune-due").delete()
     // removals are folded into the live pair rewrite — only when that
     // rewrite actually ran (the pairs line is recorded exactly then)
-    if (idsOf("pairs").nonEmpty)
+    if (lines.ids("pairs").nonEmpty)
       ArtifactCache.deleteRecursively(new java.io.File(s"$path/removed"))
     // meta folds to one "globalMin,globalMax" — write-merged-first so a
     // crash mid-delete still reconstructs the same fold from survivors
@@ -300,7 +284,7 @@ object MediaGroupsInc {
           f.getName.stripPrefix("gen=").toInt < g)
         .foreach(ArtifactCache.deleteRecursively)
     }
-    marker.delete()
+    marker.clear()
   }
 
   /** Remove media from the group state — the takedown every media
@@ -341,10 +325,10 @@ object MediaGroupsInc {
     * both resurrects a removed pair and emits a never-emitted one),
     * and the invariant survives further ingests and compactions.
     *
-    * Crash safety is the family's two-phase marker: phase A stages
+    * Crash safety is the [[CommitMarker]] protocol: phase A stages
     * the negative partials, the rewritten removed store, and the
     * fresh verified pairs under hidden `.del-tmp` dirs, then commits
-    * the victim list via atomic marker rename; phase B — re-runnable
+    * the victim list; phase B — re-runnable
     * from the marker alone — rewrites the touched wins partitions,
     * adopts the staged artifacts, recomputes the closure, and drops
     * the marker last. While the marker exists [[ingest]] and
@@ -367,8 +351,7 @@ object MediaGroupsInc {
     * marker is pending (fresh or inherited from a crashed run). */
   private[graft] def deletePhaseA(s: SparkSession, path: String,
       victims: Seq[Long], threshold: Double, maxDf: Int): Boolean = {
-    val marker = new java.io.File(s"$path/.delete-commit")
-    if (marker.exists()) return true
+    if (pendingDelete(path)) return true
     require(!pendingCompact(path),
       s"pending state compaction at $path: run compactState to completion " +
         "before deleting")
@@ -526,14 +509,10 @@ object MediaGroupsInc {
       (keepRemoved, touchedPks, stagedLeaves)
     } finally vwinsP.unpersist()
     val (keepRemoved, touchedPks, stagedLeaves) = staged
-    val markerTmp = new java.io.File(s"$path/.delete-commit.tmp")
-    java.nio.file.Files.write(markerTmp.toPath,
-      (s"ids:${victims.mkString(",")}\n" +
-        s"removed:${if (keepRemoved) "keep" else "drop"}\n" +
-        s"touched:${touchedPks.mkString(",")}\n" +
-        s"stagedleaves:${stagedLeaves.mkString(",")}").getBytes("UTF-8"))
-    java.nio.file.Files.move(markerTmp.toPath, marker.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    CommitMarker(path, "delete").commit(Seq(s"ids:${victims.mkString(",")}",
+      s"removed:${if (keepRemoved) "keep" else "drop"}",
+      s"touched:${touchedPks.mkString(",")}",
+      s"stagedleaves:${stagedLeaves.mkString(",")}"))
     true
   }
 
@@ -543,21 +522,13 @@ object MediaGroupsInc {
     * `removed` disposition comes from the marker (never inferred from
     * a half-applied tree). */
   private[graft] def deletePhaseB(s: SparkSession, path: String): Unit = {
-    val marker = new java.io.File(s"$path/.delete-commit")
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").split("\n")
-    val victims = lines.head.stripPrefix("ids:")
-      .split(",").filter(_.nonEmpty).map(_.toLong).toSeq
-    val keepRemoved = lines.exists(_.trim == "removed:keep")
-    // the touched list is part of the marker CONTRACT — a marker
-    // without the line (foreign / corrupted) must fail loudly, never
-    // resume into a half-applied takedown that skips the wins rewrite
-    require(lines.exists(_.startsWith("touched:")),
-      s"unrecognized delete marker at $marker (no touched: line): " +
-        "inspect the staged state before re-running the takedown")
-    val touched = lines.find(_.startsWith("touched:"))
-      .map(_.stripPrefix("touched:").trim).filter(_.nonEmpty)
-      .map(_.split(",").toSeq).getOrElse(Seq.empty)
+    val marker = CommitMarker(path, "delete")
+    // the touched list is part of the marker contract: without it the
+    // resume would skip the wins rewrite
+    val lines = marker.read("touched")
+    val victims = lines.list("ids").map(_.toLong)
+    val keepRemoved = lines.field("removed").contains("keep")
+    val touched = lines.list("touched")
     // 1. adopt phase A's staged survivor leaves — the stage is written
     // in the live leaf layout, so adoption is a per-leaf directory
     // MOVE, never a second read+rewrite of the slice (which doubled
@@ -573,22 +544,16 @@ object MediaGroupsInc {
         val Array(b, w) = pk.split("/")
         new java.io.File(s"$path/wins/batch=$b/wb=$w")
       }
-      lines.find(_.startsWith("stagedleaves:"))
-        .map(_.stripPrefix("stagedleaves:").trim) match {
-        case Some(sl) =>
-          val stagedSet = sl.split(",").filter(_.nonEmpty).toSet
+      lines.field("stagedleaves") match {
+        case Some(_) =>
+          val stagedSet = lines.list("stagedleaves").toSet
           touched.foreach { pk =>
             val Array(b, w) = pk.split("/")
-            val staged = new java.io.File(s"${stagedWins.getPath}/batch=$b/wb=$w")
-            if (stagedSet(pk)) {
-              if (staged.exists()) {
-                val live = liveLeaf(pk)
-                ArtifactCache.deleteRecursively(live)
-                live.getParentFile.mkdirs()
-                java.nio.file.Files.move(staged.toPath, live.toPath,
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              } // else: already adopted by a crashed run — leave it
-            } else ArtifactCache.deleteRecursively(liveLeaf(pk))
+            // a staged leaf already gone was adopted by a crashed run
+            if (stagedSet(pk))
+              CommitMarker.swapIn(
+                new java.io.File(s"${stagedWins.getPath}/batch=$b/wb=$w"), liveLeaf(pk))
+            else ArtifactCache.deleteRecursively(liveLeaf(pk))
           }
         case None =>
           // marker from the pre-manifest format (flat stage): replay
@@ -611,33 +576,18 @@ object MediaGroupsInc {
     }
     // 2. adopt staged artifacts (part names carry job UUIDs — moves
     // are collision-free across repeated deletes)
-    def adopt(stageDir: String, liveDir: String): Unit = {
-      val files = Option(new java.io.File(stageDir).listFiles()).toSeq.flatten
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      if (files.nonEmpty) {
-        val live = new java.io.File(liveDir)
-        live.mkdirs()
-        files.foreach(f => java.nio.file.Files.move(f.toPath,
-          new java.io.File(live, f.getName).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING))
-      }
-      ArtifactCache.deleteRecursively(new java.io.File(stageDir))
-    }
-    adopt(s"$path/windf/.del-tmp", s"$path/windf/batch=-1")
-    adopt(s"$path/pairs/.del-tmp", s"$path/pairs/batch=-1")
+    Seq("windf", "pairs").foreach(sub => CommitMarker.adopt(
+      new java.io.File(s"$path/$sub/.del-tmp"), new java.io.File(s"$path/$sub/batch=-1")))
     // 3. removed store: swap in the rewrite, or drop it entirely when
     // the delete left nothing removed (everything resurrected / no
     // victim pairs and no prior store)
     if (keepRemoved) {
       val tmp = new java.io.File(s"$path/removed/.del-tmp")
-      if (tmp.exists()) {
+      if (tmp.exists())
         Option(new java.io.File(s"$path/removed").listFiles()).toSeq.flatten
           .filter(f => f.isDirectory && f.getName.startsWith("batch="))
           .foreach(ArtifactCache.deleteRecursively)
-        java.nio.file.Files.move(tmp.toPath,
-          new java.io.File(s"$path/removed/batch=-1").toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
+      CommitMarker.swapIn(tmp, new java.io.File(s"$path/removed/batch=-1"))
     } else ArtifactCache.deleteRecursively(new java.io.File(s"$path/removed"))
     // 4. VICTIM-SCOPED re-closure over the post-delete live relation.
     // Removals break the warm-seed superset contract, but they can
@@ -715,9 +665,7 @@ object MediaGroupsInc {
         .write.mode("overwrite").parquet(tmpLabels.getPath)
       forest.unpersist()
       affectedNodes.unpersist()
-      ArtifactCache.deleteRecursively(genDir)
-      java.nio.file.Files.move(tmpLabels.toPath, genDir.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      CommitMarker.swapIn(tmpLabels, genDir)
     } else {
       // no readable previous generation (crash inside the swap window,
       // or a state that never closed): full cold closure
@@ -733,7 +681,7 @@ object MediaGroupsInc {
     // generation) and prunes rows with no surviving wins posting
     java.nio.file.Files.write(
       new java.io.File(s"$path/.hv-prune-due").toPath, Array.emptyByteArray)
-    marker.delete()
+    marker.clear()
   }
 
   /** Fold one media batch (media_id, content) into the group state and

@@ -38,9 +38,10 @@ import org.apache.spark.sql.functions._
   * deleted media themselves stop matching immediately via the
   * anti-join.
   *
-  * Crash safety follows [[AudioMatch.compactKeyDf]]'s marker protocol,
-  * extended to cover the postings rewrite: phase A stages the negative
-  * partials AND the touched buckets' survivor slice in hidden dirs
+  * Crash safety is the [[CommitMarker]] protocol, as in
+  * [[AudioMatch.compactKeyDf]], extended to cover the postings
+  * rewrite: phase A stages the negative partials AND the touched
+  * buckets' survivor slice in hidden dirs
   * (both to DISK — a takedown flood touches most buckets, and pinning
   * an index-sized slice in memory is the OOM class the
   * [[MediaGroupsInc]] delete already stages around), then commits a
@@ -79,12 +80,12 @@ object MediaIndexOps {
   /** True while a [[compact]] is mid-swap — probes must refuse and the
     * caller must re-run compact to completion first. */
   private[graft] def pendingApply(path: String): Boolean =
-    new java.io.File(s"$path/deleted/.apply-commit").exists()
+    CommitMarker(s"$path/deleted", "apply").pending
 
   /** True while a [[consolidateBatches]] is mid-swap — same refusal
     * contract as [[pendingApply]]. */
   private[graft] def pendingConsolidate(path: String, sub: String): Boolean =
-    new java.io.File(s"$path/$sub/.consol-commit").exists()
+    CommitMarker(s"$path/$sub", "consol").pending
 
   /** `batch=` dirs under `root` that still hold parquet data (a
     * marker-only dir — `_SUCCESS` left for streaming replay guards —
@@ -139,9 +140,7 @@ object MediaIndexOps {
       // half-deleted stage can never exist, so "no visible parquet"
       // always means "staged empty", never "cleanup crashed mid-way"
       touched.foreach(dropLeaf)
-    ArtifactCache.deleteRecursively(retired)
-    java.nio.file.Files.move(stage.toPath, retired.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    CommitMarker.swapIn(stage, retired)
     ArtifactCache.deleteRecursively(retired)
   }
 
@@ -158,7 +157,7 @@ object MediaIndexOps {
     * re-stage; the layout stays uniformly batch-partitioned, so probes,
     * [[delete]]/[[compact]] and later stages read on unchanged.
     *
-    * Crash safety is the two-phase marker protocol: phase A builds
+    * Crash safety is the [[CommitMarker]] protocol: phase A builds
     * both consolidated dirs under hidden `.consol-tmp` siblings and
     * commits the consumed id lists via atomic marker rename; phase B —
     * re-runnable from the marker alone — swaps the newest batch dir
@@ -176,8 +175,7 @@ object MediaIndexOps {
     require(!pendingApply(path),
       s"pending tombstone compaction at $path: run compact to completion " +
         "before consolidating")
-    val marker = new java.io.File(s"$path/$sub/.consol-commit")
-    if (marker.exists()) return true
+    if (pendingConsolidate(path, sub)) return true
     val subIds = dataBatchIds(s"$path/$sub")
     val dfIds = dataBatchIds(s"$path/keydf")
     if (subIds.size <= 1 && dfIds.size <= 1) return false
@@ -196,48 +194,18 @@ object MediaIndexOps {
         .groupBy(col("key")).agg(sum(col("cnt")).as("cnt"))
         .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
-    val markerTmp = new java.io.File(s"$path/$sub/.consol-commit.tmp")
-    java.nio.file.Files.write(markerTmp.toPath,
-      (s"sub:${subIds.mkString(",")}\nkeydf:${dfIds.mkString(",")}")
-        .getBytes("UTF-8"))
-    java.nio.file.Files.move(markerTmp.toPath, marker.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    CommitMarker(s"$path/$sub", "consol").commit(
+      Seq(s"sub:${subIds.mkString(",")}", s"keydf:${dfIds.mkString(",")}"))
     true
   }
 
   private[graft] def consolidatePhaseB(s: SparkSession, path: String,
       sub: String): Unit = {
-    val marker = new java.io.File(s"$path/$sub/.consol-commit")
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").split("\n")
-    def idsOf(tag: String): Seq[Int] = lines.find(_.startsWith(s"$tag:"))
-      .map(_.stripPrefix(s"$tag:")).filter(_.nonEmpty)
-      .map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq.empty)
-    def swap(root: String, ids: Seq[Int]): Unit = if (ids.size > 1) {
-      val target = new java.io.File(s"$root/batch=${ids.max}")
-      val tmp = new java.io.File(s"$root/.consol-tmp")
-      if (tmp.exists()) { // not yet swapped (or crashed pre-swap): redo
-        ArtifactCache.deleteRecursively(target)
-        java.nio.file.Files.move(tmp.toPath, target.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-      // the parquet job wrote _SUCCESS inside the build, but guard the
-      // crash-between-move-and-verify window anyway: the streaming
-      // replay contract needs the marker file present
-      val ok = new java.io.File(target, "_SUCCESS")
-      if (!ok.exists())
-        java.nio.file.Files.write(ok.toPath, Array.emptyByteArray)
-      ids.filter(_ != ids.max).foreach { i =>
-        val d = new java.io.File(s"$root/batch=$i")
-        ArtifactCache.deleteRecursively(d)
-        d.mkdirs()
-        java.nio.file.Files.write(new java.io.File(d, "_SUCCESS").toPath,
-          Array.emptyByteArray)
-      }
-    }
-    swap(s"$path/$sub", idsOf("sub"))
-    swap(s"$path/keydf", idsOf("keydf"))
-    marker.delete()
+    val marker = CommitMarker(s"$path/$sub", "consol")
+    val lines = marker.read()
+    CommitMarker.swapNewest(s"$path/$sub", "batch=", lines.ids("sub"), ".consol-tmp")
+    CommitMarker.swapNewest(s"$path/keydf", "batch=", lines.ids("keydf"), ".consol-tmp")
+    marker.clear()
   }
 
   /** Apply pending tombstones physically. `sub` is the postings subdir
@@ -270,10 +238,9 @@ object MediaIndexOps {
     require(!pendingConsolidate(path, sub),
       s"pending batch consolidation at $path/$sub: run consolidateBatches " +
         "to completion before compacting")
-    val marker = new java.io.File(s"$path/deleted/.apply-commit")
     val dfStage = new java.io.File(s"$path/keydf/.delete-tmp")
     val subStage = new java.io.File(s"$path/$sub/.del-tmp")
-    if (marker.exists()) return true
+    if (pendingApply(path)) return true
     val snapshot = tombstoneFiles(path)
     if (snapshot.isEmpty) return false
     val deleted = s.read.parquet(snapshot.map(_.getPath): _*)
@@ -306,14 +273,9 @@ object MediaIndexOps {
       postings.filter(partKey.isin(touched.toIndexedSeq: _*))
         .join(broadcast(deleted), Seq(idCol), "left_anti")
         .write.mode("overwrite").parquet(subStage.getPath)
-    val markerTmp = new java.io.File(s"$path/deleted/.apply-commit.tmp")
-    java.nio.file.Files.write(markerTmp.toPath,
-      (snapshot.map(f => s"tomb:${f.getName}") ++
-        Seq(s"parts:${parts.mkString(",")}",
-          s"touched:${touched.mkString(",")}")).mkString("\n")
-        .getBytes("UTF-8"))
-    java.nio.file.Files.move(markerTmp.toPath, marker.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    CommitMarker(s"$path/deleted", "apply").commit(
+      snapshot.map(f => s"tomb:${f.getName}") ++
+        Seq(s"parts:${parts.mkString(",")}", s"touched:${touched.mkString(",")}"))
     true
   }
 
@@ -325,27 +287,15 @@ object MediaIndexOps {
     * empty-partition cleanup both land. */
   private[graft] def compactPhaseB(s: SparkSession, path: String, sub: String,
       idCol: String): Unit = {
-    val marker = new java.io.File(s"$path/deleted/.apply-commit")
+    val marker = CommitMarker(s"$path/deleted", "apply")
     val dfStage = new java.io.File(s"$path/keydf/.delete-tmp")
     val subStage = new java.io.File(s"$path/$sub/.del-tmp")
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-      .split("\n").filter(_.nonEmpty)
-    // the staged-rewrite lines are part of the marker CONTRACT — a
-    // marker without them (foreign / corrupted) must fail loudly,
-    // never resume into a half-applied compaction that skips the
-    // posting rewrite
-    require(lines.exists(_.startsWith("touched:")) &&
-        lines.exists(_.startsWith("parts:")),
-      s"unrecognized compact marker at $marker (no touched:/parts: line): " +
-        "inspect the staged state before re-running the compaction")
-    val listed = lines.filter(_.startsWith("tomb:"))
-      .map(_.stripPrefix("tomb:")).toSet
-    val parts = lines.find(_.startsWith("parts:")).get
-      .stripPrefix("parts:").split(",").toSeq
-    val touched = lines.find(_.startsWith("touched:"))
-      .map(_.stripPrefix("touched:").trim).filter(_.nonEmpty)
-      .map(_.split(",").toSeq).getOrElse(Seq.empty)
+    // the staged-rewrite lines are part of the marker contract: without
+    // them the resume would skip the posting rewrite
+    val lines = marker.read("touched", "parts")
+    val listed = lines.every("tomb")
+    val parts = lines.list("parts")
+    val touched = lines.list("touched")
     val files = tombstoneFiles(path).filter(f => listed.contains(f.getName))
     // only leaf (kb=…) dirs are ever dropped — a batch dir keeps its
     // _SUCCESS marker for the streaming replay guard
@@ -363,19 +313,12 @@ object MediaIndexOps {
         val d = new java.io.File(s"$path/keydf/batch=-1")
         d.mkdirs(); d
       } else new java.io.File(s"$path/keydf")
-      Option(dfStage.listFiles()).toSeq.flatten
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .foreach { f =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(adoptDir, s"deleted-${f.getName}").toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
+      CommitMarker.adopt(dfStage, adoptDir, "deleted-")
     }
     // clear exactly the applied tombstone files (a racing delete()'s
     // new file survives for the next compaction), then the marker LAST
     files.foreach(_.delete())
-    ArtifactCache.deleteRecursively(dfStage)
-    marker.delete()
+    marker.clear()
     val delDir = new java.io.File(s"$path/deleted")
     if (tombstoneFiles(path).isEmpty &&
         Option(delDir.listFiles()).exists(_.forall(f => !f.getName.endsWith(".parquet"))))

@@ -143,18 +143,7 @@ object PerceptualHash {
       maxHamming: Int = MaxHamming): DataFrame = {
     require(maxHamming < Chunks,
       s"pigeonhole exactness needs maxHamming < $Chunks chunks")
-    if (new java.io.File(s"$path/keydf/.compact-commit").exists())
-      throw new IllegalStateException(
-        s"pending keydf compaction at $path: re-run AudioMatch.compactKeyDf " +
-          "to completion before probing")
-    if (MediaIndexOps.pendingApply(path))
-      throw new IllegalStateException(
-        s"pending tombstone compaction at $path: re-run MediaIndexOps.compact " +
-          "to completion before probing")
-    if (MediaIndexOps.pendingConsolidate(path, "chunks"))
-      throw new IllegalStateException(
-        s"pending batch consolidation at $path: re-run " +
-          "MediaIndexOps.consolidateBatches to completion before probing")
+    CommitMarker.requireSettled(path, "chunks")
     // live chunk dfs from the append-only partials: ≤ 65536 rows by
     // the key domain — bounded model state, always broadcastable.
     // Tombstoned images still count toward the df until compaction —
@@ -201,18 +190,7 @@ object PerceptualHash {
       imageCount: Option[Long] = None): DataFrame = {
     require(maxHamming < Chunks,
       s"pigeonhole exactness needs maxHamming < $Chunks chunks")
-    if (new java.io.File(s"$path/keydf/.compact-commit").exists())
-      throw new IllegalStateException(
-        s"pending keydf compaction at $path: re-run AudioMatch.compactKeyDf " +
-          "to completion before probing")
-    if (MediaIndexOps.pendingApply(path))
-      throw new IllegalStateException(
-        s"pending tombstone compaction at $path: re-run MediaIndexOps.compact " +
-          "to completion before probing")
-    if (MediaIndexOps.pendingConsolidate(path, "chunks"))
-      throw new IllegalStateException(
-        s"pending batch consolidation at $path: re-run " +
-          "MediaIndexOps.consolidateBatches to completion before probing")
+    CommitMarker.requireSettled(path, "chunks")
     if (!ArtifactCache.hasVisibleParquet(new java.io.File(s"$path/chunks")))
       return images.select(col("media_id"), lit(0L).as("match_id"),
         lit(0L).as("hamming")).limit(0)
@@ -512,18 +490,7 @@ object PerceptualHash {
     * guards, local-FS contract included. */
   private[graft] def matchAgainstVideo(s: SparkSession, path: String,
       clips: DataFrame): DataFrame = {
-    if (new java.io.File(s"$path/keydf/.compact-commit").exists())
-      throw new IllegalStateException(
-        s"pending keydf compaction at $path: re-run AudioMatch.compactKeyDf " +
-          "to completion before probing")
-    if (MediaIndexOps.pendingApply(path))
-      throw new IllegalStateException(
-        s"pending tombstone compaction at $path: re-run MediaIndexOps.compact " +
-          "to completion before probing")
-    if (MediaIndexOps.pendingConsolidate(path, "frames"))
-      throw new IllegalStateException(
-        s"pending batch consolidation at $path: re-run " +
-          "MediaIndexOps.consolidateBatches to completion before probing")
+    CommitMarker.requireSettled(path, "frames")
     if (!ArtifactCache.hasVisibleParquet(new java.io.File(s"$path/frames")))
       return clips.select(col("clip_id"), lit(0L).as("video_id"),
         lit(0L).as("offset_frames"), lit(0L).as("votes")).limit(0)

@@ -366,11 +366,6 @@ object Similarity {
     val c = cells.ids.size
     val g = math.max(1, if (groups > 0) groups
       else math.ceil(math.sqrt(c.toDouble)).toInt)
-    def dot(a: Seq[Double], b: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
     // stride seeds over cent_id order, then Lloyd: assign each centroid
     // to its max-cosine group, recenter as the member mean
     var gEmbs = (0 until g).map(i => cells.embs(i * c / g))
@@ -543,11 +538,6 @@ object Similarity {
     import graft.functions.VectorFunctions.arrayDot
     def angle(cos: Column): Column =
       acos(least(lit(1.0), greatest(lit(-1.0), cos)))
-    def dot(a: Seq[Double], b: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
     def ang(a: Seq[Double], na: Double, b: Seq[Double], nb: Double): Double =
       math.acos(math.max(-1.0, math.min(1.0, dot(a, b) / (na * nb))))
 
@@ -705,6 +695,37 @@ object Similarity {
       .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cent_id"), col("p_rnk"))
   }
 
+  /** THE driver-side dot product: ascending-index accumulation from
+    * 0.0, the order `array_dot` sums in, so a driver score and the same
+    * score computed in a Spark plan are bit-identical. */
+  private[graft] def dot(a: Seq[Double], b: Seq[Double]): Double = {
+    var t = 0.0; var i = 0
+    while (i < a.length) { t += a(i) * b(i); i += 1 }
+    t
+  }
+
+  /** THE driver-side probe ranking: the `nprobe` cells nearest one query
+    * (embedding `qe`, norm `qn`), in the order [[probeCellsRanked]]'s
+    * window ranks them, so a driver-ranked probe set equals the Spark
+    * one. The query panel is bounded by contract and the centroid model
+    * is already driver state, so this is queries × C dots of plain
+    * Scala instead of a window job plus a probed-id collect. Spark's
+    * desc sort semantics, not Scala's: `java.lang.Double` total order
+    * places NaN greatest (so FIRST under desc), and +0.0 added to each
+    * score merges -0.0 with 0.0 the way Spark's sort normalizes them,
+    * leaving the tie to cent_id ascending. A zero divisor (zero-norm
+    * query or centroid) scores NaN here; the Spark plan's ANSI division
+    * raises DIVIDE_BY_ZERO on it instead. */
+  private[graft] def rankProbes(qe: Seq[Double], qn: Double, cells: CellIndex,
+      nprobe: Int): Seq[Long] =
+    cells.ids.indices
+      .map(i => (cells.ids(i), dot(qe, cells.embs(i)) / (qn * cells.nrms(i)) + 0.0))
+      .sortWith { case ((ca, sa), (cb, sb)) =>
+        val c = java.lang.Double.compare(sb, sa)
+        c < 0 || (c == 0 && ca < cb)
+      }
+      .take(nprobe).map(_._1)
+
   /** Driver-visible ANN quality: recall of every approximate kNN
     * variant against the exact [[knnBruteForce]] result on the same
     * query set, as DATA — one row per variant with matched/expected
@@ -736,24 +757,15 @@ object Similarity {
     // probe ranking against the driver-resident centroid model is pure
     // Scala (10 × C dots), so neither the probe window job nor the
     // probed-id distinct-collect job of the r10 shape exists anymore —
-    // identical probe sets by construction (same dot order, same
-    // (cos desc, cent_id asc) tie-break as probeCellsRanked).
+    // identical probe sets by construction ([[rankProbes]]).
     val qRows = emb(s, dir).filter(col("vec_id") < 10)
       .select(col("vec_id"), col("emb"), col("nrm"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_._1).toSeq
-    def ddot(a: Seq[Double], b: Seq[Double]): Double = {
-      var t = 0.0; var i = 0
-      while (i < a.length) { t += a(i) * b(i); i += 1 }
-      t
-    }
     def rankedProbes(cs: CellIndex, np: Int): Seq[(Long, Seq[Double], Double, Long, Int)] =
       qRows.flatMap { case (qid, qe, qn) =>
-        cs.ids.indices
-          .map(i => (cs.ids(i), ddot(qe, cs.embs(i)) / (qn * cs.nrms(i))))
-          .sortBy { case (cid, cos) => (-cos, cid) }
-          .take(np).zipWithIndex
-          .map { case ((cid, _), p) => (qid, qe, qn, cid, p + 1) }
+        rankProbes(qe, qn, cs, np).zipWithIndex
+          .map { case (cid, p) => (qid, qe, qn, cid, p + 1) }
       }
     // 32/64 added in r14: the curve must SHOW a ≥0.9 recall point with
     // its measured cost, not stop at the 0.80 default — the wider

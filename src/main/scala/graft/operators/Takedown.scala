@@ -373,10 +373,7 @@ object Takedown {
     * one observable to assert against. */
   def pending(m: Modality, path: String): Boolean = m match {
     case mod if mod.posting.isDefined =>
-      val sub = mod.posting.get._1
-      MediaIndexOps.pendingApply(path) ||
-        MediaIndexOps.pendingConsolidate(path, sub) ||
-        new java.io.File(s"$path/keydf/.compact-commit").exists()
+      !CommitMarker.settled(path, mod.posting.get._1)
     case IvfVectors => IvfIndex.pendingApply(path)
     case MediaGroups =>
       MediaGroupsInc.pendingDelete(path) || MediaGroupsInc.pendingCompact(path)

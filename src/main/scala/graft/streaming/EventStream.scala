@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.operators.CommitMarker
+
 /** Structured Streaming forms of the events aggregations (SURVEY §2.2
   * streaming row; batch equivalents in
   * [[graft.operators.EventsQueries]]).
@@ -425,7 +427,7 @@ object EventStream {
         // commit marker and the final move, merged data lives only in
         // the hidden temp dir, which rebuilds don't read — staging or
         // rebuilding under a pending compaction would serve undercounts.
-        if (new java.io.File(s"$staging/.compact-commit").exists())
+        if (CommitMarker(staging, "compact").pending)
           throw new IllegalStateException(
             s"pending compaction at $staging: re-run compactStaging " +
               "to completion before resuming the stream")
@@ -519,10 +521,11 @@ object EventStream {
     * the HIGHEST staged id's dir, and the rebuild stays a pure
     * function of staging.
     *
-    * Crash safety via the build-to-temp + commit-marker discipline
-    * ([[graft.operators.ArtifactCache]]'s): the merged output is
-    * written to a temp dir first, a marker commits it as authoritative,
-    * and only then are source dirs stripped and the temp swapped in —
+    * Crash safety via the [[graft.operators.CommitMarker]] protocol:
+    * the merged output is written to a temp dir first, a marker commits
+    * it as authoritative (atomically: a truncated list would strip only
+    * a prefix of the merged dirs while the temp holds all of them), and
+    * only then are source dirs stripped and the temp swapped in —
     * re-running compactStaging after a crash at ANY point resumes to
     * the identical end state (spec-simulated). A crashed compaction
     * must be finished (re-run) before serving a rebuild: between the
@@ -531,12 +534,12 @@ object EventStream {
     */
   def compactStaging(s: SparkSession, staging: String): Unit = {
     val root = new java.io.File(staging)
-    val marker = new java.io.File(root, ".compact-commit")
+    val marker = CommitMarker(staging, "compact")
     val tmp = new java.io.File(root, ".compact-tmp")
     def batchDirs() = Option(root.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("batch=") &&
         new java.io.File(f, "_SUCCESS").exists())
-    if (!marker.exists()) {
+    if (!marker.pending) {
       val dirs = batchDirs()
       if (dirs.size <= 1) return
       // phase A: merged partials -> temp, then commit via marker. The
@@ -551,16 +554,14 @@ object EventStream {
       // after a crashed commit (stream restarted before the resume) are
       // absent from the temp merge — stripping them would silently drop
       // their partials from every future rebuild.
-      java.nio.file.Files.write(marker.toPath,
-        (keepName +: dirs.map(_.getName)).mkString("\n").getBytes("UTF-8"))
+      marker.commit(keepName +: dirs.map(_.getName))
     }
     // phase B, resumable in strict order: (1) strip every MERGED batch
     // dir to marker-only, (2) commit the strip with a sentinel, (3) move
     // temp files into the target, (4) clear markers. A re-run after a
     // crash mid-(3) must NOT re-strip — that would delete the files
     // already moved in — which is exactly what the sentinel gates.
-    val markerLines = new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").split("\n")
+    val markerLines = marker.read().all
     val keepName = markerLines.head
     val mergedDirs = markerLines.drop(1).toSet
     val stripped = new java.io.File(root, ".compact-stripped")
@@ -585,7 +586,7 @@ object EventStream {
       }
     graft.operators.ArtifactCache.deleteRecursively(tmp)
     stripped.delete()
-    marker.delete()
+    marker.clear()
   }
 
   /** Streaming NEAR-dedup ingest: documents arrive on a stream in id
@@ -754,7 +755,7 @@ object EventStream {
     * index/pair trees may observe a half-applied layout; the streaming
     * writer resumes the swap before its next ingest. */
   def pendingDedupConsolidate(outPath: String): Boolean =
-    new java.io.File(s"$outPath/.consol-commit").exists()
+    CommitMarker(outPath, "consol").pending
 
   /** Consolidate a [[streamingNearDedupGroups]] state's per-micro-batch
     * debt — one `index/batch=N` + `pairs/batch=N` dir per trigger and
@@ -768,9 +769,9 @@ object EventStream {
     * downward from the CURRENT batch and the newest (data-holding) one
     * is always hit first.
     *
-    * Two-phase marker protocol, as the whole lifecycle family: phase A
+    * The [[graft.operators.CommitMarker]] protocol: phase A
     * builds the merged stores under hidden `.consol-tmp` siblings and
-    * commits via atomic marker rename; phase B — re-runnable from the
+    * commits the consumed ids; phase B — re-runnable from the
     * marker alone — swaps, empties consumed dirs down to their markers,
     * and drops the marker last. Single-writer contract: run between
     * triggers (the `consolidateEvery` cadence) or on the paused stream.
@@ -783,8 +784,7 @@ object EventStream {
 
   private[graft] def dedupConsolidatePhaseA(s: SparkSession,
       outPath: String): Boolean = {
-    val marker = new java.io.File(s"$outPath/.consol-commit")
-    if (marker.exists()) return true
+    if (pendingDedupConsolidate(outPath)) return true
     val idxIds = dataDirs(s"$outPath/index", "batch=")
     val pairIds = dataDirs(s"$outPath/pairs", "batch=")
     val grpIds = dataDirs(s"$outPath/groups", "gen=")
@@ -797,52 +797,24 @@ object EventStream {
     }
     build(s"$outPath/index", idxIds)
     build(s"$outPath/pairs", pairIds)
-    val markerTmp = new java.io.File(s"$outPath/.consol-commit.tmp")
-    java.nio.file.Files.write(markerTmp.toPath,
-      (s"index:${idxIds.mkString(",")}\npairs:${pairIds.mkString(",")}\n" +
-        s"groups:${grpIds.mkString(",")}").getBytes("UTF-8"))
-    java.nio.file.Files.move(markerTmp.toPath, marker.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    CommitMarker(outPath, "consol").commit(Seq(s"index:${idxIds.mkString(",")}",
+      s"pairs:${pairIds.mkString(",")}", s"groups:${grpIds.mkString(",")}"))
     true
   }
 
   private[graft] def dedupConsolidatePhaseB(s: SparkSession,
       outPath: String): Unit = {
-    val marker = new java.io.File(s"$outPath/.consol-commit")
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").split("\n")
-    def idsOf(tag: String): Seq[Int] = lines.find(_.startsWith(s"$tag:"))
-      .map(_.stripPrefix(s"$tag:")).filter(_.nonEmpty)
-      .map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq.empty)
-    def markerOnly(d: java.io.File): Unit = {
-      graft.operators.ArtifactCache.deleteRecursively(d)
-      d.mkdirs()
-      java.nio.file.Files.write(new java.io.File(d, "_SUCCESS").toPath,
-        Array.emptyByteArray)
-    }
-    def swap(root: String, pfx: String, ids: Seq[Int]): Unit = if (ids.size > 1) {
-      val target = new java.io.File(s"$root/$pfx${ids.max}")
-      val tmp = new java.io.File(s"$root/.consol-tmp")
-      if (tmp.exists()) {
-        graft.operators.ArtifactCache.deleteRecursively(target)
-        java.nio.file.Files.move(tmp.toPath, target.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-      val ok = new java.io.File(target, "_SUCCESS")
-      if (!ok.exists())
-        java.nio.file.Files.write(ok.toPath, Array.emptyByteArray)
-      ids.filter(_ != ids.max)
-        .foreach(i => markerOnly(new java.io.File(s"$root/$pfx$i")))
-    }
-    swap(s"$outPath/index", "batch=", idsOf("index"))
-    swap(s"$outPath/pairs", "batch=", idsOf("pairs"))
+    val marker = CommitMarker(outPath, "consol")
+    val lines = marker.read()
+    CommitMarker.swapNewest(s"$outPath/index", "batch=", lines.ids("index"), ".consol-tmp")
+    CommitMarker.swapNewest(s"$outPath/pairs", "batch=", lines.ids("pairs"), ".consol-tmp")
     // groups: no merge — the newest data-holding generation IS the
     // state; older ones prune to marker-only (replay guard preserved)
-    val grpIds = idsOf("groups")
+    val grpIds = lines.ids("groups")
     if (grpIds.size > 1)
       grpIds.filter(_ != grpIds.max).foreach(i =>
-        markerOnly(new java.io.File(s"$outPath/groups/gen=$i")))
-    marker.delete()
+        CommitMarker.markerOnly(new java.io.File(s"$outPath/groups/gen=$i")))
+    marker.clear()
   }
 
   /** Streaming audio-ingest matching — the upload-time ContentID

@@ -155,4 +155,29 @@ class IvfIndexSpec extends SparkSpec {
     assert(afterCompact.toSeq == afterDelete.toSeq,
       "compaction changed query results")
   }
+
+  test("driver probe ranker equals probeCellsRanked on a NaN score and " +
+    "a -0.0/0.0 score tie") {
+    import spark.implicits._
+    // scores against q = (1, 0), |q| = 1: cell 1 -> 0.0 / -1 = -0.0,
+    // cell 2 -> 0.0 (a tie with cell 1 under Spark's sort), cell 3 ->
+    // NaN (a degenerate centroid; first under Spark's desc sort), cell
+    // 4 -> 1.0, cell 5 -> 1/sqrt(2). A zero-norm centroid would score
+    // 0/0: the driver ranks that NaN first too, but Spark's ANSI
+    // division raises DIVIDE_BY_ZERO in probeCellsRanked, so it cannot
+    // be compared here
+    val cells = Similarity.CellIndex(Seq(1L, 2L, 3L, 4L, 5L),
+      Seq(Seq(0.0, 1.0), Seq(0.0, 1.0), Seq(Double.NaN, 0.0), Seq(1.0, 0.0),
+        Seq(1.0, 1.0)),
+      Seq(-1.0, 1.0, 1.0, 1.0, math.sqrt(2.0)))
+    val q = Seq((7L, Seq(1.0, 0.0), 1.0)).toDF("query_id", "q_emb", "q_nrm")
+    (1 to 5).foreach { np =>
+      val ranked = Similarity.probeCellsRanked(q, cells, np)
+        .select(col("cent_id"), col("p_rnk")).collect()
+        .sortBy(_.getInt(1)).map(_.getLong(0)).toSeq
+      val driver = Similarity.rankProbes(Seq(1.0, 0.0), 1.0, cells, np)
+      assert(driver == ranked, s"nprobe=$np: driver=$driver spark=$ranked")
+    }
+    assert(Similarity.rankProbes(Seq(1.0, 0.0), 1.0, cells, 5) == Seq(3L, 4L, 5L, 1L, 2L))
+  }
 }
