@@ -190,11 +190,11 @@ object StreamReport {
       val q = EventStream.maintainSummary(src, dims, measures, path)
       try q.processAllAvailable() finally q.stop()
       val perBatch = q.recentProgress.toSeq.map(_.numInputRows).filter(_ > 0)
-      val streamed = spark.read.parquet(path)
+      val streamed = Tables.parquet(spark, path)
       operators.SummaryMv.build(
         Tables.load(spark, dir, "events").select(col("event_type"), col("value")),
         dims, measures, s"$tmp/mv_direct/sum")
-      val direct = spark.read.parquet(s"$tmp/mv_direct/sum")
+      val direct = Tables.parquet(spark, s"$tmp/mv_direct/sum")
       reports += PathReport("summary_mv", perBatch,
         streamed.count(), direct.count(), tolerantEqual(streamed, direct))
     }
@@ -215,7 +215,7 @@ object StreamReport {
       val q = EventStream.maintainHistogram(src, path)
       try q.processAllAvailable() finally q.stop()
       val perBatch = q.recentProgress.toSeq.map(_.numInputRows).filter(_ > 0)
-      val streamed = spark.read.parquet(path)
+      val streamed = Tables.parquet(spark, path)
       val direct = operators.TrainingPrep.dailyHistogram(
         Tables.load(spark, dir, "events").select(col("ts"), col("event_type"), col("value")))
       reports += PathReport("histogram_daily", perBatch,
@@ -232,7 +232,7 @@ object StreamReport {
       val q = EventStream.maintainDictionary(docsStream, path)
       try q.processAllAvailable() finally q.stop()
       val perBatch = q.recentProgress.toSeq.map(_.numInputRows).filter(_ > 0)
-      val streamedDict = spark.read.parquet(path)
+      val streamedDict = Tables.parquet(spark, path)
       val batchDict = operators.Bpe.wordCounts(
         Tables.load(spark, dir, "documents").select(col("text")))
       val streamedMerges = operators.Bpe.bpeTrainFromCounts(spark, streamedDict)
@@ -264,15 +264,15 @@ object StreamReport {
       val ids = new java.io.File(s"$out/index/landmarks").listFiles()
         .filter(_.getName.startsWith("batch="))
         .map(_.getName.stripPrefix("batch=").toLong).sorted
-      val allTracks = spark.read.parquet(tracksDir)
-      def lmkOf(i: Long) = spark.read.parquet(s"$out/index/landmarks/batch=$i")
+      val allTracks = Tables.parquet(spark, tracksDir)
+      def lmkOf(i: Long) = Tables.parquet(spark, s"$out/index/landmarks/batch=$i")
         .select(col("track_id"), col("f"), col("key"), col("kb"))
       val replays = ids.toSeq.map { i =>
         val prior = ids.filter(_ < i)
         val priorLmk =
           if (prior.isEmpty) lmkOf(i).limit(0)
           else prior.map(lmkOf).reduce(_ unionByName _)
-        val batchIds = spark.read.parquet(s"$out/index/landmarks/batch=$i")
+        val batchIds = Tables.parquet(spark, s"$out/index/landmarks/batch=$i")
           .select(col("track_id")).distinct()
         operators.AudioMatch.probeIndex(priorLmk,
           priorLmk.groupBy(col("key")).agg(count(lit(1)).as("cnt")),
@@ -280,7 +280,7 @@ object StreamReport {
           .withColumn("batch", lit(i))
       }
       val replay = replays.reduce(_ unionByName _)
-      val streamed = spark.read.parquet(s"$out/matches")
+      val streamed = Tables.parquet(spark, s"$out/matches")
         .select(col("clip_id"), col("track_id"), col("offset_frames"),
           col("votes"), col("batch").cast("long").as("batch"))
       reports += PathReport("audio_ingest_match", perBatch,
@@ -297,7 +297,7 @@ object StreamReport {
     //     FULL corpus: a victim's clip keeps probing like any query.
     locally {
       val out = s"$tmp/audioingest"
-      val allTracks = spark.read.parquet(s"$tmp/audiotracks")
+      val allTracks = Tables.parquet(spark, s"$tmp/audiotracks")
       val clips = operators.AudioMatch.trackClips(allTracks)
       val victims = allTracks
         .filter(pmod(col("track_id"), lit(9)) === 4).select(col("track_id"))
@@ -332,7 +332,7 @@ object StreamReport {
       val ids = new java.io.File(s"$out/index/frames").listFiles()
         .filter(_.getName.startsWith("batch="))
         .map(_.getName.stripPrefix("batch=").toLong).sorted
-      val allV = spark.read.parquet(vidDir)
+      val allV = Tables.parquet(spark, vidDir)
         .select(col("media_id"), lit("video").as("kind"), col("content"))
       def framesOfBatch(i: Long) = spark.read
         .parquet(s"$out/index/frames/batch=$i")
@@ -344,7 +344,7 @@ object StreamReport {
           if (prior.isEmpty) framesOfBatch(i).limit(0)
           else prior.map(framesOfBatch).reduce(_ unionByName _)
         operators.PerceptualHash.buildVideoIndex(spark, priorFrames, rb)
-        val batchIds = spark.read.parquet(s"$out/index/frames/batch=$i")
+        val batchIds = Tables.parquet(spark, s"$out/index/frames/batch=$i")
           .select(col("video_id").as("media_id")).distinct()
         operators.PerceptualHash.matchAgainstVideo(spark, rb,
             operators.PerceptualHash.ingestClips(spark,
@@ -352,7 +352,7 @@ object StreamReport {
           .withColumn("batch", lit(i))
       }
       val replay = replays.reduce(_ unionByName _)
-      val streamed = spark.read.parquet(s"$out/matches")
+      val streamed = Tables.parquet(spark, s"$out/matches")
         .select(col("clip_id"), col("video_id"), col("offset_frames"),
           col("votes"), col("batch").cast("long").as("batch"))
       reports += PathReport("video_ingest_match", perBatch,
@@ -389,7 +389,7 @@ object StreamReport {
           .withColumn("batch", lit(i))
       }
       val replay = replays.reduce(_ unionByName _)
-      val streamed = spark.read.parquet(s"$out/matches")
+      val streamed = Tables.parquet(spark, s"$out/matches")
         .select(col("media_id"), col("match_id"), col("hamming"),
           col("batch").cast("long").as("batch"))
       reports += PathReport("image_ingest_match", perBatch,
@@ -408,9 +408,9 @@ object StreamReport {
       val gens = new java.io.File(s"$out/groups").listFiles()
         .filter(_.getName.startsWith("gen="))
         .map(_.getName.stripPrefix("gen=").toLong).sorted
-      val streamed = spark.read.parquet(s"$out/groups/gen=${gens.last}")
+      val streamed = Tables.parquet(spark, s"$out/groups/gen=${gens.last}")
       val cold = operators.Dedup.connectedComponents(
-        spark.read.parquet(s"$out/pairs").select(col("doc_a"), col("doc_b")))
+        Tables.parquet(spark, s"$out/pairs").select(col("doc_a"), col("doc_b")))
       reports += PathReport("dedup_groups_warm", perBatch,
         streamed.count(), cold.count(), setEqual(streamed, cold))
     }
@@ -475,9 +475,9 @@ object StreamReport {
       val gens = new java.io.File(s"$out/groups").listFiles()
         .filter(_.getName.startsWith("gen="))
         .map(_.getName.stripPrefix("gen=").toLong).sorted
-      val streamed = spark.read.parquet(s"$out/groups/gen=${gens.last}")
+      val streamed = Tables.parquet(spark, s"$out/groups/gen=${gens.last}")
       val cold = operators.Dedup.connectedComponents(
-        spark.read.parquet(s"$out/pairs").select(col("doc_a"), col("doc_b")))
+        Tables.parquet(spark, s"$out/pairs").select(col("doc_a"), col("doc_b")))
       reports += PathReport("dedup_groups_consolidated", perBatch,
         streamed.count(), cold.count(), setEqual(streamed, cold))
     }

@@ -50,6 +50,8 @@ object Verify {
     System.err.println(s"[verify] DriverCutover ${operators.DriverCutover.summary}")
     // and how many classes it generated (each a codegen-cache miss)
     System.err.println(s"[verify] codegen compiles ${Bench.codegenCompiles()}")
+    // and how many parquet reads ran schema inference vs reused a schema
+    System.err.println(s"[verify] parquet schemas ${Tables.summary}")
     spark.stop()
   }
 }

@@ -152,7 +152,7 @@ private[graft] object ArtifactCache {
     * data-presence checks too, or a crashed pre-commit staging dir
     * makes a store look non-empty that `spark.read` then fails on.
     * The hidden-ness check applies BELOW `f`, never to `f` itself:
-    * `spark.read.parquet(".del-tmp")` reads a hidden dir's contents
+    * a parquet read of `.del-tmp` itself reads a hidden dir's contents
     * just fine when addressed directly, and so must the presence
     * check a caller runs on its own staging dir. THE one copy for the
     * lifecycle family's walkers. */

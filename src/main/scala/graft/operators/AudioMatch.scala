@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Audio fingerprint matching over binary media payloads — the second
   * multimodal modality next to [[Multimodal]]'s image-shaped pipeline:
   * the landmark-hash + offset-coherence-vote design of production
@@ -340,7 +342,7 @@ object AudioMatch {
         .withColumn("kb", pmod(col("key"), lit(KeyBuckets)))
         .write.mode("overwrite").partitionBy("kb").parquet(s"$tmp/landmarks")
     }
-    val idxKept = s.read.parquet(s"$path/landmarks")
+    val idxKept = Tables.parquet(s, s"$path/landmarks")
     val clipLmk = landmarks(clipRel(s, dir), col("cpcm"), "clip_id", "j")
       .withColumn("kb", pmod(col("key"), lit(KeyBuckets)))
     // join on (key, kb): kb is the index's partition column, so the
@@ -434,7 +436,7 @@ object AudioMatch {
     val files = keyDfParts(root)
     if (files.size <= 1) return false
     ArtifactCache.deleteRecursively(tmp)
-    s.read.parquet(files.map(_.getPath): _*)
+    Tables.parquet(s, files.map(_.getPath): _*)
       .groupBy(col("key")).agg(sum(col("cnt")).as("cnt"))
       .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
     // the marker records the EXACT inputs merged into the temp dir:
@@ -546,7 +548,7 @@ object AudioMatch {
       clips.select(col("clip_id"), lit(0L).as("track_id"),
         lit(0L).as("offset_frames"), lit(0L).as("votes")).limit(0)
     else {
-      val stored = s.read.parquet(s"$path/landmarks")
+      val stored = Tables.parquet(s, s"$path/landmarks")
         .select(col("track_id"), col("f"), col("key"), col("kb"))
       // a taken-down track must stop matching IMMEDIATELY: the
       // tombstone set anti-joins the postings (bounded by the delete
@@ -558,7 +560,7 @@ object AudioMatch {
       val live = MediaIndexOps.tombstones(s, path, "track_id")
         .fold(stored)(d => stored.join(broadcast(d), Seq("track_id"), "left_anti"))
       probeIndex(live,
-        s.read.parquet(s"$path/keydf").select(col("key"), col("cnt")),
+        Tables.parquet(s, s"$path/keydf").select(col("key"), col("cnt")),
         clips)
     }
   }

@@ -370,7 +370,7 @@ object Dedup {
       import s.implicits._
       return Seq.empty[(Long, Long)].toDF("doc_id", "sh")
     }
-    val stored = s.read.parquet(s"$path/postings").select(col("doc_id"), col("sh"))
+    val stored = Tables.parquet(s, s"$path/postings").select(col("doc_id"), col("sh"))
     MediaIndexOps.tombstones(s, path, "doc_id")
       .fold(stored)(d => stored.join(broadcast(d), Seq("doc_id"), "left_anti"))
   }
@@ -633,7 +633,7 @@ object Dedup {
       p.keep.write.mode("overwrite").parquet(s"$tmp/keep")
     }
     verifyCellPairs(
-      s.read.parquet(s"$path/assigned"), s.read.parquet(s"$path/keep"), threshold)
+      Tables.parquet(s, s"$path/assigned"), Tables.parquet(s, s"$path/keep"), threshold)
   }
 
   /** [[DriverCutover]] cap of [[cellPrune]], in embedding rows: below
@@ -1223,13 +1223,14 @@ object Dedup {
   }
 
   /** Driver-side union-find over a collected pair list (either
-    * orientation, duplicates allowed). */
+    * orientation, duplicates allowed), re-entered as one partition
+    * ([[DriverCutover.reenter]]). */
   private def driverUnionFindEdges(s: SparkSession,
       edges: Array[(Long, Long)]): DataFrame = {
     val uf = new UnionFind
     edges.foreach { case (a, b) => uf.union(a, b) }
     import s.implicits._
-    uf.roots.toSeq.sortBy(_._1).toDF("doc_id", "group_id")
+    DriverCutover.reenter(uf.roots.toSeq.sortBy(_._1).toDF("doc_id", "group_id"))
   }
 
   /** Near-dup GROUPS from pairwise minhash output: connected

@@ -36,6 +36,16 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    (a parquet footer count, a known media count); a bounded probe
   *    collect would be wasted work when the input is over the cap.
   *
+  * A driver branch that hands its rows back to Spark re-enters them
+  * through [[reenter]]: as ONE partition. A local relation otherwise
+  * scans as one slice per core, so an aggregate or sort over a few
+  * thousand driver rows plans an exchange, and a global sort a
+  * range-sample job too: ~4 jobs and ~120 ms of fixed cost for rows
+  * that are already on the driver. `coalesce(1)` reports
+  * `SinglePartition`, which satisfies both distributions. Not for
+  * rows persisted as an artifact whose file count sets a later join's
+  * parallelism (`Dedup.cellPrune`'s `assigned`).
+  *
   * [[MaxRowsKey]] lowers every cap at once (`min` with the site's cap);
   * unset, each site uses its own cap, and `0` sends every site down its
   * distributed branch without running any gate action. The `spark.`
@@ -79,6 +89,10 @@ object DriverCutover {
     record(site, rows.isDefined)
     rows
   }
+
+  /** A driver branch's result relation `local`, as one partition (see
+    * the object doc). */
+  def reenter(local: DataFrame): DataFrame = local.coalesce(1)
 
   /** Whether a relation of at most `bound` rows takes the driver
     * branch. `bound` is evaluated only when the effective cap is

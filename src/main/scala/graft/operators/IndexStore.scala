@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Materialized inverted index: the serving-side counterpart of the
   * build pipeline. At 100 TB the index is not a set of text files —
   * it's a parquet table partitioned by first letter, so a posting
@@ -47,7 +49,7 @@ object IndexStore {
     if (root.exists() && !ArtifactCache.hasVisibleParquet(root)) {
       import spark.implicits._
       Seq.empty[(String, Seq[Int], String)].toDF("word", "file_ids", "letter")
-    } else spark.read.parquet(path)
+    } else Tables.parquet(spark, path)
   }
 
   /** Point lookup: the letter predicate is derivable from the word but
@@ -86,7 +88,7 @@ object IndexStore {
     * partition, decode ONLY the matching row's postings.
     */
   def lookupCompressed(spark: SparkSession, path: String, word: String): DataFrame = {
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col("letter") === word.substring(0, 1) && col("word") === word)
       .select(col("word"),
         transform(graft.functions.PostingCodec.postingDecode(col("postings")),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.VectorFunctions
 
 /** Materialized IVF index: the build-once counterpart of
@@ -82,7 +83,7 @@ object IvfIndex {
     // becomes a PartitionFilter the scan applies before reading data
     val probedIds = probes.select(col("cent_id")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val pruned = s.read.parquet(s"$path/assigned")
+    val pruned = Tables.parquet(s, s"$path/assigned")
       .filter(col("cent_id").isin(probedIds: _*))
     // tombstoned vectors must not surface as neighbors; the set is
     // bounded by the delete rate between compactions, so it broadcasts
@@ -154,11 +155,11 @@ object IvfIndex {
     // query without the memo).
     sq8Lock(key).synchronized {
       if (!sq8Validated.contains(key) && ArtifactCache.isDone(key) &&
-          s.read.parquet(s"$key/assigned_sq8").count() !=
-            s.read.parquet(s"$indexPath/assigned").count())
+          Tables.parquet(s, s"$key/assigned_sq8").count() !=
+            Tables.parquet(s, s"$indexPath/assigned").count())
         ArtifactCache.deleteRecursively(new java.io.File(key))
       val out = ArtifactCache.ensure(key) { tmp =>
-        writeSq8(s.read.parquet(s"$indexPath/assigned")
+        writeSq8(Tables.parquet(s, s"$indexPath/assigned")
           .withColumn("cent_id", col("cent_id").cast("long")), tmp, "overwrite")
       }
       sq8Validated.add(key)
@@ -218,7 +219,7 @@ object IvfIndex {
     val probes = probeRows.toDF("query_id", "q_emb", "q_nrm", "cent_id")
     // stage 1: quantized scan of the probed cells (tombstones applied
     // here so a deleted vector can't burn a pool slot either)
-    val pruned = s.read.parquet(s"$sq8/assigned_sq8")
+    val pruned = Tables.parquet(s, s"$sq8/assigned_sq8")
       .filter(col("cent_id").isin(probedIds: _*))
     val live = tombstones(s, path)
       .fold(pruned)(d => pruned.join(broadcast(d), Seq("vec_id"), "left_anti"))
@@ -250,7 +251,7 @@ object IvfIndex {
     import s.implicits._
     val pool = poolRows.toIndexedSeq.toDF("query_id", "vec_id")
       .join(broadcast(q), Seq("query_id"))
-    val exactRows = s.read.parquet(s"$path/assigned")
+    val exactRows = Tables.parquet(s, s"$path/assigned")
       .filter(col("cent_id").isin(probedIds: _*))
       .filter(col("vec_id").isin(poolIds: _*))
       .select(col("vec_id"), col("emb"), col("nrm"))
@@ -279,7 +280,7 @@ object IvfIndex {
     * (vec_id, emb, label, nrm).
     */
   def insert(s: SparkSession, path: String, delta: DataFrame): Unit = {
-    val cells = Similarity.collectCells(s.read.parquet(s"$path/centroids"))
+    val cells = Similarity.collectCells(Tables.parquet(s, s"$path/centroids"))
     val assigned = Similarity.assignCells(delta, cells)
     // BOTH appends run under the sidecar lock: a concurrent ensureSq8
     // validation interleaving between them would observe the transient
@@ -335,7 +336,7 @@ object IvfIndex {
     // look for data files specifically: a compaction clears the
     // parquet files it applied but may leave commit markers behind
     if (Option(d.listFiles()).exists(_.exists(_.getName.endsWith(".parquet"))))
-      Some(s.read.parquet(s"$path/deleted").select(col("vec_id")).distinct())
+      Some(Tables.parquet(s, s"$path/deleted").select(col("vec_id")).distinct())
     else None
   }
 
@@ -374,9 +375,9 @@ object IvfIndex {
     val snapshot = Option(delDir.listFiles()).toSeq.flatten
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
     if (snapshot.isEmpty) return false
-    val deleted = s.read.parquet(snapshot.map(_.getPath): _*)
+    val deleted = Tables.parquet(s, snapshot.map(_.getPath): _*)
       .select(col("vec_id")).distinct()
-    val assigned = s.read.parquet(s"$path/assigned")
+    val assigned = Tables.parquet(s, s"$path/assigned")
     // cent_id is a partition DIRECTORY column on read-back, so it
     // arrives as int — normalize to long before collecting
     val touched = assigned.join(deleted, Seq("vec_id"), "left_semi")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Incremental media dup-group maintenance — the append-only
   * generation form of [[Multimodal.mediaDupGroups]]: a media delta
   * generates only DELTA-HEADED candidates (the `q_dedup_incremental`
@@ -195,12 +197,12 @@ object MediaGroupsInc {
     val winsVisible =
       ArtifactCache.hasVisibleParquet(new java.io.File(s"$path/wins"))
     if (mergeWins && winsVisible)
-      s.read.parquet(s"$path/wins").drop("batch")
+      Tables.parquet(s, s"$path/wins").drop("batch")
         .write.mode("overwrite").partitionBy("wb").parquet(tmpOf("wins"))
     if (mergeWindf)
       // a delete's negative partials (batch=-1) fold in; windows whose
       // live df hits zero carry no information and drop
-      s.read.parquet(s"$path/windf")
+      Tables.parquet(s, s"$path/windf")
         .groupBy(col("win")).agg(sum(col("cnt")).as("cnt"))
         .filter(col("cnt") > 0)
         .write.mode("overwrite").parquet(tmpOf("windf"))
@@ -211,16 +213,16 @@ object MediaGroupsInc {
       // so a row without postings is unreachable and pure debt)
       import s.implicits._
       val liveIds =
-        if (winsVisible) s.read.parquet(s"$path/wins").select(col("media_id"))
+        if (winsVisible) Tables.parquet(s, s"$path/wins").select(col("media_id"))
         else Seq.empty[Long].toDF("media_id")
-      s.read.parquet(s"$path/hv").drop("batch")
+      Tables.parquet(s, s"$path/hv").drop("batch")
         .join(liveIds, Seq("media_id"), "left_semi")
         .write.mode("overwrite").parquet(tmpOf("hv"))
     }
     if (mergePairs) {
-      val all = s.read.parquet(s"$path/pairs").select(col("doc_a"), col("doc_b"))
+      val all = Tables.parquet(s, s"$path/pairs").select(col("doc_a"), col("doc_b"))
       val live = if (removedData)
-        all.join(s.read.parquet(s"$path/removed")
+        all.join(Tables.parquet(s, s"$path/removed")
           .select(col("doc_a"), col("doc_b")), Seq("doc_a", "doc_b"), "left_anti")
       else all
       live.write.mode("overwrite").parquet(tmpOf("pairs"))
@@ -361,12 +363,12 @@ object MediaGroupsInc {
     // postings after the takedown
     requireNoInflightGens(path, "deleting")
     val vcol = col("media_id").isin(victims: _*)
-    val allWins = s.read.parquet(s"$path/wins")
+    val allWins = Tables.parquet(s, s"$path/wins")
       .select(col("media_id"), col("win"))
     // victim postings WITH their partition coordinates: one full-store
     // scan serves the df partials, the window counts, AND the
     // touched-leaf list (previously a second full scan)
-    val vwinsP = s.read.parquet(s"$path/wins")
+    val vwinsP = Tables.parquet(s, s"$path/wins")
       .select(col("media_id"), col("win"), col("batch"), col("wb"))
       .filter(vcol).persist()
     val vwins = vwinsP.select(col("media_id"), col("win"))
@@ -379,7 +381,7 @@ object MediaGroupsInc {
       // dfs evaluated only for the victims' own windows (semi-joined
       // partials, never the full corpus statistic)
       val vcnt = vwins.groupBy(col("win")).agg(count(lit(1)).as("v_cnt"))
-      val uncrossed = s.read.parquet(s"$path/windf")
+      val uncrossed = Tables.parquet(s, s"$path/windf")
         .join(vcnt.select(col("win")), Seq("win"), "left_semi")
         .groupBy(col("win")).agg(sum(col("cnt")).as("df_before"))
         .join(vcnt, Seq("win"))
@@ -397,11 +399,11 @@ object MediaGroupsInc {
         .select(col("a.media_id").as("doc_a"), col("b.media_id").as("doc_b"))
         .distinct()
         .persist()
-      val pairsAll = s.read.parquet(s"$path/pairs")
+      val pairsAll = Tables.parquet(s, s"$path/pairs")
         .select(col("doc_a"), col("doc_b"))
       val removedOld =
         if (ArtifactCache.hasVisibleParquet(new java.io.File(s"$path/removed")))
-          s.read.parquet(s"$path/removed").select(col("doc_a"), col("doc_b"))
+          Tables.parquet(s, s"$path/removed").select(col("doc_a"), col("doc_b"))
         else pairsAll.limit(0)
       val resurrect =
         removedOld.join(memberPairs, Seq("doc_a", "doc_b"), "left_semi")
@@ -432,7 +434,7 @@ object MediaGroupsInc {
         Seq("doc_a"), "left_semi")
       val freshCand =
         memberPairs.join(pairsNarrow, Seq("doc_a", "doc_b"), "left_anti")
-      val hv = s.read.parquet(s"$path/hv")
+      val hv = Tables.parquet(s, s"$path/hv")
         .select(col("media_id"), col("hvec"), col("n2"))
       val nMedia = hv.count()
       def side(df: DataFrame) =
@@ -459,7 +461,7 @@ object MediaGroupsInc {
       val freshStagedDir = new java.io.File(s"$path/pairs/.del-tmp")
       val freshBack =
         if (ArtifactCache.hasVisibleParquet(freshStagedDir))
-          s.read.parquet(freshStagedDir.getPath)
+          Tables.parquet(s, freshStagedDir.getPath)
             .select(col("doc_a"), col("doc_b"))
         else pairsAll.limit(0)
       val added = resurrect.select(col("doc_a"), col("doc_b")).union(freshBack)
@@ -482,7 +484,7 @@ object MediaGroupsInc {
       // the slice (which doubled the delete's I/O, measured at 100×);
       // the touched list comes off the already-persisted victim
       // postings, not another full-store scan
-      val postings = s.read.parquet(s"$path/wins")
+      val postings = Tables.parquet(s, s"$path/wins")
       def partKey = concat_ws("/",
         col("batch").cast("string"), col("wb").cast("string"))
       val touchedPks = vwinsP
@@ -561,7 +563,7 @@ object MediaGroupsInc {
           if (ArtifactCache.hasVisibleParquet(stagedWins)) {
             def partKey = concat_ws("/",
               col("batch").cast("string"), col("wb").cast("string"))
-            val remaining = s.read.parquet(stagedWins.getPath)
+            val remaining = Tables.parquet(s, stagedWins.getPath)
             remaining.write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batch", "wb").parquet(s"$path/wins")
@@ -605,11 +607,11 @@ object MediaGroupsInc {
     // store) to O(victim components' subgraph): the 100× scale point's
     // dominant term (a cold closure over the full ~100× pair store,
     // 238 s measured) becomes victim-proportional.
-    val pairsAll = s.read.parquet(s"$path/pairs")
+    val pairsAll = Tables.parquet(s, s"$path/pairs")
       .select(col("doc_a"), col("doc_b"))
     val live =
       if (ArtifactCache.hasVisibleParquet(new java.io.File(s"$path/removed")))
-        pairsAll.join(s.read.parquet(s"$path/removed")
+        pairsAll.join(Tables.parquet(s, s"$path/removed")
           .select(col("doc_a"), col("doc_b")), Seq("doc_a", "doc_b"), "left_anti")
       else pairsAll
     val genNo = latestGen(path).getOrElse(0)
@@ -618,11 +620,11 @@ object MediaGroupsInc {
     if (ArtifactCache.hasVisibleParquet(genDir)) {
       s.sparkContext.setLocalProperty(DelClosureProperty, "scoped")
       import s.implicits._
-      val prev = s.read.parquet(genDir.getPath)
+      val prev = Tables.parquet(s, genDir.getPath)
         .select(col("doc_id").cast("long").as("doc_id"),
           col("group_id").cast("long").as("group_id"))
       val seedNodes = (if (ArtifactCache.hasVisibleParquet(seedsDir))
-          s.read.parquet(seedsDir.getPath)
+          Tables.parquet(s, seedsDir.getPath)
             .select(col("doc_id").cast("long").as("doc_id"))
         else victims.toDF("doc_id").limit(0))
         .union(victims.toDF("doc_id")).distinct()
@@ -737,7 +739,7 @@ object MediaGroupsInc {
     // 100× scale point) for work parquet re-reads do nearly free
     mediaWindows(b).withColumn("wb", wb)
       .write.mode("overwrite").partitionBy("wb").parquet(s"$path/wins/batch=$gen")
-    val dwins = s.read.parquet(s"$path/wins/batch=$gen")
+    val dwins = Tables.parquet(s, s"$path/wins/batch=$gen")
       .select(col("media_id"), col("win"))
     dwins.groupBy(col("win")).agg(count(lit(1)).as("cnt"))
       .write.mode("overwrite").parquet(s"$path/windf/batch=$gen")
@@ -751,9 +753,9 @@ object MediaGroupsInc {
     java.nio.file.Files.write(new java.io.File(metaDir, s"batch-$gen").toPath,
       s"$minDelta,$maxDelta".getBytes("UTF-8"))
 
-    val allWins = s.read.parquet(s"$path/wins")
+    val allWins = Tables.parquet(s, s"$path/wins")
       .select(col("media_id"), col("win"), col("wb"))
-    val partials = s.read.parquet(s"$path/windf")
+    val partials = Tables.parquet(s, s"$path/windf")
 
     // ---- 2. delta-touched window dfs, now vs before this batch —
     // partials are SEMI-JOINED to the delta's window set before the
@@ -776,7 +778,7 @@ object MediaGroupsInc {
           col("b.media_id") >= minDelta)
       .select(col("a.media_id").as("doc_a"), col("b.media_id").as("doc_b"))
       .distinct()
-    val hv = s.read.parquet(s"$path/hv")
+    val hv = Tables.parquet(s, s"$path/hv")
       .select(col("media_id"), col("hvec"), col("n2"))
     val nMedia = hv.count()
     def side(df: DataFrame) =
@@ -825,7 +827,7 @@ object MediaGroupsInc {
           col("p.doc_b") === col("wb.media_id") && col("wa.win") === col("wb.win"))
         .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
         .distinct()
-      val livePairsSoFar = s.read.parquet(s"$path/pairs")
+      val livePairsSoFar = Tables.parquet(s, s"$path/pairs")
         .select(col("doc_a"), col("doc_b"))
       val removals = suspect.except(supported)
         .join(livePairsSoFar, Seq("doc_a", "doc_b"), "left_semi")
@@ -836,14 +838,14 @@ object MediaGroupsInc {
     }
 
     // ---- 5. closure: warm from the previous labels unless repaired
-    val pairsAll = s.read.parquet(s"$path/pairs").select(col("doc_a"), col("doc_b"))
+    val pairsAll = Tables.parquet(s, s"$path/pairs").select(col("doc_a"), col("doc_b"))
     val live =
       if (ArtifactCache.hasVisibleParquet(new java.io.File(s"$path/removed")))
-        pairsAll.join(s.read.parquet(s"$path/removed")
+        pairsAll.join(Tables.parquet(s, s"$path/removed")
           .select(col("doc_a"), col("doc_b")), Seq("doc_a", "doc_b"), "left_anti")
       else pairsAll
     val forest = Dedup.contractedForest(live)
-    val prev = latestGen(path).map(g => s.read.parquet(s"$path/labels/gen=$g"))
+    val prev = latestGen(path).map(g => Tables.parquet(s, s"$path/labels/gen=$g"))
     val labels =
       if (removedAny || prev.isEmpty) Dedup.connectedComponents(forest)
       else Dedup.connectedComponentsWarm(forest, prev.get)
@@ -865,7 +867,7 @@ object MediaGroupsInc {
       // no rows, which parquet materializes as a footerless dir
       case Some(g) if ArtifactCache.hasVisibleParquet(
           new java.io.File(s"$path/labels/gen=$g")) =>
-        s.read.parquet(s"$path/labels/gen=$g")
+        Tables.parquet(s, s"$path/labels/gen=$g")
           .select(col("doc_id").as("media_id"), col("group_id"))
           .orderBy(col("media_id"))
       case _ =>

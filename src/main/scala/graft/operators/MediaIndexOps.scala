@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Tombstone delete + compaction for the bucket-partitioned media
   * posting indexes (the video frame index and the image chunk index —
   * `PerceptualHash.scala`): the takedown operation a media catalog
@@ -74,7 +76,7 @@ object MediaIndexOps {
   private[graft] def tombstones(s: SparkSession, path: String,
       idCol: String): Option[DataFrame] =
     if (tombstoneFiles(path).nonEmpty)
-      Some(s.read.parquet(s"$path/deleted").select(col(idCol)).distinct())
+      Some(Tables.parquet(s, s"$path/deleted").select(col(idCol)).distinct())
     else None
 
   /** True while a [[compact]] is mid-swap — probes must refuse and the
@@ -125,7 +127,7 @@ object MediaIndexOps {
       ArtifactCache.deleteRecursively(new java.io.File(s"$target/$leaf"))
     }
     if (ArtifactCache.hasVisibleParquet(stage)) {
-      val remaining = s.read.parquet(stage.getPath)
+      val remaining = Tables.parquet(s, stage.getPath)
       remaining.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(parts: _*).parquet(target)
@@ -182,14 +184,14 @@ object MediaIndexOps {
     if (subIds.size > 1) {
       val tmp = s"$path/$sub/.consol-tmp"
       ArtifactCache.deleteRecursively(new java.io.File(tmp))
-      s.read.parquet(s"$path/$sub")
+      Tables.parquet(s, s"$path/$sub")
         .filter(col("batch").isin(subIds: _*)).drop("batch")
         .write.mode("overwrite").partitionBy("kb").parquet(tmp)
     }
     if (dfIds.size > 1) {
       val tmp = s"$path/keydf/.consol-tmp"
       ArtifactCache.deleteRecursively(new java.io.File(tmp))
-      s.read.parquet(s"$path/keydf")
+      Tables.parquet(s, s"$path/keydf")
         .filter(col("batch").isin(dfIds: _*))
         .groupBy(col("key")).agg(sum(col("cnt")).as("cnt"))
         .coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -243,19 +245,19 @@ object MediaIndexOps {
     if (pendingApply(path)) return true
     val snapshot = tombstoneFiles(path)
     if (snapshot.isEmpty) return false
-    val deleted = s.read.parquet(snapshot.map(_.getPath): _*)
+    val deleted = Tables.parquet(s, snapshot.map(_.getPath): _*)
       .select(col(idCol)).distinct()
     if (new java.io.File(s"$path/keydf").exists()) {
       ArtifactCache.deleteRecursively(dfStage)
       // the removed postings' per-key counts, negated — computed from
       // the UNTOUCHED postings (before any rewrite), the only point
       // where they are still reconstructible
-      s.read.parquet(s"$path/$sub")
+      Tables.parquet(s, s"$path/$sub")
         .join(broadcast(deleted), Seq(idCol), "left_semi")
         .groupBy(col("key")).agg((-count(lit(1))).as("cnt"))
         .coalesce(1).write.mode("overwrite").parquet(dfStage.getPath)
     }
-    val postings = s.read.parquet(s"$path/$sub")
+    val postings = Tables.parquet(s, s"$path/$sub")
     // a STREAMED index carries the per-micro-batch `batch` partition
     // column above `kb` — the rewrite must address (batch, kb)
     // partitions or the dynamic overwrite would write a second, flat

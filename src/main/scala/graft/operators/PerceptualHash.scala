@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.{ImageHash, VectorFunctions}
 
 /** Image perceptual near-duplicates: 56-bit dHash
@@ -148,10 +149,10 @@ object PerceptualHash {
     // the key domain — bounded model state, always broadcastable.
     // Tombstoned images still count toward the df until compaction —
     // strictly conservative (see [[MediaIndexOps]]).
-    val keep = s.read.parquet(s"$path/keydf")
+    val keep = Tables.parquet(s, s"$path/keydf")
       .groupBy(col("key")).agg(sum(col("cnt")).as("cdf"))
       .filter(col("cdf") <= MaxChunkDf).select(col("key"))
-    val stored = s.read.parquet(s"$path/chunks")
+    val stored = Tables.parquet(s, s"$path/chunks")
     // tombstoned images must not pair on either side; the set is
     // bounded by the delete rate between compactions, so it broadcasts
     val live = MediaIndexOps.tombstones(s, path, "media_id")
@@ -194,7 +195,7 @@ object PerceptualHash {
     if (!ArtifactCache.hasVisibleParquet(new java.io.File(s"$path/chunks")))
       return images.select(col("media_id"), lit(0L).as("match_id"),
         lit(0L).as("hamming")).limit(0)
-    val keep = s.read.parquet(s"$path/keydf")
+    val keep = Tables.parquet(s, s"$path/keydf")
       .groupBy(col("key")).agg(sum(col("cnt")).as("cdf"))
       .filter(col("cdf") <= MaxChunkDf).select(col("key"))
     // the broadcast gate needs the batch's OWN size; a caller that
@@ -210,7 +211,7 @@ object PerceptualHash {
       .join(broadcast(keep), Seq("key"))
       .select(col("media_id").as("probe_id"), col("phash").as("hp"),
         col("key"), col("kb"))
-    val stored = s.read.parquet(s"$path/chunks")
+    val stored = Tables.parquet(s, s"$path/chunks")
     val live = MediaIndexOps.tombstones(s, path, "media_id")
       .fold(stored)(d => stored.join(broadcast(d), Seq("media_id"), "left_anti"))
     live.select(col("key"), col("kb"),
@@ -498,7 +499,7 @@ object PerceptualHash {
       .withColumn("kb", pmod(col("fh"), lit(FrameKeyBuckets)))
     val broadcastOk = clips.count() <= BroadcastFrameBudget
     def side(df: DataFrame) = if (broadcastOk) broadcast(df) else df
-    val liveDf = s.read.parquet(s"$path/keydf")
+    val liveDf = Tables.parquet(s, s"$path/keydf")
       .join(side(clipLmk.select(col("fh").as("key")).distinct()), Seq("key"))
       .groupBy(col("key")).agg(sum(col("cnt")).as("kdf"))
     val keep = liveDf.filter(col("kdf") <= MaxFrameDf)
@@ -506,7 +507,7 @@ object PerceptualHash {
     // both query-sized: clip landmarks ∩ under-cap keys
     val probe = clipLmk.join(keep, Seq("fh"))
       .select(col("clip_id"), col("j"), col("fh").as("key"), col("kb"))
-    val stored = s.read.parquet(s"$path/frames")
+    val stored = Tables.parquet(s, s"$path/frames")
     // tombstoned videos must not surface as match targets (their df
     // contribution stays until compaction — strictly conservative, see
     // [[MediaIndexOps]]); bounded by the delete rate, so it broadcasts

@@ -326,7 +326,7 @@ object Similarity {
 
   private[graft] def cellsOfArtifact(s: SparkSession, path: String): CellIndex =
     artifactCells.computeIfAbsent(path,
-      p => collectCells(s.read.parquet(s"$p/centroids")))
+      p => collectCells(Tables.parquet(s, s"$p/centroids")))
 
   /** Nearest-centroid assignment as a narrow projection: input columns
     * plus `cent_id`. See the class doc for why this shape (no corpus
@@ -688,12 +688,19 @@ object Similarity {
     q.select(col("query_id"), col("q_emb"), col("q_nrm"), explode(cellArr).as("c"))
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
         col("c._1").as("cent_id"),
-        (VectorFunctions.arrayDot(col("q_emb"), col("c._2")) /
-          (col("q_nrm") * col("c._3"))).as("q_cos"))
+        probeScore(VectorFunctions.arrayDot(col("q_emb"), col("c._2")),
+          col("q_nrm") * col("c._3")).as("q_cos"))
       .withColumn("p_rnk", row_number().over(wProbe))
       .filter(col("p_rnk") <= nprobe)
       .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cent_id"), col("p_rnk"))
   }
+
+  /** A probe's cosine score: `dot / den`, NaN on a zero divisor (a
+    * zero-norm query or centroid). ANSI division would raise
+    * DIVIDE_BY_ZERO there; NaN is what the driver ranker scores, so
+    * both rank the cell first. */
+  private def probeScore(dot: Column, den: Column): Column =
+    when(den === 0.0, lit(Double.NaN)).otherwise(dot / den)
 
   /** THE driver-side dot product: ascending-index accumulation from
     * 0.0, the order `array_dot` sums in, so a driver score and the same
@@ -714,12 +721,14 @@ object Similarity {
     * places NaN greatest (so FIRST under desc), and +0.0 added to each
     * score merges -0.0 with 0.0 the way Spark's sort normalizes them,
     * leaving the tie to cent_id ascending. A zero divisor (zero-norm
-    * query or centroid) scores NaN here; the Spark plan's ANSI division
-    * raises DIVIDE_BY_ZERO on it instead. */
+    * query or centroid) scores NaN in both ([[probeScore]]). */
   private[graft] def rankProbes(qe: Seq[Double], qn: Double, cells: CellIndex,
       nprobe: Int): Seq[Long] =
     cells.ids.indices
-      .map(i => (cells.ids(i), dot(qe, cells.embs(i)) / (qn * cells.nrms(i)) + 0.0))
+      .map { i =>
+        val den = qn * cells.nrms(i)
+        (cells.ids(i), if (den == 0.0) Double.NaN else dot(qe, cells.embs(i)) / den + 0.0)
+      }
       .sortWith { case ((ca, sa), (cb, sb)) =>
         val c = java.lang.Double.compare(sb, sa)
         c < 0 || (c == 0 && ca < cb)
@@ -776,7 +785,7 @@ object Similarity {
     // Σ sizes of the probed cells (includes each query's self row —
     // a fixed ≤|queries| offset, not worth a second counting job)
     def cellSizesOf(path: String): Map[Long, Long] =
-      s.read.parquet(s"$path/assigned")
+      Tables.parquet(s, s"$path/assigned")
         .groupBy(col("cent_id")).agg(count(lit(1)).as("cn")).collect()
         .map(r => (r.getAs[Number](0).longValue(), r.getLong(1))).toMap
     def probeCost(p: Seq[(Long, Seq[Double], Double, Long, Int)], np: Int,
@@ -785,7 +794,7 @@ object Similarity {
     import s.implicits._
     val probes1 = rankedProbes(cells, widths.max)
     val probesDf = probes1.toDF("query_id", "q_emb", "q_nrm", "cent_id", "p_rnk")
-    val cand = s.read.parquet(s"$path1/assigned")
+    val cand = Tables.parquet(s, s"$path1/assigned")
       .filter(col("cent_id").isin(probes1.map(_._4).distinct.sorted: _*))
       .join(broadcast(probesDf), Seq("cent_id"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -818,7 +827,7 @@ object Similarity {
       val cs = Option(cs0).getOrElse(cellsOfArtifact(s, path))
       val p = rankedProbes(cs, 16)
       val pairs = searchCells(
-        s.read.parquet(s"$path/assigned")
+        Tables.parquet(s, s"$path/assigned")
           .filter(col("cent_id").isin(p.map(_._4).distinct.sorted: _*)),
         broadcast(p.toDF("query_id", "q_emb", "q_nrm", "cent_id", "p_rnk")
           .drop("p_rnk")), k)
@@ -911,7 +920,7 @@ object Similarity {
     // fingerprint-keyed published artifact → immutable; memoize the
     // tiny (queries × k) pair list per JVM like the centroid models
     bruteCache.computeIfAbsent(path, p =>
-      s.read.parquet(s"$p/pairs")
+      Tables.parquet(s, s"$p/pairs")
         .collect().map(r => (r.getLong(0), r.getLong(1)))
         .sortBy(identity).toSeq)
   }
@@ -951,7 +960,7 @@ object Similarity {
     val probes = probeCellsRanked(q, cells, widths.max)
     val probedIds = probes.select(col("cent_id")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val cand = s.read.parquet(s"$path1/assigned")
+    val cand = Tables.parquet(s, s"$path1/assigned")
       .filter(col("cent_id").isin(probedIds: _*))
       .join(broadcast(probes), Seq("cent_id"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -997,7 +1006,7 @@ object Similarity {
     val w = recommendNprobe(s, dir, k, targetRecall)
     val path1 = IvfIndex.ensureIndex(s, dir)
     val cells = cellsOfArtifact(s, path1)
-    val sizes = s.read.parquet(s"$path1/assigned")
+    val sizes = Tables.parquet(s, s"$path1/assigned")
       .groupBy(col("cent_id")).agg(count(lit(1)).as("cn")).collect()
       .map(r => (r.getAs[Number](0).longValue(), r.getLong(1))).toMap
     val q = emb(s, dir).filter(col("vec_id") < 10)

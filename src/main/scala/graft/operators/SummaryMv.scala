@@ -72,9 +72,10 @@ object SummaryMv {
       min(col(s"min_$m")).as(s"min_$m"),
       max(col(s"max_$m")).as(s"max_$m"),
       sum(col(s"cnt_$m")).as(s"cnt_$m")))
-    val schema = s.read.parquet(path).schema
-    val merged = s.read.parquet(path)
-      .unionByName(s.read.parquet(stage))
+    val current = Tables.parquet(s, path)
+    val schema = current.schema
+    val merged = current
+      .unionByName(Tables.parquet(s, stage))
       .groupBy(dims.map(col): _*)
       .agg(mergeAggs.head, mergeAggs.tail: _*)
       .select(schema.fieldNames.map(col).toSeq: _*)
@@ -86,7 +87,7 @@ object SummaryMv {
       .write.mode("overwrite").parquet(path)
     ArtifactCache.deleteRecursively(new java.io.File(stage))
     graft.plans.SummaryRegistry.refreshByMvPath(path,
-      s.read.parquet(path).queryExecution.analyzed)
+      Tables.parquet(s, path).queryExecution.analyzed)
   }
 
 
@@ -108,13 +109,13 @@ object SummaryMv {
       sum(col(s"cnt_$m")).as(s"cnt_$m")))
     val cols = dims ++ ("cnt" +: measures.flatMap(m =>
       Seq(s"sum_$m", s"min_$m", s"max_$m", s"cnt_$m")))
-    s.read.parquet(partialsRoot)
+    Tables.parquet(s, partialsRoot)
       .groupBy(dims.map(col): _*)
       .agg(mergeAggs.head, mergeAggs.tail: _*)
       .select(cols.map(col): _*)
       .write.mode("overwrite").parquet(path)
     graft.plans.SummaryRegistry.refreshByMvPath(path,
-      s.read.parquet(path).queryExecution.analyzed)
+      Tables.parquet(s, path).queryExecution.analyzed)
   }
 
   /** Register an existing summary so the optimizer rule can use it.
@@ -136,7 +137,7 @@ object SummaryMv {
     // re-registration of the same (fact, measure) is free: the check
     // is memoized so ensure-style callers don't re-scan per query
     if (!allowInexact) {
-      val fact = s.read.parquet(factPath)
+      val fact = Tables.parquet(s, factPath)
       val floatMeasures = measures.filter(m => fact.schema(m).dataType match {
         case org.apache.spark.sql.types.DoubleType
            | org.apache.spark.sql.types.FloatType => true
@@ -156,7 +157,7 @@ object SummaryMv {
     }
     SummaryRegistry.register(SummaryRegistry.Summary(
       factPath, mvPath,
-      s.read.parquet(mvPath).queryExecution.analyzed,
+      Tables.parquet(s, mvPath).queryExecution.analyzed,
       dims.toSet, measures.toSet))
   }
 

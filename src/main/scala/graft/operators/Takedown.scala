@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** One front door for every delete lifecycle in the engine. Seven
   * takedown-capable stores now exist — the IVF vector index, the video
   * frame index, the image chunk index, the audio landmark index, the
@@ -161,7 +163,7 @@ object Takedown {
         val (sub, idCol) = mod.posting.get
         if (!present(s"$path/$sub")) Seq(absent(sub))
         else {
-          val hits = vicHits(s.read.parquet(s"$path/$sub"), idCol)
+          val hits = vicHits(Tables.parquet(s, s"$path/$sub"), idCol)
             .filter(col("hit") === 1)
           MediaIndexOps.tombstones(s, path, idCol) match {
             case None =>
@@ -179,7 +181,7 @@ object Takedown {
       case IvfVectors =>
         if (!present(s"$path/assigned")) Seq(absent("assigned"))
         else {
-          val hits = vicHits(s.read.parquet(s"$path/assigned"), "vec_id")
+          val hits = vicHits(Tables.parquet(s, s"$path/assigned"), "vec_id")
             .filter(col("hit") === 1)
           val tombDir = new java.io.File(s"$path/deleted")
           val hasTomb = Option(tombDir.listFiles()).toSeq.flatten
@@ -188,7 +190,7 @@ object Takedown {
             Seq(tagged("assigned", count(lit(1)), count(lit(1)), hits))
           else {
             val live = hits.join(
-              broadcast(s.read.parquet(s"$path/deleted")
+              broadcast(Tables.parquet(s, s"$path/deleted")
                 .select(col("vec_id"), lit(1).as("dead")).distinct()),
               Seq("vec_id"), "left_outer")
             Seq(tagged("assigned", sum(when(col("dead").isNull, 1L)),
@@ -208,7 +210,7 @@ object Takedown {
         val labels = if (gens.isEmpty) absent("labels")
           else tagged("labels",
             sum(when(col("gen") === gens.max, 1L)), count(lit(1)),
-            vicHits(s.read.parquet(s"$path/labels"), "doc_id")
+            vicHits(Tables.parquet(s, s"$path/labels"), "doc_id")
               .filter(col("hit") === 1))
         // wins/hv/pairs are DERIVED data, never a probe surface (the
         // group answer flows only through labels, candidates and
@@ -218,11 +220,11 @@ object Takedown {
         def derived(subPath: String, idc: String): DataFrame =
           if (!present(s"$path/$subPath")) absent(subPath)
           else tagged(subPath, lit(0L), count(lit(1)),
-            vicHits(s.read.parquet(s"$path/$subPath"), idc)
+            vicHits(Tables.parquet(s, s"$path/$subPath"), idc)
               .filter(col("hit") === 1))
         val pairs = if (!present(s"$path/pairs")) absent("pairs")
           else tagged("pairs", lit(0L), count(lit(1)),
-            s.read.parquet(s"$path/pairs")
+            Tables.parquet(s, s"$path/pairs")
               .join(broadcast(vic),
                 col("doc_a") === col("vid") || col("doc_b") === col("vid"),
                 "left_semi"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Copy-on-write keyed upsert over a hash-bucketed parquet snapshot —
   * the daily MERGE a 100 TB deployment actually runs. The base table
   * is stored partitioned by `part_id = pmod(xxhash64(key), buckets)`;
@@ -45,7 +47,7 @@ object Upsert {
   }
 
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 
   /** Apply a change batch. `changes` carries the base schema plus an
     * optional [[OpCol]] ('U' upsert / 'D' delete; absent = all 'U').

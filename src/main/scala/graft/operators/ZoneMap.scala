@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** File-level data skipping via an external zone map — the
   * Iceberg/Delta manifest-stats idea on plain parquet. Parquet's own
   * reader skips ROW GROUPS from footer stats, but at 100 TB the win
@@ -32,7 +34,7 @@ object ZoneMap {
     */
   def build(spark: SparkSession, tablePath: String, cols: Seq[String],
             zonemapPath: String): Unit = {
-    val df = spark.read.parquet(tablePath)
+    val df = Tables.parquet(spark, tablePath)
     val aggs = count(lit(1)).as("n_rows") +:
       cols.flatMap(c => Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max")))
     df.select(col("_metadata.file_path").as("file") +: cols.map(col): _*)
@@ -45,7 +47,7 @@ object ZoneMap {
   /** Files whose [min,max] envelope intersects [lo,hi] on `c`. */
   private def candidateFiles(spark: SparkSession, zonemapPath: String,
                              c: String, lo: Column, hi: Column): Array[String] =
-    spark.read.parquet(zonemapPath)
+    Tables.parquet(spark, zonemapPath)
       .filter(col(s"${c}_max") >= lo && col(s"${c}_min") <= hi)
       .select(col("file"))
       .collect().map(_.getString(0))
@@ -58,9 +60,8 @@ object ZoneMap {
   def prunedScan(spark: SparkSession, tablePath: String, zonemapPath: String,
                  c: String, lo: Column, hi: Column): DataFrame = {
     val files = candidateFiles(spark, zonemapPath, c, lo, hi)
-    val base = spark.read.parquet(tablePath)
-    if (files.isEmpty) base.filter(lit(false))
-    else spark.read.schema(base.schema).parquet(files.toIndexedSeq: _*)
+    if (files.isEmpty) Tables.parquet(spark, tablePath).filter(lit(false))
+    else Tables.parquet(spark, files.toIndexedSeq: _*)
       .filter(col(c) >= lo && col(c) <= hi)
   }
 
@@ -68,7 +69,7 @@ object ZoneMap {
     * skipping evidence, queryable. */
   def skipStats(spark: SparkSession, zonemapPath: String,
                 c: String, lo: Column, hi: Column): (Long, Long) = {
-    val zm = spark.read.parquet(zonemapPath)
+    val zm = Tables.parquet(spark, zonemapPath)
     val total = zm.count()
     val touched = zm.filter(col(s"${c}_max") >= lo && col(s"${c}_min") <= hi).count()
     (touched, total)

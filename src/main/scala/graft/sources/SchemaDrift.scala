@@ -51,7 +51,7 @@ object SchemaDrift {
   def readEvolved(s: SparkSession, epochs: Seq[(String, Long)],
       schema: StructType = target): DataFrame =
     epochs.map { case (path, epoch) =>
-      val df = s.read.parquet(path)
+      val df = Tables.parquet(s, path)
       val present = df.columns.toSet
       df.select(schema.fields.toSeq.map { f =>
         if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)

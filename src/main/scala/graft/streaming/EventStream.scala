@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.Tables
 import graft.operators.CommitMarker
 
 /** Structured Streaming forms of the events aggregations (SURVEY §2.2
@@ -30,7 +31,7 @@ object EventStream {
     val path = s"$dir/events.parquet"
     // one-time batch footer read decides the physical ts encoding; the
     // streaming schema must match the file exactly, so reuse it verbatim
-    val tsType = spark.read.parquet(path).schema("ts").dataType
+    val tsType = Tables.parquet(spark, path).schema("ts").dataType
     val schema = StructType(
       StructType.fromDDL(
         "event_id LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
@@ -489,7 +490,7 @@ object EventStream {
     * `path` (pure function of the staging dir — replay-idempotent). */
   private[graft] def rebuildDictionary(s: org.apache.spark.sql.SparkSession,
       staging: String, path: String): Unit =
-    s.read.parquet(staging)
+    Tables.parquet(s, staging)
       // batch=N shows up as a partition column — not part of the table
       .select(col("word"), col("cnt"))
       .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
@@ -500,7 +501,7 @@ object EventStream {
     */
   private[graft] def rebuildHistogram(s: org.apache.spark.sql.SparkSession,
       staging: String, path: String): Unit = {
-    val merged = s.read.parquet(staging)
+    val merged = Tables.parquet(s, staging)
       // batch=N shows up as a partition column — not part of the table
       .select(col("event_date"), col("event_type"), col("bucket"), col("cnt"))
       .groupBy(col("event_date"), col("event_type"), col("bucket"))
@@ -547,7 +548,7 @@ object EventStream {
       // the marker alone.
       graft.operators.ArtifactCache.deleteRecursively(tmp)
       val keepName = s"batch=${dirs.map(_.getName.stripPrefix("batch=").toLong).max}"
-      s.read.parquet(dirs.map(_.getPath): _*)
+      Tables.parquet(s, dirs.map(_.getPath): _*)
         .write.mode("overwrite").parquet(tmp.getPath)
       // the marker records the keep target AND the exact set merged into
       // the temp dir: phase B may strip only THESE. Batch dirs staged
@@ -641,7 +642,7 @@ object EventStream {
             if (Option(existing.listFiles()).exists(_.nonEmpty))
               // batch=N dirs surface as a partition column — project
               // it away so the union with batch shingles lines up
-              s.read.parquet(idxDir).select(col("doc_id"), col("sh"))
+              Tables.parquet(s, idxDir).select(col("doc_id"), col("sh"))
             else batchSh.limit(0)
           graft.operators.Dedup.batchDedupDecisions(
               batch.select(col("doc_id")), batchSh, indexSh, threshold, maxDf)
@@ -713,7 +714,7 @@ object EventStream {
           val indexSh =
             if (graft.operators.ArtifactCache.hasVisibleParquet(
                 new java.io.File(idxDir)))
-              s.read.parquet(idxDir).select(col("doc_id"), col("sh"))
+              Tables.parquet(s, idxDir).select(col("doc_id"), col("sh"))
             else batchSh.limit(0)
           graft.operators.Dedup.batchDedupPairs(
               batch.select(col("doc_id")), batchSh, indexSh, threshold, maxDf)
@@ -729,14 +730,14 @@ object EventStream {
           val pairsAll =
             if (graft.operators.ArtifactCache.hasVisibleParquet(
                 new java.io.File(pairDir)))
-              s.read.parquet(pairDir).select(col("doc_a"), col("doc_b"))
+              Tables.parquet(s, pairDir).select(col("doc_a"), col("doc_b"))
             else {
               import s.implicits._
               Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
             }
           val seed = (0L until batchId).reverse
             .find(g => new java.io.File(s"$grpDir/gen=$g/_SUCCESS").exists())
-            .map(g => s.read.parquet(s"$grpDir/gen=$g"))
+            .map(g => Tables.parquet(s, s"$grpDir/gen=$g"))
           val labels = seed match {
             case Some(sd) => graft.operators.Dedup.connectedComponentsWarm(pairsAll, sd)
             case None => graft.operators.Dedup.connectedComponents(pairsAll)
@@ -792,7 +793,7 @@ object EventStream {
     def build(root: String, ids: Seq[Int]): Unit = if (ids.size > 1) {
       val tmp = s"$root/.consol-tmp"
       graft.operators.ArtifactCache.deleteRecursively(new java.io.File(tmp))
-      s.read.parquet(root).drop("batch")
+      Tables.parquet(s, root).drop("batch")
         .write.mode("overwrite").parquet(tmp)
     }
     build(s"$outPath/index", idxIds)

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, udf}
 
-import graft.operators.DriverCutover
+import graft.operators.{Dedup, DriverCutover}
 
 /** Both branches of every driver cutover: each site's oracled query runs
   * once with [[DriverCutover.MaxRowsKey]] unset (every sf0.001 input sits
@@ -42,6 +43,30 @@ class DriverCutoverSpec extends SparkSpec {
         s"0: driver $distSideDriver, distributed $distRuns")
       assert(driver == dist, s"first difference: ${driver.diff(dist).take(3)} vs " +
         s"${dist.diff(driver).take(3)}")
+    }
+  }
+
+  test("connected components re-enters its driver labels as one partition: the " +
+    "group tails plan no Exchange and return the distributed branch's rows") {
+    val site = "Dedup.connectedComponents"
+    Seq[(String, () => DataFrame)](
+      "minhashDupGroups" -> (() => Dedup.minhashDupGroups(spark, sf)),
+      "ngramDupGroups" -> (() => Dedup.ngramDupGroups(spark, sf))).foreach { case (name, q) =>
+      // the cutover's collect runs while the frame is built, so each
+      // branch builds and runs its frame under its own conf
+      def run(): (Seq[String], String) = {
+        val df = q()
+        val rows = df.collect().map(_.toString).toSeq
+        (rows, df.queryExecution.executedPlan.toString)
+      }
+      val d0 = DriverCutover.driverRuns(site)
+      val (driver, driverPlan) = run()
+      assert(DriverCutover.driverRuns(site) > d0, s"$name: the driver branch did not run")
+      val (dist, distPlan) = withConf(DriverCutover.MaxRowsKey -> "0")(run())
+      assert(driver.nonEmpty && driver == dist, s"$name: ${driver.diff(dist).take(3)} vs " +
+        s"${dist.diff(driver).take(3)}")
+      assert(!driverPlan.contains("Exchange"), s"$name driver tail:\n$driverPlan")
+      assert(distPlan.contains("Exchange"), s"$name distributed tail:\n$distPlan")
     }
   }
 

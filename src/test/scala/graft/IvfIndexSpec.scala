@@ -180,4 +180,70 @@ class IvfIndexSpec extends SparkSpec {
     }
     assert(Similarity.rankProbes(Seq(1.0, 0.0), 1.0, cells, 5) == Seq(3L, 4L, 5L, 1L, 2L))
   }
+  /** Writes `rows` as `<dir>/embeddings.parquet` and runs `body(dir)`. */
+  private def withEmbeddings[T](rows: Seq[(Long, Seq[Float])])(body: String => T): T = {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft-ivfzero").toFile
+    try {
+      rows.map { case (id, v) => (id, v, (id % 3).toInt) }.toDF("vec_id", "embedding", "label")
+        .write.parquet(s"${d.getPath}/embeddings.parquet")
+      body(d.getPath)
+    } finally operators.ArtifactCache.deleteRecursively(d)
+  }
+
+  /** (vec_id, pmod(xxhash64(vec_id), m)) for vec_id 0..399: the seed
+    * test of [[Similarity.cellSeeds]] at stride m. */
+  private def seedResidues(m: Long): Seq[(Long, Long)] =
+    spark.range(0, 400).select(col("id"), pmod(xxhash64(col("id")), lit(m))).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  test("a zero-norm centroid: driver probes equal probeCellsRanked's for nprobe 1..5") {
+    // 25 rows seed 5 cells at the ids where pmod(xxhash64(vec_id), 5)
+    // = 0. The lowest seed id holds the all-zero vector: a zero-norm
+    // query, and, with no Lloyd step (which would drop its empty cell),
+    // a zero-norm centroid
+    val ids = seedResidues(5)
+    val seeds = ids.filter(_._2 == 0).map(_._1).take(5)
+    val rnd = new scala.util.Random(7)
+    val rows = (seeds ++ ids.filter(_._2 != 0).map(_._1).take(20)).sorted.map { id =>
+      id -> (if (id == seeds.min) Seq.fill(8)(0.0f) else Seq.fill(8)(rnd.nextFloat() - 0.5f))
+    }
+    withEmbeddings(rows) { dir =>
+      val (_, cells) = Similarity.ivfParts(spark, dir, kmeansIters = 0)
+      assert(cells.ids.size == 5 && cells.nrms.contains(0.0), s"cells ${cells.nrms}")
+      // every row queries, the zero vector among them
+      val q = Similarity.emb(spark, dir)
+        .select(col("vec_id").as("query_id"), col("emb").as("q_emb"), col("nrm").as("q_nrm"))
+      val queries = q.collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
+      assert(queries.exists(_._3 == 0.0), "no zero-norm query")
+      (1 to 5).foreach { np =>
+        val ranked = Similarity.probeCellsRanked(q, cells, np)
+          .select(col("query_id"), col("cent_id"), col("p_rnk")).collect()
+          .groupBy(_.getLong(0)).map { case (k, rs) =>
+            k -> rs.sortBy(_.getInt(2)).map(_.getLong(1)).toSeq }
+        queries.foreach { case (id, qe, qn) =>
+          val driver = Similarity.rankProbes(qe, qn, cells, np)
+          assert(ranked(id) == driver, s"query $id nprobe=$np: driver=$driver spark=${ranked(id)}")
+        }
+      }
+    }
+  }
+
+  test("knnIvf answers when its Lloyd step trains a zero-norm centroid") {
+    // one cell (maxCells 1, one row at the seed residue) over five
+    // (v, -v) pairs: the Lloyd mean of the cell is exactly zero, while
+    // every corpus vector and query has a non-zero norm
+    val ids = seedResidues(10)
+    val seed = ids.find(_._2 == 0).get._1
+    val rnd = new scala.util.Random(11)
+    val vs = Seq.fill(5)(Seq.fill(8)(rnd.nextFloat() - 0.5f))
+    val rows = (seed +: ids.filter(_._2 != 0).map(_._1).take(9))
+      .zip(vs.flatMap(v => Seq(v, v.map(-_))))
+    withEmbeddings(rows) { dir =>
+      val (_, cells) = Similarity.ivfParts(spark, dir, maxCells = 1)
+      assert(cells.nrms == Seq(0.0), s"cells ${cells.nrms}")
+      val knn = Similarity.knnIvf(spark, dir, maxCells = 1).collect()
+      assert(knn.nonEmpty)
+    }
+  }
 }
