@@ -180,6 +180,7 @@ class IvfIndexSpec extends SparkSpec {
     }
     assert(Similarity.rankProbes(Seq(1.0, 0.0), 1.0, cells, 5) == Seq(3L, 4L, 5L, 1L, 2L))
   }
+
   /** Writes `rows` as `<dir>/embeddings.parquet` and runs `body(dir)`. */
   private def withEmbeddings[T](rows: Seq[(Long, Seq[Float])])(body: String => T): T = {
     import spark.implicits._
